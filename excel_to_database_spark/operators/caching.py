@@ -21,6 +21,7 @@ The list is lock-guarded for concurrent query threads.
 
 from __future__ import annotations
 
+import contextlib
 import threading
 
 from pyspark.sql import DataFrame
@@ -38,6 +39,39 @@ def pin(df: DataFrame) -> DataFrame:
     with _LOCK:
         _ACTIVE.append(out)
     return out
+
+
+def unpin(df: DataFrame) -> None:
+    """Deregister and unpersist one frame :func:`pin` returned."""
+    with _LOCK:
+        _ACTIVE[:] = [d for d in _ACTIVE if d is not df]
+    df.unpersist()
+
+
+@contextlib.contextmanager
+def pinned(df: DataFrame, keep: bool = False):
+    """Pin ``df`` for a multi-pass construction (a descent re-collects
+    against it every level; without a persist each pass re-executes
+    the upstream projection over the full input — round-12: q183
+    re-ran its corpus tokenization ~6×). Yields the pinned frame. A
+    frame the caller already cached is yielded as-is and never
+    released here. Any error releases the pin, so a failed
+    construction leaves no registered pin behind; on success it is
+    released too, unless ``keep`` — a lazily returned result still
+    reads the pinned blocks, and the session-level evict sweep owns
+    the pin from then on."""
+    lvl = df.storageLevel
+    if lvl.useMemory or lvl.useDisk:
+        yield df
+        return
+    out = pin(df)
+    kept = False
+    try:
+        yield out
+        kept = keep
+    finally:
+        if not kept:
+            unpin(out)
 
 
 def evict_caches() -> int:

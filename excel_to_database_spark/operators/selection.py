@@ -1,162 +1,119 @@
 """Exact distributed selection (order statistics) WITHOUT a global
 sort: histogram descent.
 
-``top_k_cutoff`` finds the exact (score, id) cutoff of the global
-top-k under ``ORDER BY score DESC, id ASC`` using only bounded
-aggregations — the selection primitive behind "keep the best
-f·N documents corpus-wide" quality budgets. A global sort of 100 TB
-to read one cutoff row is the canonical scalability mistake; the
-histogram descent replaces it with ≤4 map-side-combinable
-aggregations whose results are ≤4096 rows each:
+One engine, :func:`_grouped_descend`, answers every order-statistic
+question in this module: the k-th value of ``col`` under ``ORDER BY
+col DESC`` (or ASC), for several ranks of several GROUPS at once.
+Single-value callers (``top_k_cutoff``, ``kth_value``,
+``skew_report``) pass one constant group. A descent replaces a global
+sort of 100 TB — the canonical scalability mistake for reading one
+cutoff row — with ≤⌈log₄₀₉₆(range)⌉ map-side-combinable aggregations:
 
-  level 0: bucket scores into ≤4096 equal-width integer ranges, count
-           per bucket (one aggregation), walk the prefix on the driver
-           (≤4096-row meta read), keep the bucket containing the k-th
-           row and the residual k' inside it;
-  level n: re-bucket only the surviving score range (rows shrink every
-           level) until the bucket width is 1 — the exact threshold
-           score — then descend the same way over ``id`` INSIDE the
-           threshold score's tie group to resolve the tie-break id.
+  bounds:  ONE aggregation (:func:`_group_bounds`) reads each group's
+           exact (min, max) and row count, and rejects an empty
+           frame, a NULL group or a NULL value loudly;
+  level 0: bucket each group's range into ≤4096 equal-width integer
+           ranges, count per (group, bucket) in one aggregation, walk
+           the prefix on the driver, keep the bucket containing each
+           k-th row and the residual k' inside it;
+  level n: re-bucket only the surviving ranges (rows shrink every
+           level) until the bucket width is 1 — the exact value.
 
-Each level's aggregation is a hash aggregate with map-side combine
-(bucket cardinality ≤4096 ⇒ tiny shuffle), and the number of levels is
-⌈log₄₀₉₆(range)⌉ ≤ 6 for any bigint range — data-independent. The
-driver reads only histogram rows (bounded meta reads, the repo-wide
-``.collect()`` policy), never data rows.
+``top_k_cutoff`` then descends the same way over ``id`` INSIDE the
+threshold score's tie group to resolve the tie-break id.
 
-Scores and ids must be integral (bigint-castable) and NON-NULL — an
-empty frame or a NULL score is rejected loudly rather than silently
-mis-ranked — which also makes every decision integer-exact and
-engine-portable (the oracle-exactness discipline: no percentile
-interpolation semantics to reconcile).
+The number of levels is ⌈log₄₀₉₆(range)⌉ ≤ 6 for any bigint range —
+data-independent — and each level's histogram is bounded before it is
+collected (``_MAX_HIST_ROWS``). The driver reads only bounds and
+histogram rows (bounded meta reads, the repo-wide ``.collect()``
+policy), never data rows.
+
+Values must be integral (bigint-castable) and NON-NULL, which makes
+every decision integer-exact and engine-portable (the
+oracle-exactness discipline: no percentile interpolation semantics to
+reconcile).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.caching import pinned
+
 _FANOUT = 4096
 
+#: rows a per-group meta read (descent bounds, rank-build cells) may
+#: bring to the driver before it is rejected
+_MAX_META_ROWS = 1 << 20
 
-def _pinned(df: DataFrame):
-    """Pin ``df`` for the duration of a multi-pass descent and return
-    ``(frame, release)`` — every descent level re-collects against the
-    frame, and without a persist each level re-executes the upstream
-    scoring projection or aggregation over the full input (round-12
-    self-review: q183 re-ran its corpus tokenization ~6×). A frame the
-    caller already cached is used as-is with a no-op release."""
-    lvl = df.storageLevel
-    if lvl.useMemory or lvl.useDisk:
-        return df, (lambda: None)
-    from excel_to_database_spark.operators.caching import pin
-
-    out = pin(df)
-    return out, (lambda: out.unpersist())
+#: histogram rows one descent level may bring to the driver: a level
+#: over |cells| (group, range) cells returns ≤ |cells|·_FANOUT rows and
+#: is rejected before its collect when that exceeds this bound
+_MAX_HIST_ROWS = 10**7
 
 
-def _collect_bounds(df: DataFrame, col: str) -> tuple[int, int]:
-    """min/max of ``col`` with loud degenerate-input rejection
-    (round-12 advisor finding: an empty or all-NULL frame crashed with
-    an opaque int(None) TypeError, and NULLs were silently dropped by
-    the range filter)."""
-    c = F.col(col).cast("bigint")
-    bounds = df.agg(
-        F.min(c).alias("lo"),
-        F.max(c).alias("hi"),
-        F.count(F.lit(1)).alias("n_all"),
-        F.count(c).alias("n_val"),
-    ).collect()[0]
-    if not bounds["n_all"]:
-        raise ValueError(f"cannot take an order statistic of an empty frame ({col!r})")
-    if bounds["n_val"] != bounds["n_all"]:
+def _check_groups(rows, group_col: str) -> None:
+    """Reject a meta read that hit ``_MAX_META_ROWS`` or carries a NULL
+    group (a NULL never equi-joins back to its per-group row, which
+    would silently drop the group)."""
+    if len(rows) > _MAX_META_ROWS:
         raise ValueError(
-            f"{col!r} has {int(bounds['n_all']) - int(bounds['n_val'])} NULL "
-            "value(s) — order statistics over NULLs are undefined here; "
-            "filter or coalesce them first"
+            f"meta read exceeds _MAX_META_ROWS={_MAX_META_ROWS}: "
+            f"{group_col!r} is too high-cardinality for the "
+            "driver-literal construction"
         )
-    return int(bounds["lo"]), int(bounds["hi"])
+    if any(r[group_col] is None for r in rows):
+        raise ValueError(
+            f"{group_col!r} has NULL value(s) — per-group results over "
+            "a NULL group are undefined here; filter or coalesce first"
+        )
 
 
-def _descend_multi(
-    df: DataFrame,
-    col: str,
-    ks: "list[int]",
-    descending: bool,
-    bounds: "tuple[int, int] | None" = None,
-) -> "dict[int, tuple[int, int]]":
-    """Histogram descent for SEVERAL ranks of the same frame/column at
-    once: returns ``{k: (value, residual)}`` where ``value`` is the
-    k-th row's value under ``ORDER BY col DESC`` (or ASC) and
-    ``residual`` is how many of the k rows lie at that value (the
-    tie-group residual). Ranks that survive into the SAME bucket keep
-    sharing one ≤4096-row histogram aggregation per level (round-16:
-    skew_report's p50/p99 descents each re-ran their own bounds
-    aggregate + per-level histograms over the identical size frame —
-    fixed driver-bound jobs, guide §1.2/§5); ranks that diverge into
-    different buckets continue as separate groups, each over its own
-    shrinking re-filtered range. ``bounds`` lets a caller that already
-    aggregated min/max (e.g. alongside other meta) skip the bounds
-    job; it must be the exact (min, max) of ``col``.
+def _reject_degenerate(value_col: str, n_all: int, n_val: int) -> None:
+    """The one NULL contract of the order statistics: an empty frame or
+    a NULL value fails loudly (round-12 advisor finding: an empty frame
+    crashed with an opaque int(None) TypeError, and NULLs were silently
+    dropped by the range filter)."""
+    if not n_all:
+        raise ValueError(
+            f"cannot take an order statistic of an empty frame ({value_col!r})"
+        )
+    if n_val != n_all:
+        raise ValueError(
+            f"{value_col!r} has {n_all - n_val} NULL value(s) — order "
+            "statistics over NULLs are undefined here; filter or coalesce "
+            "them first"
+        )
 
-    Buckets are 2^s wide and indexed by ARITHMETIC SHIFT, never by
-    subtraction or double division (round-12 self-review): a
-    ``(c - lo) / width`` double cast misbuckets above 2^53 and the raw
-    ``c - lo`` overflows bigint when min/max straddle most of the
-    int64 range; ``(c >> s) - (lo >> s)`` is exact floor division for
-    any bigint (Java >> is sign-preserving, matching Python), and the
-    difference is ≤4095 by construction."""
-    c = F.col(col).cast("bigint")
-    if bounds is None:
-        lo0, hi0 = _collect_bounds(df, col)
-    else:
-        lo0, hi0 = int(bounds[0]), int(bounds[1])
-    out: dict[int, tuple[int, int]] = {}
-    # each group: (lo, hi, members) with members = [(orig_k, k_left)]
-    groups = [(lo0, hi0, [(k, k) for k in set(ks)])]
-    while groups:
-        nxt = []
-        for lo, hi, members in groups:
-            span = hi - lo + 1  # Python int: cannot overflow
-            s = max(0, span.bit_length() - 12)  # 2^12 = 4096 buckets
-            while ((hi >> s) - (lo >> s)) > _FANOUT - 1:
-                s += 1  # alignment can spill one extra bucket
-            base = lo >> s
-            bcol = (F.shiftright(c, s) if s else c) - F.lit(base)
-            hist = {
-                int(r["b"]): int(r["n"])
-                for r in (
-                    df.filter((c >= lo) & (c <= hi))
-                    .groupBy(bcol.alias("b"))
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-            }
-            order = sorted(hist, reverse=descending)
-            prefix = []  # (bucket, rows-before-bucket)
-            cum = 0
-            for b in order:
-                prefix.append((b, cum))
-                cum += hist[b]
-            by_bucket: dict[int, list[tuple[int, int]]] = {}
-            for orig, k in members:
-                for b, before in prefix:
-                    if before + hist[b] >= k:
-                        by_bucket.setdefault(b, []).append((orig, k - before))
-                        break
-                else:  # k exceeds the row count: cutoff is the last value
-                    b = order[-1]
-                    by_bucket.setdefault(b, []).append((orig, hist[b]))
-            for b, mem in by_bucket.items():
-                nlo = max(lo, (base + b) << s)
-                nhi = min(hi, ((base + b + 1) << s) - 1)
-                if s == 0:
-                    for orig, k in mem:
-                        out[orig] = (nlo, k)
-                else:
-                    nxt.append((nlo, nhi, mem))
-        groups = nxt
-    return out
+
+def _group_bounds(df: DataFrame, group_col: str, value_col: str):
+    """ONE bounds+count aggregation: returns ``(bounds, totals)`` where
+    ``bounds`` maps each group to the exact (min, max) of ``value_col``
+    the descent starts from and ``totals`` to its row count (what the
+    callers' target ranks are computed from). ≤|groups| driver rows; the
+    limit bounds what the driver materializes before the cardinality
+    guard fires. Rejects an empty frame, NULL groups and NULL values."""
+    c = F.col(value_col).cast("bigint")
+    meta = (
+        df.groupBy(group_col)
+        .agg(
+            F.min(c).alias("__lo"),
+            F.max(c).alias("__hi"),
+            F.count(F.lit(1)).alias("__n"),
+            F.count(c).alias("__nv"),
+        )
+        .limit(_MAX_META_ROWS + 1)
+        .collect()
+    )
+    _check_groups(meta, group_col)
+    _reject_degenerate(
+        value_col, sum(r["__n"] for r in meta), sum(r["__nv"] for r in meta)
+    )
+    bounds = {r[group_col]: (int(r["__lo"]), int(r["__hi"])) for r in meta}
+    totals = {r[group_col]: int(r["__n"]) for r in meta}
+    return bounds, totals
 
 
 def _grouped_descend(
@@ -167,40 +124,49 @@ def _grouped_descend(
     bounds: "dict[object, tuple[int, int]]",
     descending: bool = False,
 ) -> "dict[tuple[object, object], tuple[int, int]]":
-    """Histogram descent for several ranks of several GROUPS at once —
-    the per-group generalization of :func:`_descend_multi` (round-17,
-    guide §2.4: it computes per-group order-statistic VALUES with ZERO
-    data shuffles, where the group_rank build pays a full range
-    exchange + checkpoint of the data to answer the same question).
+    """Histogram descent for several ranks of several groups at once.
 
     ``targets`` maps each group value to ``[(tag, k)]`` rank requests;
     ``bounds`` maps each group to its exact (min, max) of ``value_col``
-    (ride them on the caller's count aggregation — no bounds job here).
-    Returns ``{(group, tag): (value, residual)}`` with the same
-    per-rank contract as :func:`_descend_multi`.
+    (from :func:`_group_bounds`, or derived on the driver). Returns
+    ``{(group, tag): (value, residual)}``: ``value`` is the k-th row's
+    value of the group under ``ORDER BY value_col DESC`` (or ASC) and
+    ``residual`` is how many of the k rows lie at that value (the
+    tie-group residual). A k beyond the group's row count resolves to
+    its last value.
 
     Every level is ONE map-side-combinable aggregation shared by all
-    still-active (group, range) cells: a ≤|cells|-row parameter frame
-    (cell id, range, shift, base) broadcast-joins onto the data, rows
-    outside every cell's range are filtered before the aggregate, and
-    the histogram comes back keyed by (cell, bucket) — ≤4096·|cells|
-    rows. Ranges of cells sharing a group are DISJOINT buckets of the
-    parent level, so the broadcast-join fan-out is pruned right back
-    by the range filter. ``df`` should be pinned by the caller: the
-    descent makes ≤⌈log₄₀₉₆(range)⌉ passes over it."""
+    still-active (group, range) cells (round-17, guide §2.4: zero data
+    shuffles): a ≤|cells|-row parameter frame (cell id, range, shift,
+    base) broadcast-joins onto the data, rows outside every cell's
+    range are filtered before the aggregate, and the histogram comes
+    back keyed by (cell, bucket) — ≤4096·|cells| rows, checked against
+    ``_MAX_HIST_ROWS`` before the collect. Ranks of a group that
+    survive into the SAME bucket keep sharing one cell; ranks that
+    diverge continue as separate cells over disjoint ranges, so the
+    broadcast-join fan-out is pruned right back by the range filter.
+    The parameter frame goes through the session's Arrow path (a
+    LocalRelation): a list-of-tuples frame is a Python RDD, which
+    costs a Python worker round trip per level. Even a LocalRelation
+    broadcast is one extra Spark job per level, so a level with ONE
+    cell — every level of a single-rank, single-group caller — filters
+    on its group and carries its parameters as literals instead (same
+    aggregation, no join). ``df`` should be pinned by the caller: the
+    descent makes ≤⌈log₄₀₉₆(range)⌉ passes over it.
+
+    Buckets are 2^s wide and indexed by ARITHMETIC SHIFT, never by
+    subtraction or double division (round-12 self-review): a
+    ``(c - lo) / width`` double cast misbuckets above 2^53 and the raw
+    ``c - lo`` overflows bigint when min/max straddle most of the
+    int64 range; ``(c >> s) - (lo >> s)`` is exact floor division for
+    any bigint (Java >> is sign-preserving, matching Python), and the
+    difference is ≤4095 by construction."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    gfield = df.schema[group_col]
     c = F.col(value_col).cast("bigint")
-    out: dict = {}
-    # cells: (group, lo, hi, members) with members = [(tag, k_left)]
-    cells = [
-        (g, bounds[g][0], bounds[g][1], [(tag, k) for tag, k in targets[g]])
-        for g in targets
-    ]
     pschema = StructType(
         [
-            StructField(group_col, gfield.dataType),
+            StructField(group_col, df.schema[group_col].dataType),
             StructField("__cell", IntegerType()),
             StructField("__lo", LongType()),
             StructField("__hi", LongType()),
@@ -208,54 +174,64 @@ def _grouped_descend(
             StructField("__base", LongType()),
         ]
     )
+    out: dict = {}
+    # cells: (group, lo, hi, members) with members = [(tag, k_left)]
+    cells = [(g, *bounds[g], list(targets[g])) for g in targets]
     while cells:
+        if len(cells) * _FANOUT > _MAX_HIST_ROWS:
+            raise ValueError(
+                f"histogram descent level over {len(cells)} cells may "
+                f"collect {len(cells) * _FANOUT} rows, above "
+                f"_MAX_HIST_ROWS={_MAX_HIST_ROWS}: {group_col!r} is too "
+                "high-cardinality for the driver-side descent"
+            )
         prows = []
-        shifts = []
         for i, (g, lo, hi, _members) in enumerate(cells):
             span = hi - lo + 1  # Python int: cannot overflow
             s = max(0, span.bit_length() - 12)  # 2^12 = 4096 buckets
             while ((hi >> s) - (lo >> s)) > _FANOUT - 1:
                 s += 1  # alignment can spill one extra bucket
-            shifts.append(s)
             prows.append((g, i, lo, hi, s, lo >> s))
-        params = df.sparkSession.createDataFrame(prows, pschema)
-        # same shift-bucketing as _descend_multi (exact for any bigint
-        # range); shiftright takes the per-cell shift as a COLUMN here
-        bexpr = F.expr(
-            f"shiftright(CAST(`{value_col}` AS BIGINT), __s)"
-        ) - F.col("__base")
-        hist_rows = (
-            df.join(F.broadcast(params), group_col)
-            .filter((c >= F.col("__lo")) & (c <= F.col("__hi")))
-            .groupBy("__cell", bexpr.alias("__b"))
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )  # bounded: ≤ 4096·|cells| histogram rows
+        if len(prows) == 1:  # the one cell's parameters ride as literals
+            (g, _, lo, hi, s, base), = prows
+            hist_df = (
+                df.filter((F.col(group_col) == F.lit(g)) & (c >= lo) & (c <= hi))
+                .groupBy(((F.shiftright(c, s) if s else c) - F.lit(base)).alias("__b"))
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .select(F.lit(0).alias("__cell"), "__b", "__n")
+            )
+        else:
+            params = df.sparkSession.createDataFrame(
+                pd.DataFrame(prows, columns=pschema.fieldNames()), pschema
+            )
+            # shiftright takes the per-cell shift as a COLUMN here
+            bexpr = F.expr(f"shiftright(CAST(`{value_col}` AS BIGINT), __s)")
+            hist_df = (
+                df.join(F.broadcast(params), group_col)
+                .filter((c >= F.col("__lo")) & (c <= F.col("__hi")))
+                .groupBy("__cell", (bexpr - F.col("__base")).alias("__b"))
+                .agg(F.count(F.lit(1)).alias("__n"))
+            )
         hists: dict[int, dict[int, int]] = {}
-        for r in hist_rows:
+        for r in hist_df.collect():  # bounded above: ≤ 4096·|cells| rows
             hists.setdefault(int(r["__cell"]), {})[int(r["__b"])] = int(r["__n"])
         nxt = []
-        for i, (g, lo, hi, members) in enumerate(cells):
+        for (g, lo, hi, members), (_, i, _, _, s, base) in zip(cells, prows):
             hist = hists.get(i)
             if not hist:
                 raise ValueError(
                     f"empty histogram for group {g!r} range [{lo}, {hi}] — "
                     "bounds do not match the data"
                 )
-            s = shifts[i]
-            base = lo >> s
             order = sorted(hist, reverse=descending)
-            prefix = []  # (bucket, rows-before-bucket)
-            cum = 0
-            for b in order:
-                prefix.append((b, cum))
-                cum += hist[b]
             by_bucket: dict[int, list[tuple[object, int]]] = {}
             for tag, k in members:
-                for b, before in prefix:
+                before = 0  # rows ahead of bucket b in the walk order
+                for b in order:
                     if before + hist[b] >= k:
                         by_bucket.setdefault(b, []).append((tag, k - before))
                         break
+                    before += hist[b]
                 else:  # k exceeds the row count: cutoff is the last value
                     b = order[-1]
                     by_bucket.setdefault(b, []).append((tag, hist[b]))
@@ -271,12 +247,6 @@ def _grouped_descend(
     return out
 
 
-def _descend(df: DataFrame, col: str, k: int, descending: bool) -> tuple[int, int]:
-    """Single-rank form of :func:`_descend_multi` (see there for the
-    contract and the shift-bucketing rationale)."""
-    return _descend_multi(df, col, [k], descending)[k]
-
-
 def top_k_cutoff(df: DataFrame, score_col: str, id_col: str, k: int) -> dict:
     """Exact cutoff of the global top-``k`` rows of ``df`` under
     ``ORDER BY score DESC, id ASC``, as
@@ -286,15 +256,17 @@ def top_k_cutoff(df: DataFrame, score_col: str, id_col: str, k: int) -> dict:
     the module docstring for the descent contract."""
     if k <= 0:
         raise ValueError(f"need k > 0, got {k}")
-    df, release = _pinned(df)
-    try:
-        s_star, resid = _descend(df, score_col, k, descending=True)
-        n_above = k - resid
-        ties = df.filter(F.col(score_col) == s_star)
-        i_star, _ = _descend(ties, id_col, resid, descending=False)
-        return {"score": s_star, "id": i_star, "n_above": n_above}
-    finally:
-        release()
+    with pinned(df) as df:
+        one = df.withColumn("__g", F.lit(0))  # the one constant group
+        bounds, _ = _group_bounds(one, "__g", score_col)
+        s_star, resid = _grouped_descend(
+            one, "__g", score_col, {0: [(0, k)]}, bounds, descending=True
+        )[(0, 0)]
+        ties = one.filter(F.col(score_col) == s_star)
+        bounds, _ = _group_bounds(ties, "__g", id_col)
+        res = _grouped_descend(ties, "__g", id_col, {0: [(0, resid)]}, bounds)
+        i_star = res[(0, 0)][0]
+    return {"score": s_star, "id": i_star, "n_above": k - resid}
 
 
 def keep_budget_report(
@@ -323,24 +295,20 @@ def keep_budget_report(
 
     f = Fraction(keep_frac)
     # pin once across count + cutoff descents + the final report scan
-    # (the report is lazy: the pin is released by the session-level
-    # evict sweep, the registry's normal lifetime)
-    from excel_to_database_spark.operators.caching import pin
-
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        df = pin(df)
-    n = df.count()
-    k = -(-(n * f.numerator) // f.denominator)  # ceil(n·f), exact
-    cut = top_k_cutoff(df, score_col, id_col, int(k))
-    s, c = F.col(score_col), F.col(id_col)
-    kept = (s > cut["score"]) | ((s == cut["score"]) & (c <= cut["id"]))
-    return df.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.sum(kept.cast("bigint")).alias("n_kept"),
-        F.lit(cut["score"]).cast("bigint").alias("threshold_score"),
-        F.lit(cut["id"]).cast("bigint").alias("threshold_id"),
-    )
+    # (the report is lazy: on success the pin is kept for the
+    # session-level evict sweep, the registry's normal lifetime)
+    with pinned(df, keep=True) as df:
+        n = df.count()
+        k = -(-(n * f.numerator) // f.denominator)  # ceil(n·f), exact
+        cut = top_k_cutoff(df, score_col, id_col, int(k))
+        s, c = F.col(score_col), F.col(id_col)
+        kept = (s > cut["score"]) | ((s == cut["score"]) & (c <= cut["id"]))
+        return df.groupBy(group_col).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum(kept.cast("bigint")).alias("n_kept"),
+            F.lit(cut["score"]).cast("bigint").alias("threshold_score"),
+            F.lit(cut["id"]).cast("bigint").alias("threshold_id"),
+        )
 
 
 def kth_value(df: DataFrame, col: str, k: int, descending: bool = True) -> int:
@@ -350,11 +318,11 @@ def kth_value(df: DataFrame, col: str, k: int, descending: bool = True) -> int:
     distribution reports (max/p50/p99 of group sizes) at any scale."""
     if k <= 0:
         raise ValueError(f"need k > 0, got {k}")
-    df, release = _pinned(df)
-    try:
-        return _descend(df, col, k, descending)[0]
-    finally:
-        release()
+    with pinned(df) as df:
+        one = df.withColumn("__g", F.lit(0))  # the one constant group
+        bounds, _ = _group_bounds(one, "__g", col)
+        res = _grouped_descend(one, "__g", col, {0: [(0, k)]}, bounds, descending)
+        return res[(0, 0)][0]
 
 
 def skew_report(df: DataFrame, key_col: str, label: str) -> DataFrame:
@@ -365,47 +333,42 @@ def skew_report(df: DataFrame, key_col: str, label: str) -> DataFrame:
 
     This is the "will this key melt a reducer at 100 TB" check run
     before committing to a partitioning: one map-side-combinable
-    size aggregation + ≤3 descents over the |keys|-row size frame
+    size aggregation + ≤3 descent levels over the |keys|-row size frame
     (bounded meta reads only), no sort, no percentile-interpolation
     semantics to reconcile across engines — every output is a bigint
     actually present in the data."""
-    sizes, release = _pinned(
+    with pinned(
         df.groupBy(key_col).agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    meta = sizes.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_keys"),
-        F.sum("cnt").cast("bigint").alias("n_rows"),
-        F.max("cnt").cast("bigint").alias("max_size"),
-        # min rides the same meta read so the descent needs no bounds
-        # job of its own (round-16 fixed-job fold)
-        F.min("cnt").cast("bigint").alias("min_size"),
-    ).collect()[0]  # 1-row meta read
-    n_keys = int(meta["n_keys"])
-    if n_keys == 0:
-        raise ValueError("cannot take an order statistic of an empty frame ('cnt')")
-    k50 = (n_keys + 1) // 2
-    k99 = (n_keys + 99) // 100
-    # ONE shared descent for both percentiles (plus the pre-read
-    # bounds): 2 driver-bound jobs per report instead of 5
-    res = _descend_multi(
-        sizes,
-        "cnt",
-        [k50, k99],
-        descending=True,
-        bounds=(int(meta["min_size"]), int(meta["max_size"])),
-    )
-    p50, p99 = res[k50][0], res[k99][0]
-    release()
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    ) as sizes:
+        meta = sizes.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_keys"),
+            F.sum("cnt").cast("bigint").alias("n_rows"),
+            F.max("cnt").cast("bigint").alias("max_size"),
+            # min rides the same meta read so the descent needs no
+            # bounds job of its own (round-16 fixed-job fold)
+            F.min("cnt").cast("bigint").alias("min_size"),
+        ).collect()[0]  # 1-row meta read
+        n_keys = int(meta["n_keys"])
+        _reject_degenerate("cnt", n_keys, n_keys)
+        # ONE shared descent for both percentiles (plus the pre-read
+        # bounds): 2 driver-bound jobs per report instead of 5
+        res = _grouped_descend(
+            sizes.withColumn("__g", F.lit(0)),
+            "__g",
+            "cnt",
+            {0: [(50, (n_keys + 1) // 2), (99, (n_keys + 99) // 100)]},
+            {0: (int(meta["min_size"]), int(meta["max_size"]))},
+            descending=True,
+        )
+    return df.sparkSession.createDataFrame(
         [
             (
                 label,
                 int(meta["n_rows"]),
                 n_keys,
                 int(meta["max_size"]),
-                int(p50),
-                int(p99),
+                int(res[(0, 50)][0]),
+                int(res[(0, 99)][0]),
             )
         ],
         "key_name string, n_rows long, n_keys long, max_size long,"
@@ -540,10 +503,10 @@ def _group_rank_build(
     value_col: str,
     id_col: str,
     out_col: str,
-    max_meta_rows: int = 1 << 20,
     value_desc: bool = False,
     weight_col: "str | None" = None,
     cum_col: "str | None" = None,
+    reject_null_values: bool = False,
 ):
     """Shared construction behind :func:`group_rank` and its
     consumers: EXACT within-group ranks 1..n_g by ``(value, id)``
@@ -565,7 +528,7 @@ def _group_rank_build(
          the job rather than silently re-drawing boundaries, and
          blocks free on GC, not evict_caches);
       3. ONE count aggregation to the ≤(P+G)-row cell table, read on
-         the driver (counts, never data rows; ``max_meta_rows``
+         the driver (counts, never data rows; ``_MAX_META_ROWS``
          rejects loudly if the group key is too wide for the
          driver-literal construction — use a plain per-group window
          for high-cardinality keys, it is well-balanced there);
@@ -594,7 +557,12 @@ def _group_rank_build(
     window anywhere (weighted quantiles, Lorenz/Gini reports). With
     ``weight_col`` set, ``totals`` maps each group to
     ``(n_rows, weight_sum)``; NULL weights are rejected loudly (a
-    silent sum-skip would corrupt every later prefix)."""
+    silent sum-skip would corrupt every later prefix).
+
+    NULL values are ordered (first ascending, last descending) unless
+    ``reject_null_values``, which applies the order statistics' NULL
+    contract (:func:`_reject_degenerate`) from a count riding the same
+    cells aggregation — no extra job."""
     from pyspark.sql.types import LongType, StructField, StructType
     from pyspark.sql.window import Window
 
@@ -614,11 +582,13 @@ def _group_rank_build(
         F.col(group_col), vcol, F.col(id_col)
     ).withColumn("__pid", F.spark_partition_id()).localCheckpoint(eager=False)
     # bounded: ≤ partitions + groups − 1 rows (contiguity argument).
-    # The limit(max+1) bounds what the driver MATERIALIZES before the
+    # The limit bounds what the driver MATERIALIZES before the
     # guard fires — a high-cardinality group key must reject loudly,
     # not OOM the driver inside the very collect the guard protects
     # (round-14 advisor finding)
     aggs = [F.count(F.lit(1)).alias("n")]
+    if reject_null_values:
+        aggs.append(F.count(F.col(value_col)).alias("__nv"))
     if weight_col is not None:
         aggs += [
             F.sum(F.col(weight_col).cast("bigint")).alias("__w"),
@@ -627,24 +597,18 @@ def _group_rank_build(
     cells = (
         ranged.groupBy("__pid", group_col)
         .agg(*aggs)
-        .limit(max_meta_rows + 1)
+        .limit(_MAX_META_ROWS + 1)
         .collect()
     )
-    if len(cells) > max_meta_rows:
-        raise ValueError(
-            f"group_rank meta read exceeds max_meta_rows={max_meta_rows}: "
-            f"{group_col!r} is too high-cardinality for the "
-            "driver-literal construction — a plain per-group window is "
-            "well-balanced at that cardinality"
+    # past the limit a plain per-group window is well-balanced anyway
+    _check_groups(cells, group_col)
+    if reject_null_values:
+        _reject_degenerate(
+            value_col, sum(r["n"] for r in cells), sum(r["__nv"] for r in cells)
         )
     by_group: dict = {}
     for r in cells:
         g = r[group_col]
-        if g is None:
-            raise ValueError(
-                f"{group_col!r} has NULL value(s) — group ranks over a "
-                "NULL group are undefined here; filter or coalesce first"
-            )
         if weight_col is not None:
             if int(r["__nw"]) != int(r["n"]):
                 raise ValueError(
@@ -816,7 +780,6 @@ def exact_group_quantiles(
     id_col: str,
     quantiles=(10, 50, 90),
     return_ranked: bool = False,
-    max_meta_rows: int = 1 << 20,
 ):
     """EXACT per-group percentiles as order statistics — the exact
     complement to the GK sketch (q101): quantile p is the row at rank
@@ -855,13 +818,13 @@ def exact_group_quantiles(
     the round-16 reuse, 1.0× after; the descent keeps the 1.0× — its
     levels all read the pinned blocks). The pin's lifetime follows the
     registry's normal session-level eviction."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
     from pyspark.sql.types import (
         ByteType,
         IntegerType,
         LongType,
         ShortType,
+        StructField,
+        StructType,
     )
 
     qs = list(quantiles)
@@ -878,75 +841,28 @@ def exact_group_quantiles(
         return _exact_group_quantiles_ranked(
             df, group_col, value_col, id_col, qs, return_ranked
         )
-    base, release = _pinned(df.select(group_col, value_col, id_col))
-    c = F.col(value_col).cast("bigint")
-    # ONE bounds+count aggregation: min/max feed the descent (no bounds
-    # job of its own — the round-16 skew_report discipline), n gives
-    # the exact target ranks and the totals column the output carries.
-    # The limit bounds what the driver materializes before the
-    # cardinality guard fires (the _group_rank_build discipline).
-    meta = (
-        base.groupBy(group_col)
-        .agg(
-            F.min(c).alias("__lo"),
-            F.max(c).alias("__hi"),
-            F.count(F.lit(1)).alias("__n"),
-            F.count(c).alias("__nv"),
-        )
-        .limit(max_meta_rows + 1)
-        .collect()
-    )
-    try:
-        if len(meta) > max_meta_rows:
-            raise ValueError(
-                f"exact_group_quantiles meta read exceeds "
-                f"max_meta_rows={max_meta_rows}: {group_col!r} is too "
-                "high-cardinality for the driver-literal construction"
-            )
-        bounds: dict = {}
-        totals: dict = {}
-        for r in meta:
-            g = r[group_col]
-            if g is None:
-                raise ValueError(
-                    f"{group_col!r} has NULL value(s) — group quantiles "
-                    "over a NULL group are undefined here; filter or "
-                    "coalesce first"
-                )
-            if int(r["__nv"]) != int(r["__n"]):
-                raise ValueError(
-                    f"{value_col!r} has NULL value(s) — order statistics "
-                    "over NULLs are undefined here; filter or coalesce "
-                    "them first"
-                )
-            bounds[g] = (int(r["__lo"]), int(r["__hi"]))
-            totals[g] = int(r["__n"])
+    with pinned(
+        df.select(group_col, value_col, id_col), keep=return_ranked
+    ) as base:
+        bounds, totals = _group_bounds(base, group_col, value_col)
         targets = {
             g: [(int(p), (n * p + 99) // 100) for p in qs]  # ceil(p·n/100)
             for g, n in totals.items()
         }
         res = _grouped_descend(base, group_col, value_col, targets, bounds)
-    except Exception:
-        release()
-        raise
-    gfield = df.schema[group_col]
-    vfield = df.schema[value_col]
-    cschema = StructType(
-        [
-            StructField(group_col, gfield.dataType),
-            StructField("n", LongType()),
-            *[StructField(f"p{p}", vfield.dataType) for p in qs],
+        cschema = StructType(
+            [
+                StructField(group_col, df.schema[group_col].dataType),
+                StructField("n", LongType()),
+                *[StructField(f"p{p}", df.schema[value_col].dataType) for p in qs],
+            ]
+        )
+        rows = [
+            tuple([g, totals[g]] + [res[(g, int(p))][0] for p in qs])
+            for g in sorted(totals)
         ]
-    )
-    rows = [
-        tuple([g, totals[g]] + [res[(g, int(p))][0] for p in qs])
-        for g in sorted(totals)
-    ]
-    cuts = df.sparkSession.createDataFrame(rows, cschema)
-    if return_ranked:
-        return cuts, base
-    release()
-    return cuts
+        cuts = df.sparkSession.createDataFrame(rows, cschema)
+        return (cuts, base) if return_ranked else cuts
 
 
 def _exact_group_quantiles_ranked(
@@ -961,11 +877,18 @@ def _exact_group_quantiles_ranked(
     dtypes the histogram descent cannot bucket: rank every row through
     the group_rank build (range exchange + bounded cell read), compute
     target ranks from the driver-known totals, and pick every
-    percentile row with one broadcast (group, rank) equi-join."""
+    percentile row with one broadcast (group, rank) equi-join. Same
+    NULL contract as the descent path: the cell read rejects an empty
+    frame and NULL values."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     ranked, totals = _group_rank_build(
-        df.select(group_col, value_col, id_col), group_col, value_col, id_col, "__rn"
+        df.select(group_col, value_col, id_col),
+        group_col,
+        value_col,
+        id_col,
+        "__rn",
+        reject_null_values=True,
     )
     targets = [
         (g, int(p), (n * p + 99) // 100, n)  # ceil(p·n/100), exact ints

@@ -2693,76 +2693,73 @@ def embedding_robust_stats(
     low-cardinality group, and BOTH statistics are pure per-dim VALUE
     order statistics — the lower median is the value at rank ⌈n/2⌉ by
     (value, id), and the id tiebreaker cannot change which VALUE sits
-    at a rank — so they come from ``selection._grouped_descend`` with
-    ZERO data shuffles. Rounds 15–16 ranked every exploded element
-    through two group_rank builds (two full range exchanges + two
-    localCheckpoints of the |vecs|·|dims|-row frame); now: ONE narrow
-    (dim, q) projection pinned once, one bounds+count aggregation
-    (≤|dims| driver rows), ≤⌈log₄₀₉₆(range)⌉ shared histogram levels
-    for the median, the SAME descent over the derived |q − med(dim)|
-    column for the MAD — whose bounds are driver-DERIVED, not
-    re-aggregated: min is 0 (the median is itself a data value of the
+    at a rank — so they come from ``selection._grouped_descend``, the
+    one histogram-descent engine, with ZERO data shuffles. Rounds 15–16
+    ranked every exploded element through two group_rank builds (two
+    full range exchanges + two localCheckpoints of the
+    |vecs|·|dims|-row frame); now: ONE narrow (dim, q) projection
+    pinned once, one bounds+count aggregation (``selection.
+    _group_bounds``, ≤|dims| driver rows), ≤⌈log₄₀₉₆(range)⌉ shared
+    histogram levels for the median, the SAME descent over the derived
+    |q − med(dim)| column for the MAD — whose bounds are driver-DERIVED,
+    not re-aggregated: min is 0 (the median is itself a data value of the
     dim) and max is max(hi − med, med − lo) — and one final
     aggregation with the two ≤|dims|-entry statistic maps attached as
     literals. The id column never leaves the source scan (guide §2.3:
     project before everything). Returns
     ``(dim, n, median_q, mad_q, n_outliers)``."""
-    from excel_to_database_spark.operators.caching import pin
-    from excel_to_database_spark.operators.selection import _grouped_descend
+    from excel_to_database_spark.operators.caching import pinned
+    from excel_to_database_spark.operators.selection import (
+        _group_bounds,
+        _grouped_descend,
+    )
 
-    ex = pin(
+    # the result reads ex lazily: keep the pin on success (session-level
+    # eviction owns it), release it if construction fails
+    with pinned(
         df.select(F.posexplode(vec_col).alias("dim", "x")).select(
             "dim",
             F.floor(F.col("x").cast("double") * F.lit(float(scale))).alias("q"),
+        ),
+        keep=True,
+    ) as ex:
+        # bounded: one row per dimension; materializes the pin
+        bounds, totals = _group_bounds(ex, "dim", "q")
+        med_targets = {d: [("med", (n + 1) // 2)] for d, n in totals.items()}
+        med = {
+            d: v[0]
+            for (d, _), v in _grouped_descend(
+                ex, "dim", "q", med_targets, bounds
+            ).items()
+        }
+        med_map = F.create_map(
+            *[
+                c
+                for d in med
+                for c in (F.lit(d), F.lit(med[d]).cast("bigint"))
+            ]
+        )  # values cast uniformly: lit() types int32/int64 by magnitude
+        dev = ex.select(
+            "dim", F.abs(F.col("q") - F.element_at(med_map, F.col("dim"))).alias("d")
         )
-    )
-    meta = ex.groupBy("dim").agg(
-        F.min("q").alias("__lo"),
-        F.max("q").alias("__hi"),
-        F.count(F.lit(1)).alias("__n"),
-        F.count("q").alias("__nv"),
-    ).collect()  # bounded: one row per dimension; materializes the pin
-    bounds: dict = {}
-    totals: dict = {}
-    for r in meta:
-        if int(r["__nv"]) != int(r["__n"]):
-            raise ValueError(
-                f"{vec_col!r} has NULL element(s) in dim {r['dim']} — "
-                "robust stats over NULLs are undefined here"
-            )
-        bounds[r["dim"]] = (int(r["__lo"]), int(r["__hi"]))
-        totals[r["dim"]] = int(r["__n"])
-    med_targets = {d: [("med", (n + 1) // 2)] for d, n in totals.items()}
-    med = {
-        d: v[0]
-        for (d, _), v in _grouped_descend(ex, "dim", "q", med_targets, bounds).items()
-    }
-    med_map = F.create_map(
-        *[
-            c
-            for d in med
-            for c in (F.lit(d), F.lit(med[d]).cast("bigint"))
-        ]
-    )  # values cast uniformly: lit() types int32/int64 by magnitude
-    dev = ex.select("dim", F.abs(F.col("q") - F.element_at(med_map, F.col("dim"))).alias("d"))
-    # MAD bounds are driver-derived: the median IS a data value of its
-    # dim, so min |q − med| = 0; max is at one of the q extremes
-    dev_bounds = {
-        d: (0, max(bounds[d][1] - med[d], med[d] - bounds[d][0])) for d in med
-    }
-    mad = {
-        d: v[0]
-        for (d, _), v in _grouped_descend(
-            dev, "dim", "d", med_targets, dev_bounds
-        ).items()
-    }
-    mad_map = F.create_map(
-        *[
-            c
-            for d in mad
-            for c in (F.lit(d), F.lit(mad[d]).cast("bigint"))
-        ]
-    )
+        # MAD bounds are driver-derived: the median IS a data value of
+        # its dim, so min |q − med| = 0; max is at one of the q extremes
+        dev_bounds = {
+            d: (0, max(bounds[d][1] - med[d], med[d] - bounds[d][0])) for d in med
+        }
+        mad = {
+            d: v[0]
+            for (d, _), v in _grouped_descend(
+                dev, "dim", "d", med_targets, dev_bounds
+            ).items()
+        }
+        mad_map = F.create_map(
+            *[
+                c
+                for d in mad
+                for c in (F.lit(d), F.lit(mad[d]).cast("bigint"))
+            ]
+        )
     return (
         ex.groupBy("dim")
         .agg(

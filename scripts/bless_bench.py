@@ -15,9 +15,8 @@ pick cannot happen silently): the supported mode is
 which blesses EVERY bench_runs/bench_*.json recording of the target
 code tree (default: the current HEAD's measured-code hash, the same
 one bench.py stamps) whose ``sandbox_cal`` stamp lies inside the
-pre-committed clean band CAL_BAND — the 0.33-0.50 range every prior
-round's accepted recordings sat in, with degraded-day stamps
-(0.6-0.95) outside it. At least MIN_RUNS must qualify. The artifact
+pre-committed clean band CAL_BAND (see the constant for its bounds
+and provenance). At least MIN_RUNS must qualify. The artifact
 records the full candidate set and each exclusion reason, so the
 selection is an audit trail, not an outcome choice.
 
@@ -45,11 +44,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 #: cross-run max/min spread above which a blessed row is flagged
 BAND = 1.5
 
-#: pre-committed sandbox_cal acceptance band for --auto selection:
-#: every clean-window recording rounds 14-16 accepted stamped
-#: 0.33-0.52; the degraded-day stamps that inflated totals read
-#: 0.6-0.95. A recording outside the band is excluded NO MATTER how
-#: good its total looks — that is the point.
+#: pre-committed sandbox_cal acceptance band for --auto selection —
+#: the one statement of the band. It covers every clean-window
+#: recording rounds 14-16 accepted and excludes the degraded-day stamps
+#: (0.6 and up) that inflated totals. A recording outside the band is
+#: excluded NO MATTER how good its total looks — that is the point.
 CAL_BAND = (0.30, 0.52)
 
 #: --auto refuses to bless fewer than this many qualifying recordings

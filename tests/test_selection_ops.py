@@ -214,24 +214,29 @@ def test_kth_value_matches_sort(spark):
         assert SEL.kth_value(df, "v", k, descending=True) == ordered[k - 1]
 
 
-def test_descend_multi_matches_sort_randomized(spark):
-    """Round-16: the shared multi-rank descent (skew_report's p50/p99
-    now ride one histogram pass) ≡ sort, across tie-heavy, huge-range
-    (multi-level, rank divergence into different buckets), and
-    negative regimes; also exercises the caller-supplied bounds path
-    and ascending order. Fixed seed — deterministic."""
+def test_grouped_descend_single_group_matches_sort_randomized(spark):
+    """The one descent engine called the way the single-value callers
+    call it (one constant group, several ranks sharing the levels) ≡
+    sort, across tie-heavy, 10^13-span (multi-level, rank divergence
+    into different buckets), and negative regimes, in both directions;
+    also exercises caller-supplied bounds (skew_report's meta fold).
+    Fixed seed — deterministic."""
     rng = random.Random(23)
     for trial in range(5):
         n = rng.randint(5, 300)
         lo, hi = rng.choice([(0, 4), (-1000, 1000), (0, 10**13), (-2, 2)])
         rows = [(i, rng.randint(lo, hi)) for i in range(1, n + 1)]
-        df = spark.createDataFrame(rows, "id long, v long")
+        df = spark.createDataFrame(rows, "id long, v long").withColumn("g", F.lit(0))
+        bounds, totals = SEL._group_bounds(df, "g", "v")
+        assert totals == {0: n}
+        ks = sorted({1, 2, n // 3 or 1, n // 2 or 1, n})
         for desc in (True, False):
             ordered = sorted((v for _, v in rows), reverse=desc)
-            ks = sorted({1, 2, n // 3 or 1, n // 2 or 1, n})
-            got = SEL._descend_multi(df, "v", ks, descending=desc)
+            got = SEL._grouped_descend(
+                df, "g", "v", {0: [(k, k) for k in ks]}, bounds, descending=desc
+            )
             for k in ks:
-                val, resid = got[k]
+                val, resid = got[(0, k)]
                 assert val == ordered[k - 1], (trial, desc, k)
                 # residual = how many of the first k rows share val
                 assert resid == sum(
@@ -239,11 +244,40 @@ def test_descend_multi_matches_sort_randomized(spark):
                 ), (trial, desc, k)
         # caller-supplied bounds (the skew_report fold) must agree
         vs = [v for _, v in rows]
-        got_b = SEL._descend_multi(
-            df, "v", [1, n], descending=True, bounds=(min(vs), max(vs))
+        got_b = SEL._grouped_descend(
+            df, "g", "v", {0: [(1, 1), (n, n)]}, {0: (min(vs), max(vs))},
+            descending=True,
         )
         ordered = sorted(vs, reverse=True)
-        assert got_b[1][0] == ordered[0] and got_b[n][0] == ordered[n - 1]
+        assert got_b[(0, 1)][0] == ordered[0] and got_b[(0, n)][0] == ordered[n - 1]
+
+
+def _job_count(spark, name, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "construction")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_single_group_callers_job_count_bounded(spark):
+    """The single-value callers pay no job for riding the grouped
+    engine: a one-cell level carries its parameters as literals, never
+    a broadcast parameter frame. Bounds are the counts measured before
+    the fold (the separate single-group descent): top_k_cutoff over a
+    one-level score range 9 jobs, skew_report over a one-level size
+    range 6 — AQE splits each collect into stage jobs."""
+    rows = [(i, (i * 7919) % 1000) for i in range(1, 2001)]
+    df = spark.createDataFrame(rows, "id long, score long")
+    top_k = lambda: SEL.top_k_cutoff(df, "score", "id", 700)  # noqa: E731
+    assert _job_count(spark, "topk_jobs", top_k) <= 9
+    keys = spark.createDataFrame(
+        [(f"k{i % 50}",) for i in range(2000)] + [("hot",)] * 300, "k string"
+    )
+    skew = lambda: SEL.skew_report(keys, "k", "t")  # noqa: E731
+    assert _job_count(spark, "skew_jobs", skew) <= 6
 
 
 def test_skew_report_hand_case(spark):
@@ -727,7 +761,7 @@ def test_group_cumsum_plan_no_group_only_window(spark):
 def test_grouped_descend_quantiles_multilevel_regimes(spark):
     """Round-17: exact_group_quantiles routes through the grouped
     histogram descent (_grouped_descend). Equivalence vs a sorted
-    reference across the regimes _descend_multi's test covers:
+    reference across the regimes the single-group test covers:
     negative values, a >2^32 span (multi-level descent, rank
     divergence into different buckets per group), and tie-heavy small
     ranges — with per-group ranges that differ wildly so the shared
@@ -801,6 +835,63 @@ def test_exact_group_quantiles_rejects_null_values_and_groups(spark):
     )
     with pytest.raises(ValueError, match="NULL"):
         SEL.exact_group_quantiles(df_nullg, "g", "v", "id")
+    # one NULL contract whatever the dtype: the non-integral (rank-build)
+    # path raises the same error instead of ordering the NULLs
+    df_nulld = spark.createDataFrame(
+        [("a", 1.5, 1), ("a", None, 2)], "g string, v double, id int"
+    )
+    with pytest.raises(ValueError, match="1 NULL value"):
+        SEL.exact_group_quantiles(df_nulld, "g", "v", "id")
+    empty_d = spark.createDataFrame([], "g string, v double, id int")
+    with pytest.raises(ValueError, match="empty"):
+        SEL.exact_group_quantiles(empty_d, "g", "v", "id")
+
+
+def test_descent_rejects_high_cardinality_before_collect(spark):
+    """A level over |cells|·4096 > _MAX_HIST_ROWS histogram rows is
+    rejected by name before its collect: only the bounds read runs."""
+    n_groups = SEL._MAX_HIST_ROWS // SEL._FANOUT + 1
+    df = spark.createDataFrame(
+        [(g, g % 7, g) for g in range(n_groups)], "g long, v long, id long"
+    )
+    with pytest.raises(ValueError, match="_MAX_HIST_ROWS"):
+        SEL.exact_group_quantiles(df, "g", "v", "id")
+
+
+def test_descent_releases_pin_on_error(spark, monkeypatch):
+    """A construction that fails after pinning leaves no registered pin
+    and no persisted frame: the per-level parameter frame (built for a
+    multi-cell level) and the bounds read are made to raise."""
+    from excel_to_database_spark.operators import caching
+
+    pins = []
+    real_pin = caching.pin
+    monkeypatch.setattr(caching, "pin", lambda df: pins.append(real_pin(df)) or pins[-1])
+    grouped = spark.createDataFrame(
+        [("a", i, i) for i in range(20)] + [("b", i, i + 100) for i in range(20)],
+        "g string, v long, id long",
+    )
+    flat = spark.createDataFrame([(i, i) for i in range(20)], "id long, score long")
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected")
+
+    n_active = len(caching._ACTIVE)
+    with monkeypatch.context() as m:
+        m.setattr(spark, "createDataFrame", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            SEL.exact_group_quantiles(grouped, "g", "v", "id")
+    with monkeypatch.context() as m:
+        m.setattr(SEL, "_group_bounds", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            SEL.top_k_cutoff(flat, "score", "id", 3)
+        with pytest.raises(RuntimeError, match="injected"):
+            SEL.keep_budget_report(flat, "score", "id", "id", Fraction(1, 2))
+    assert len(pins) == 3
+    for p in pins:
+        lvl = p.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk), lvl
+    assert len(caching._ACTIVE) == n_active
 
 
 def test_exact_group_quantiles_non_integral_falls_back(spark):
