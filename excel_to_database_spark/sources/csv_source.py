@@ -27,6 +27,19 @@ def _finalize(df: DataFrame, sanitize: bool) -> DataFrame:
     return df
 
 
+def matrix_to_df(spark: SparkSession, matrix: list[list[str]], sanitize: bool = True) -> DataFrame:
+    """Pre-parsed sheet matrix (header row 0) → all-string DataFrame: the
+    one sheet→frame builder, for xlsx matrices and CSV payload text."""
+    if not matrix:
+        raise ValueError("empty sheet matrix")
+    header, body = matrix[0], matrix[1:]
+    ncols = len(header)
+    # rectangularize, mirroring the xlsx parser's trim/pad (xlsparser.js:189-214)
+    body = [[str(c) if c is not None else "" for c in (r + [""] * ncols)[:ncols]] for r in body]
+    cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
+    return spark.createDataFrame(body, schema=", ".join(f"`{c}` string" for c in cols))
+
+
 def read_csv_path(
     spark: SparkSession,
     path: str,
@@ -81,9 +94,4 @@ def read_csv_text(
     rows = [r for r in rows if any(c.strip() for c in r)]
     if not rows:
         raise ValueError("no data rows in CSV payload")
-    header, data = rows[0], rows[1:]
-    ncols = len(header)
-    # rectangularize, mirroring the xlsx parser's trim/pad (xlsparser.js:189-214)
-    data = [(r + [""] * ncols)[:ncols] for r in data]
-    cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
-    return spark.createDataFrame(data, schema=", ".join(f"`{c}` string" for c in cols))
+    return matrix_to_df(spark, rows, sanitize)

@@ -14,19 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from excel_to_database_spark.naming import sanitize_columns, sqlify
-from excel_to_database_spark.sources.csv_source import read_csv_text
-
-
-def matrix_to_df(spark: SparkSession, matrix: list[list[str]], sanitize: bool = True) -> DataFrame:
-    """Pre-parsed sheet matrix (header row 0) → all-string DataFrame."""
-    if not matrix:
-        raise ValueError("empty sheet matrix")
-    header, body = matrix[0], matrix[1:]
-    ncols = len(header)
-    body = [[str(c) if c is not None else "" for c in (r + [""] * ncols)[:ncols]] for r in body]
-    cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
-    return spark.createDataFrame(body, schema=", ".join(f"`{c}` string" for c in cols))
+from excel_to_database_spark.naming import sqlify
+from excel_to_database_spark.sources.csv_source import matrix_to_df, read_csv_text
 
 
 def load_workbook_payload(spark: SparkSession, payload: dict) -> dict[str, DataFrame]:

@@ -2,10 +2,13 @@
 ``destination_*`` sinks (SURVEY.md §2.7).
 
 Every destination implements one method, ``sync(df, table_name, path)``:
-read the destination's current column set, run the truncate-vs-drop
-decision (policy.py), then bulk-load through Spark's writer. The
-namespace rule is the reference's: schema prefix ``x_excel`` suffixed
-with the tenant ``path`` → ``x_excel_<path>`` (app/data.py:103-105).
+ensure the schema, read the destination's current column set, run the
+truncate-vs-drop decision (policy.py), then bulk-load through Spark's
+writer, counting rows in the load's own job (an ``Observation``; the
+reference's ``len(data) - 1``, data.py:122). A failed probe raises;
+only an absent table reads as CREATE. The namespace rule is the
+reference's: schema prefix ``x_excel`` suffixed with the tenant
+``path`` → ``x_excel_<path>`` (app/data.py:103-105).
 
 Sink mapping (reference → Spark):
   * local CSV dir (data.py:137-153)        → LocalDestination (parquet
@@ -29,9 +32,12 @@ one COPY), the driver only issues DDL.
 
 from __future__ import annotations
 
+import glob
+from contextlib import closing
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, Observation
 
 from excel_to_database_spark.report import LoadReport
 from excel_to_database_spark.sync.policy import SyncAction, decide_sync_action
@@ -41,6 +47,71 @@ SCHEMA_PREFIX = "x_excel"  # reference: app/data.py:103
 
 def tenant_schema(path: str | None) -> str:
     return f"{SCHEMA_PREFIX}_{path}" if path else SCHEMA_PREFIX
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` counting its rows as it is written: after the write,
+    ``obs.get["n"]`` is the record count, taken in the load's own job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+class _Jdbc:
+    """One driver-side JDBC connection — the channel the reference's
+    cursor uses for DDL and COPY (data.py:113-133) — with the catalog
+    reads the JDBC sinks share. Metadata lookups fold names the way the
+    database stores unquoted identifiers (Derby: ``X_EXCEL.T``)."""
+
+    def __init__(self, spark, url: str, properties: dict):
+        jvm = spark._jvm
+        props = jvm.java.util.Properties()
+        for k, v in properties.items():
+            if k == "driver":
+                jvm.java.lang.Class.forName(v)
+            else:
+                props.setProperty(k, str(v))
+        self.conn = jvm.java.sql.DriverManager.getConnection(url, props)
+
+    def close(self) -> None:
+        self.conn.close()
+
+    def fold(self, name: str) -> str:
+        md = self.conn.getMetaData()
+        if md.storesUpperCaseIdentifiers():
+            return name.upper()
+        return name.lower() if md.storesLowerCaseIdentifiers() else name
+
+    def execute(self, sql: str) -> None:
+        self.conn.createStatement().execute(sql)
+
+    def _lists(self, rs, **names: str) -> bool:
+        """Whether metadata result ``rs`` has a row with exactly these
+        names (``_`` is a wildcard in the lookup's pattern)."""
+        found = False
+        while not found and rs.next():
+            found = all(rs.getString(k) == v for k, v in names.items())
+        rs.close()
+        return found
+
+    def ensure_schema(self, schema: str) -> None:
+        """CREATE SCHEMA when ``getSchemas`` does not list it (reference:
+        data.py:116, :175-177, :231); a DDL error raises."""
+        schema = self.fold(schema)
+        if not self._lists(self.conn.getMetaData().getSchemas(None, schema), TABLE_SCHEM=schema):
+            self.execute(f"CREATE SCHEMA {schema}")
+
+    def columns(self, fqtn: str) -> list[str] | None:
+        """The table's columns, or None when ``getTables`` does not list
+        it (→ CREATE). Any failure of the probe itself raises."""
+        schema, table = map(self.fold, fqtn.split("."))
+        found = self.conn.getMetaData().getTables(None, schema, table, None)
+        if not self._lists(found, TABLE_SCHEM=schema, TABLE_NAME=table):
+            return None
+        rs = self.conn.createStatement().executeQuery(f"SELECT * FROM {fqtn} WHERE 1=0")
+        meta = rs.getMetaData()
+        names = [meta.getColumnName(i) for i in range(1, meta.getColumnCount() + 1)]
+        rs.close()  # Derby refuses DDL on a table with an open result set
+        return names
 
 
 class Destination:
@@ -71,10 +142,9 @@ class LocalDestination(Destination):
         schema = tenant_schema(path)
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
         fqtn = f"{schema}.{table_name}"
-        existing = None
-        if spark.catalog.tableExists(fqtn):
-            existing = [f.name for f in spark.catalog.listColumns(fqtn)]
+        existing = spark.table(fqtn).columns if spark.catalog.tableExists(fqtn) else None
         action = decide_sync_action(existing, df.columns, strict=self.strict)
+        df, obs = _counted(df)
         if action is SyncAction.TRUNCATE:
             # same column set: INSERT OVERWRITE keeps the table identity.
             # insertInto is positional, so align to the table's column
@@ -92,8 +162,7 @@ class LocalDestination(Destination):
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.saveAsTable(fqtn)
-        n = spark.table(fqtn).count()
-        return LoadReport(action.value, schema, table_name, n)
+        return LoadReport(action.value, schema, table_name, obs.get["n"])
 
 
 @dataclass
@@ -107,52 +176,24 @@ class JdbcDestination(Destination):
     batchsize: int = 1000
     strict: bool = False
 
-    def _ensure_schema(self, spark, schema: str) -> None:
-        """CREATE SCHEMA if absent (reference: data.py:116, :175-177,
-        :231). Issued over a direct JDBC connection via the JVM;
-        'already exists' failures are ignored (portable stand-in for
-        IF NOT EXISTS, which not every warehouse dialect has)."""
-        try:
-            conn = spark._jvm.java.sql.DriverManager.getConnection(self.url)
-            try:
-                conn.createStatement().execute(f"CREATE SCHEMA {schema}")
-            finally:
-                conn.close()
-        except Exception:
-            pass  # exists already, or dialect auto-creates on write
-
-    def _existing_columns(self, spark, fqtn: str) -> list[str] | None:
-        try:
-            probe = (
-                spark.read.format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", f"(SELECT * FROM {fqtn} WHERE 1=0) q")
-                .options(**self.properties)
-                .load()
-            )
-            return probe.columns
-        except Exception:
-            return None  # table absent (or unreadable) → CREATE path
-
     def sync(self, df: DataFrame, table_name: str, path: str | None = None) -> LoadReport:
-        spark = df.sparkSession
         schema = tenant_schema(path)
         fqtn = f"{schema}.{table_name}"
-        self._ensure_schema(spark, schema)
-        existing = self._existing_columns(spark, fqtn)
-        action = decide_sync_action(existing, df.columns, strict=self.strict)
-        writer = (
+        with closing(_Jdbc(df.sparkSession, self.url, self.properties)) as db:
+            db.ensure_schema(schema)
+            action = decide_sync_action(db.columns(fqtn), df.columns, strict=self.strict)
+        df, obs = _counted(df)
+        (
             df.write.format("jdbc")
             .option("url", self.url)
             .option("dbtable", fqtn)
             .option("batchsize", self.batchsize)
             .options(**self.properties)
+            .option("truncate", action is SyncAction.TRUNCATE)
+            .mode("overwrite")
+            .save()
         )
-        if action is SyncAction.TRUNCATE:
-            writer.option("truncate", True).mode("overwrite").save()
-        else:
-            writer.mode("overwrite").save()
-        return LoadReport(action.value, schema, table_name, df.count())
+        return LoadReport(action.value, schema, table_name, obs.get["n"])
 
 
 @dataclass
@@ -222,49 +263,14 @@ class CloudCopyDestination(Destination):
         ``single_file`` loaders need one concrete file."""
         if not self.single_file:
             return staged
-        import glob as _g
-
         local = staged.removeprefix("file:")
-        parts = sorted(_g.glob(f"{local}/part-*"))
+        parts = sorted(glob.glob(f"{local}/part-*"))
         return parts[0] if parts else staged
 
-    def _execute(self, spark, sql: str) -> None:
-        """Issue one driver-side statement over a plain JDBC connection
-        (the JVM's DriverManager — same channel the reference's cursor
-        uses, data.py:113-133)."""
-        drv = self.properties.get("driver")
-        if drv:
-            spark._jvm.java.lang.Class.forName(drv)
-        conn = spark._jvm.java.sql.DriverManager.getConnection(self.jdbc_url)
-        try:
-            conn.createStatement().execute(sql)
-        finally:
-            conn.close()
-
-    def _existing_columns(self, spark, fqtn: str) -> list[str] | None:
-        try:
-            probe = (
-                spark.read.format("jdbc")
-                .option("url", self.jdbc_url)
-                .option("dbtable", f"(SELECT * FROM {fqtn} WHERE 1=0) q")
-                .options(**self.properties)
-                .load()
-            )
-            return probe.columns
-        except Exception:
-            return None
-
-    def _column_type(self) -> str:
-        if self.ddl_type:
-            return self.ddl_type
-        # reference: Redshift VARCHAR (data.py:57-62), Snowflake TEXT
-        # (data.py:241)
-        return "TEXT" if self.kind == "snowflake" else "VARCHAR(2000)"
-
     def sync(self, df: DataFrame, table_name: str, path: str | None = None) -> LoadReport:
-        spark = df.sparkSession
         schema = tenant_schema(path)
         fqtn = f"{schema}.{table_name}"
+        df, obs = _counted(df)
         staged = self.stage(df, table_name)
         copy_sql = self.copy_statement(fqtn, self._staged_entry(staged))
         if not self.jdbc_url:
@@ -272,31 +278,25 @@ class CloudCopyDestination(Destination):
                 f"no JDBC endpoint configured; staged data at {staged}; "
                 f"would run: {copy_sql}"
             )
-        try:
-            self._execute(spark, f"CREATE SCHEMA {schema}")
-        except Exception:
-            pass  # exists already (reference ignores the same way, data.py:116)
-        action = decide_sync_action(
-            self._existing_columns(spark, fqtn), df.columns, strict=self.strict
-        )
-        cols = ", ".join(f"{c} {self._column_type()}" for c in df.columns)
-        if action is SyncAction.TRUNCATE:
-            self._execute(spark, f"TRUNCATE TABLE {fqtn}")
-        elif action is SyncAction.RECREATE:
-            # reference drops CASCADE on Redshift (data.py:127-128);
-            # Derby and others take a bare DROP
-            do_cascade = (
-                self.drop_cascade
-                if self.drop_cascade is not None
-                else self.kind == "redshift"
-            )
-            cascade = " CASCADE" if do_cascade else ""
-            self._execute(spark, f"DROP TABLE {fqtn}{cascade}")
-            self._execute(spark, f"CREATE TABLE {fqtn} ({cols})")
-        else:
-            self._execute(spark, f"CREATE TABLE {fqtn} ({cols})")
-        self._execute(spark, copy_sql)
-        return LoadReport(action.value, schema, table_name, df.count())
+        with closing(_Jdbc(df.sparkSession, self.jdbc_url, self.properties)) as db:
+            db.ensure_schema(schema)
+            action = decide_sync_action(db.columns(fqtn), df.columns, strict=self.strict)
+            if action is SyncAction.TRUNCATE:
+                db.execute(f"TRUNCATE TABLE {fqtn}")
+            else:
+                if action is SyncAction.RECREATE:
+                    # reference drops CASCADE on Redshift (data.py:127-128);
+                    # Derby and others take a bare DROP
+                    cascade = self.drop_cascade
+                    if cascade is None:
+                        cascade = self.kind == "redshift"
+                    db.execute(f"DROP TABLE {fqtn}{' CASCADE' if cascade else ''}")
+                # reference: Redshift VARCHAR (data.py:57-62), Snowflake TEXT (data.py:241)
+                ctype = self.ddl_type or ("TEXT" if self.kind == "snowflake" else "VARCHAR(2000)")
+                cols = ", ".join(f"{c} {ctype}" for c in df.columns)
+                db.execute(f"CREATE TABLE {fqtn} ({cols})")
+            db.execute(copy_sql)
+        return LoadReport(action.value, schema, table_name, obs.get["n"])
 
 
 def sync_table(

@@ -6,7 +6,9 @@ batched inserts, real catalog probe, full truncate-vs-drop lifecycle."""
 import pytest
 
 from excel_to_database_spark.sources.payload import matrix_to_df
-from excel_to_database_spark.sync.sinks import JdbcDestination
+from excel_to_database_spark.sync import sinks
+from excel_to_database_spark.sync.sinks import CloudCopyDestination, JdbcDestination
+from tests.test_sync import _job_count
 
 DRIVER = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
@@ -51,18 +53,11 @@ def test_jdbc_lifecycle(spark, dest):
     assert sorted(c.lower() for c in _read(spark, dest, fqtn).columns) == ["a", "c"]
 
 
-def test_cloud_copy_executes_against_derby(spark, tmp_path):
-    """The CloudCopyDestination lifecycle — stage CSV, CREATE SCHEMA,
-    reconcile DDL, execute the templated COPY over JDBC — end-to-end
-    against embedded Derby (SYSCS_IMPORT_TABLE standing in for the
-    warehouse bulk loader, reference app/data.py:106-133, :243-254)."""
-    from excel_to_database_spark.sync.sinks import CloudCopyDestination
-
-    db = tmp_path / "derby_copy"
-    dest = CloudCopyDestination(
+def _derby_copy(tmp_path):
+    return CloudCopyDestination(
         kind="redshift",
         stage_uri=str(tmp_path / "stage"),
-        jdbc_url=f"jdbc:derby:{db};create=true",
+        jdbc_url=f"jdbc:derby:{tmp_path / 'derby_copy'};create=true",
         properties=DRIVER,
         compression=None,          # Derby's importer reads plain CSV
         single_file=True,          # ...from one concrete file
@@ -73,6 +68,14 @@ def test_cloud_copy_executes_against_derby(spark, tmp_path):
         ddl_type="VARCHAR(200)",
         drop_cascade=False,      # Derby has no DROP TABLE CASCADE
     )
+
+
+def test_cloud_copy_executes_against_derby(spark, tmp_path):
+    """The CloudCopyDestination lifecycle — stage CSV, CREATE SCHEMA,
+    reconcile DDL, execute the templated COPY over JDBC — end-to-end
+    against embedded Derby (SYSCS_IMPORT_TABLE standing in for the
+    warehouse bulk loader, reference app/data.py:106-133, :243-254)."""
+    dest = _derby_copy(tmp_path)
 
     df1 = matrix_to_df(spark, [["a", "b"], ["1", "x"], ["2", "y"]])
     r1 = dest.sync(df1, "t_copy", path="cloudtest")
@@ -96,6 +99,58 @@ def test_cloud_copy_executes_against_derby(spark, tmp_path):
     df3 = matrix_to_df(spark, [["a", "c"], ["5", "6"]])
     r3 = dest.sync(df3, "t_copy", path="cloudtest")
     assert (r3.action, r3.n_records) == ("Recreated", 1)
+
+
+def test_jdbc_sync_is_one_job(spark, dest):
+    """No recount after the write: a Derby sync is the write's one job."""
+    df = matrix_to_df(spark, [["a", "b"], ["1", "x"]])
+    dest.sync(df, "t_jobs", path="derbytest")
+    assert _job_count(spark, "jdbc_truncate", lambda: dest.sync(df, "t_jobs", "derbytest")) == 1
+
+
+def test_header_only_sheet_reports_zero_records_jdbc(spark, dest, tmp_path):
+    empty = matrix_to_df(spark, [["a", "b"]])
+    for sink in (dest, _derby_copy(tmp_path)):
+        for action in ("Created", "Truncated"):
+            r = sink.sync(empty, "t_empty", path="derbyempty")
+            assert r.message() == f"{action} and loaded into x_excel_derbyempty.t_empty\n0 records"
+    assert _read(spark, dest, "x_excel_derbyempty.t_empty").count() == 0
+
+
+class _FailingQueries:
+    """A JDBC connection whose queries raise — a probe that fails after
+    the table lookup (a dropped link, a timeout, a revoked grant)."""
+
+    def __init__(self, conn):
+        self._conn = conn
+
+    def __getattr__(self, name):
+        return getattr(self._conn, name)
+
+    def createStatement(self):
+        return self
+
+    def executeQuery(self, sql):
+        raise RuntimeError(f"probe failed: {sql}")
+
+
+def test_failed_probe_raises_and_keeps_the_table(spark, dest, monkeypatch):
+    """A probe that fails must not read as "table absent": that would
+    CREATE, and Spark's overwrite without truncate drops the live table."""
+    fqtn = "x_excel_derbytest.t_keep"
+    df = matrix_to_df(spark, [["a", "b"], ["1", "x"], ["2", "y"]])
+    dest.sync(df, "t_keep", path="derbytest")
+    init = sinks._Jdbc.__init__
+
+    def failing_init(self, *args):
+        init(self, *args)
+        self.conn = _FailingQueries(self.conn)
+
+    monkeypatch.setattr(sinks._Jdbc, "__init__", failing_init)
+    other = matrix_to_df(spark, [["c"], ["9"]])
+    with pytest.raises(RuntimeError, match="probe failed"):
+        dest.sync(other, "t_keep", path="derbytest")
+    assert sorted(map(tuple, _read(spark, dest, fqtn).collect())) == [("1", "x"), ("2", "y")]
 
 
 def test_jdbc_source_partitioned_read_with_pushdown(spark, tmp_path):

@@ -101,3 +101,55 @@ def test_local_destination_csv_format(spark):
     assert r2.action == "Truncated"
     row = spark.table("x_excel_csvtest.t_csvfmt").collect()[0]
     assert (row["a"], row["b"]) == ("9", "z")
+
+
+def _job_count(spark, name, fn):
+    """Spark jobs ``fn`` issues, read from the status store by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "sync")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def test_local_sync_is_one_job(spark):
+    """The record count rides the write and the column probe reads the
+    catalog without a job: a sync is exactly the write's one job."""
+    dest = LocalDestination()
+    df = matrix_to_df(spark, [["a", "b"], ["1", "2"], ["3", "4"]])
+    assert _job_count(spark, "local_create", lambda: dest.sync(df, "t_jobs", "jobs")) == 1
+    df2 = matrix_to_df(spark, [["b", "a"], ["5", "6"]])
+    assert _job_count(spark, "local_truncate", lambda: dest.sync(df2, "t_jobs", "jobs")) == 1
+    df3 = matrix_to_df(spark, [["a", "c"], ["7", "8"]])
+    assert _job_count(spark, "local_recreate", lambda: dest.sync(df3, "t_jobs", "jobs")) == 1
+    assert spark.table("x_excel_jobs.t_jobs").collect()[0].asDict() == {"a": "7", "c": "8"}
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+def test_header_only_sheet_reports_zero_records(spark, fmt):
+    dest = LocalDestination(fmt=fmt)
+    empty = matrix_to_df(spark, [["a", "b"]])
+    r1 = dest.sync(empty, f"t_empty_{fmt}", path="emptytest")
+    assert (r1.action, r1.n_records) == ("Created", 0)
+    assert r1.message() == f"Created and loaded into x_excel_emptytest.t_empty_{fmt}\n0 records"
+    r2 = dest.sync(empty, f"t_empty_{fmt}", path="emptytest")
+    assert (r2.action, r2.n_records) == ("Truncated", 0)
+    assert spark.table(f"x_excel_emptytest.t_empty_{fmt}").count() == 0
+
+
+def test_partitioned_truncate_lands_values_by_name(spark):
+    """TRUNCATE into a hive-partitioned table (partition column stored
+    last) with the sheet's columns reordered: each value lands in its
+    named column."""
+    dest = LocalDestination(partition_by=("region",))
+    df1 = matrix_to_df(spark, [["region", "id", "amt"], ["eu", "1", "10"], ["us", "2", "20"]])
+    assert dest.sync(df1, "t_part", path="parttrunc").action == "Created"
+    df2 = matrix_to_df(spark, [["amt", "region", "id"], ["30", "us", "3"], ["40", "ap", "4"]])
+    r = dest.sync(df2, "t_part", path="parttrunc")
+    assert (r.action, r.n_records) == ("Truncated", 2)
+    got = spark.table("x_excel_parttrunc.t_part")
+    assert got.columns == ["id", "amt", "region"]
+    assert sorted(tuple(row) for row in got.collect()) == [("3", "30", "us"), ("4", "40", "ap")]
