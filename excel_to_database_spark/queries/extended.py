@@ -565,8 +565,7 @@ def q133_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q137_stream_typed_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed-state streaming fold — transformWithStateInPandas, active
     even without the protobuf distribution via the vendored minimal
-    runtime (streaming/tws.ensure_protobuf; the byte-identical
-    applyInPandasWithState twin remains as the fallback) — replaying
+    runtime (streaming/tws.ensure_protobuf) — replaying
     the events table availableNow; the oracle is the equivalent batch
     aggregate — streaming/batch parity on a custom stateful operator,
     not a built-in agg. Each key's state row updates with
@@ -577,11 +576,15 @@ def q137_stream_typed_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream,
         run_stream_to_memory,
     )
-    from excel_to_database_spark.streaming.tws import user_stats_auto
+    from excel_to_database_spark.streaming.tws import (
+        enable_tws,
+        user_stats_tws,
+    )
 
+    enable_tws(spark)
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     out = run_stream_to_memory(
-        spark, user_stats_auto(stream), "q137_tws", output_mode="update"
+        spark, user_stats_tws(stream), "q137_tws", output_mode="update"
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
@@ -613,16 +616,11 @@ def q149_stream_typed_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_memory,
     )
     from excel_to_database_spark.streaming.tws import (
-        ship_protobuf_to_workers,
+        enable_tws,
         user_topk_tws,
     )
 
-    ship_protobuf_to_workers(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
+    enable_tws(spark)
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     out = run_stream_to_memory(
         spark, user_topk_tws(stream, k=3), "q149_tws", output_mode="update"
@@ -656,16 +654,11 @@ def q150_stream_typed_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_memory,
     )
     from excel_to_database_spark.streaming.tws import (
-        ship_protobuf_to_workers,
+        enable_tws,
         user_type_counts_tws,
     )
 
-    ship_protobuf_to_workers(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
+    enable_tws(spark)
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     out = run_stream_to_memory(
         spark, user_type_counts_tws(stream), "q150_tws", output_mode="update"
@@ -729,16 +722,11 @@ def q161_stream_event_time_sessions(spark: SparkSession, sf_dir: str) -> DataFra
         run_stream_to_memory,
     )
     from excel_to_database_spark.streaming.tws import (
-        ship_protobuf_to_workers,
+        enable_tws,
         user_event_sessions_tws,
     )
 
-    ship_protobuf_to_workers(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
+    enable_tws(spark)
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     return run_stream_to_memory(
         spark,

@@ -1,22 +1,30 @@
 """Distributed Excel reader: ``binaryFile`` scan → per-executor decode.
 
 The workbook bytes are read by Spark's binary-file source and decoded by
-``xlsx_core.WorkbookReader`` inside ``mapInPandas`` — one task per
-workbook (xlsx is an unsplittable zip, format-capped at ~1M rows, so a
-file is the right task granule; a *directory* of workbooks parallelizes
-across executors, which is the scale path). The driver only ever opens
-one file's header to fix the schema — never data rows.
+``decode_workbook`` inside ``mapInPandas`` — one task per workbook (xlsx
+is an unsplittable zip, format-capped at ~1M rows, so a file is the
+right task granule; a *directory* of workbooks parallelizes across
+executors, which is the scale path). The driver only ever opens one
+file's header to fix the schema — never data rows.
 
-Parity notes: header = row 0 promoted to sanitized column names
-(reference app/data.py:121, :24-27); all columns ``StringType``
-(data.py:57-62); ``visible_only`` mirrors the VBA visible-only
-submission (VBA/Excel2Database.vb:46-88).
+The one decode contract, shared with ``spark.read.format("xlsx")``
+(``xlsx_datasource``): the output columns come from the first
+workbook's header; every workbook is then decoded against ITS OWN
+header row, mapped to those columns by name, so a directory may mix
+column orders and a column a workbook lacks reads as ``""``.
+
+Parity notes: header = row 0 promoted to sanitized column names and
+mapped to table columns by name (reference app/data.py:121, :128-131,
+:24-27); all columns ``StringType`` (data.py:57-62); ``visible_only``
+mirrors the VBA visible-only submission (VBA/Excel2Database.vb:46-88).
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import os as _os
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -31,43 +39,91 @@ def sheet_names(path: str) -> list[str]:
         return WorkbookReader(f.read()).sheet_names()
 
 
-def _header_of(
-    path: str, sheet: str | None, visible_only: bool, bug_compat: bool
-) -> tuple[str, list[str], list[int]]:
-    with open(path, "rb") as f:
-        rdr = WorkbookReader(f.read(), bug_compat)  # header cells: time mode irrelevant
+def list_workbooks(path: str) -> list[str]:
+    """The workbooks under ``path`` (a file, glob, or directory), sorted."""
+    pattern = _os.path.join(path, "*.xlsx") if _os.path.isdir(path) else path
+    return sorted(_glob.glob(pattern)) or [path]
+
+
+@dataclass(frozen=True)
+class ExcelSpec:
+    """One read: the ``read_excel`` arguments plus the output columns
+    (the header's names, or the ``columns`` a pruned read asked for)."""
+
+    out_cols: tuple[str, ...]
+    sheet: str | None = None
+    visible_only: bool = False
+    bug_compat_1900: bool = False
+    sanitize: bool = True
+    keep_time: bool = False
+    times: bool = False
+
+    def schema(self) -> StructType:
+        return StructType([StructField(c, StringType()) for c in self.out_cols])
+
+
+def _names(header: list[str], sanitize: bool) -> list[str]:
+    return sanitize_columns(header) if sanitize else [str(h) for h in header]
+
+
+def excel_spec(
+    path: str,
+    sheet: str | None = None,
+    visible_only: bool = False,
+    bug_compat_1900: bool = False,
+    sanitize: bool = True,
+    keep_time: bool = False,
+    times: bool = False,
+    columns: list[str] | tuple[str, ...] | None = None,
+) -> ExcelSpec:
+    """Fix the output columns from the first workbook's header. A
+    bounded probe: ONE row is parsed, not the whole sheet, so driver
+    work stays O(1) regardless of workbook size."""
+    found = list_workbooks(path)
+    first = next((p for p in found if p.endswith(".xlsx")), found[0])
+    with open(first, "rb") as f:
+        rdr = WorkbookReader(f.read(), bug_compat_1900)
     name = sheet or rdr.sheet_names()[0]
-    # bounded probe: parse ONE row, not the whole sheet — driver work
-    # stays O(1) regardless of workbook size (sheet_columns falls back
-    # to a full read only when the first XML row carries no text at
-    # all). Also returns each header position's RAW sheet column index,
-    # the currency of read_sheet's column pruning.
-    header, raw_cols = rdr.sheet_columns(name, visible_only)
+    header, _ = rdr.sheet_columns(name, visible_only)
     if not header:
-        raise ValueError(f"sheet {name!r} of {path} is empty")
-    return name, header, raw_cols
+        raise ValueError(f"sheet {name!r} of {first} is empty")
+    cols = _names(header, sanitize)
+    if columns is not None:
+        missing = [c for c in columns if c not in cols]
+        if missing:
+            raise ValueError(f"columns {missing} not in sheet columns {cols}")
+    out_cols = tuple(cols if columns is None else columns)
+    return ExcelSpec(out_cols, sheet, visible_only, bug_compat_1900, sanitize, keep_time, times)
 
 
-def _decode_body(
-    content: bytes,
-    sheet_name: str,
-    visible_only: bool,
-    bug_compat_1900: bool,
-    keep_time: bool,
-    times: bool,
-    want_raw: set[int] | None,
-    positions: list[int],
-    n_full: int,
-) -> list[list[str]]:
-    """The per-workbook decode the executors run inside ``read_excel``'s
-    ``mapInPandas`` — module-level so the cell-touch contract (pruned
-    columns never reach the value decoder) is testable in-process."""
-    rdr = WorkbookReader(bytes(content), bug_compat_1900, keep_time, times)
-    matrix = rdr.read_sheet(sheet_name, visible_only, want_cols=want_raw)
+def decode_workbook(content: bytes, spec: ExcelSpec) -> list[tuple]:
+    """Decode one workbook's body rows into ``spec.out_cols`` — the one
+    kernel both Excel front ends run on their executors. The sheet
+    (default: this workbook's first) is mapped by THIS workbook's own
+    header, taken with the one-row probe (the reader keeps the part,
+    so it is decompressed once): each output column takes the header
+    position of the same name
+    (the k-th repeat of a name takes the k-th header of that name, or
+    the last one there is), and a column the header lacks yields
+    ``""``. Only the mapped columns' cells are value-decoded."""
+    rdr = WorkbookReader(bytes(content), spec.bug_compat_1900, spec.keep_time, spec.times)
+    sheet = spec.sheet or rdr.sheet_names()[0]
+    header, raw_cols = rdr.sheet_columns(sheet, spec.visible_only)
+    slots: dict[str, list[int]] = {}
+    for i, c in enumerate(_names(header, spec.sanitize)):
+        slots.setdefault(c, []).append(i)
+    n = len(header)  # slot n of a padded row is the missing column's ""
+    idx = []
+    for c in spec.out_cols:
+        s = slots.get(c, [n])
+        idx.append(s.pop(0) if len(s) > 1 else s[0])
+    matrix = rdr.read_sheet(
+        sheet, spec.visible_only, want_cols={raw_cols[i] for i in idx if i < n}
+    )
     return [
-        [padded[p] for p in positions]
+        tuple(padded[i] for i in idx)
         for r in matrix[1:]
-        for padded in ((r + [""] * n_full)[:n_full],)
+        for padded in ((r + [""] * n)[:n] + [""],)
     ]
 
 
@@ -83,14 +139,17 @@ def read_excel(
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Read one sheet (by name; default first) from ``path`` — a file,
-    glob, or directory of .xlsx files sharing a header — as an
-    all-string DataFrame. ``keep_time`` renders date-styled cells with
-    their time-of-day (engine extension; the reference drops it).
-    ``times`` additionally decodes TIME-of-day numFmts (builtin ids
-    18-21/45-47 and custom h/s codes) as ``HH:MM:SS`` — a documented
-    divergence from the reference, which skips times entirely
-    (xlsparser.js:52); off by default for byte-parity. Combine with
-    ``promote_temporal_columns`` for typed Date/Timestamp output.
+    glob, or directory of .xlsx files — as an all-string DataFrame. The
+    columns are the first workbook's header; each workbook's own header
+    is mapped to them by name, so workbooks may order their columns
+    differently, and a column a workbook lacks reads as ``""``.
+    ``keep_time`` renders date-styled cells with their time-of-day
+    (engine extension; the reference drops it). ``times`` additionally
+    decodes TIME-of-day numFmts (builtin ids 18-21/45-47 and custom h/s
+    codes) as ``HH:MM:SS`` — a documented divergence from the
+    reference, which skips times entirely (xlsparser.js:52); off by
+    default for byte-parity. Combine with ``promote_temporal_columns``
+    for typed Date/Timestamp output.
 
     ``columns`` is column pruning pushed INTO the decoder: only the
     named (post-sanitize) columns have their cells value-decoded —
@@ -100,51 +159,23 @@ def read_excel(
     cannot reach inside ``mapInPandas`` (and the Python DataSource API
     has no column-pruning hook yet, SURVEY §4.2), so projection over
     wide workbooks should be declared here."""
-    import os as _os
-
-    pattern = _os.path.join(path, "*.xlsx") if _os.path.isdir(path) else path
-    candidates = sorted(_glob.glob(pattern)) or [path]
-    first = next((p for p in candidates if p.endswith(".xlsx")), candidates[0])
-    sheet_name, header, raw_cols = _header_of(first, sheet, visible_only, bug_compat_1900)
-    cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
-    n_full = len(cols)
-    if columns is not None:
-        missing = [c for c in columns if c not in cols]
-        if missing:
-            raise ValueError(f"columns {missing} not in sheet columns {cols}")
-        positions = [cols.index(c) for c in columns]
-        # wanted raw indices; header cells stay decoded for free (the
-        # probe already ran), body cells outside this set are skipped
-        want_raw: set[int] | None = {raw_cols[p] for p in positions}
-        out_cols = list(columns)
-    else:
-        positions = list(range(n_full))
-        want_raw = None
-        out_cols = cols
-    out_schema = StructType([StructField(c, StringType()) for c in out_cols])
+    spec = excel_spec(
+        path, sheet, visible_only, bug_compat_1900, sanitize, keep_time, times, columns
+    )
+    out_cols = list(spec.out_cols)
 
     def decode(batches) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                body = _decode_body(
-                    row["content"],
-                    sheet_name,
-                    visible_only,
-                    bug_compat_1900,
-                    keep_time,
-                    times,
-                    want_raw,
-                    positions,
-                    n_full,
-                )
+            for content in pdf["content"]:
+                body = decode_workbook(content, spec)
                 yield pd.DataFrame(body, columns=out_cols, dtype=str) if body else pd.DataFrame(
                     {c: pd.Series(dtype=str) for c in out_cols}
                 )
 
     files = spark.read.format("binaryFile").option("pathGlobFilter", "*.xlsx").load(path)
-    return files.select("content").mapInPandas(decode, schema=out_schema)
+    return files.select("content").mapInPandas(decode, schema=spec.schema())
 
 
 def promote_temporal_columns(

@@ -149,6 +149,22 @@ def _cell_text(c: ET.Element, shared: list[str]) -> str:
     return v.text
 
 
+def _elements(raw: bytes, chunk: int):
+    """Each element of an XML part as its end tag is parsed, feeding the
+    parser ``chunk`` bytes at a time: a reader that stops early has
+    parsed at most one chunk past the element it stopped at
+    (``ET.iterparse`` reads 16 KiB ahead, most of a small sheet)."""
+    parser = ET.XMLPullParser()
+    view = memoryview(raw)
+    for i in range(0, len(raw), chunk):
+        parser.feed(view[i : i + chunk])
+        for _event, el in parser.read_events():
+            yield el
+    parser.close()
+    for _event, el in parser.read_events():
+        yield el
+
+
 def _num_to_str(raw: str) -> str:
     """Render a numeric cell the way a spreadsheet shows it: integers
     without a trailing ``.0``."""
@@ -176,9 +192,9 @@ class WorkbookReader:
         self.keep_time = keep_time
         self.times = times
         self._shared = self._read_shared_strings()
-        self._date_styles = self._read_date_styles()
-        self._time_styles = self._read_time_styles() if times else set()
+        self._date_styles, self._time_styles = self._read_styles()
         self.sheet_paths = self._read_sheet_paths()
+        self._sheet_parts: dict[str, bytes | None] = {}
 
     # -- package parts ------------------------------------------------
     def _read(self, name: str) -> bytes | None:
@@ -196,51 +212,32 @@ class WorkbookReader:
             out.append("".join(t.text or "" for t in si.iter(f"{_MAIN_NS}t")))
         return out
 
-    def _read_date_styles(self) -> set[int]:
-        """Indices into cellXfs whose numFmt means 'date'."""
+    def _read_styles(self) -> tuple[set[int], set[int]]:
+        """Indices into cellXfs whose numFmt means 'date', and (``times``
+        mode only) 'time of day' — one parse of ``styles.xml``. The
+        reference skips times (xlsparser.js:52); the cell decode tests
+        time styles first, so a custom 'h:mm' renders as time in
+        ``times`` mode while remaining a date in parity mode."""
         raw = self._read("xl/styles.xml")
-        if raw is None:
-            return set()
-        root = ET.fromstring(raw)
-        custom_date_fmts = {
-            int(nf.get("numFmtId"))
-            for nf in root.iter(f"{_MAIN_NS}numFmt")
-            if is_date_format(nf.get("formatCode", ""))
-        }
-        date_styles: set[int] = set()
-        cell_xfs = root.find(f"{_MAIN_NS}cellXfs")
+        root = None if raw is None else ET.fromstring(raw)
+        cell_xfs = None if root is None else root.find(f"{_MAIN_NS}cellXfs")
         if cell_xfs is None:
-            return set()
-        for i, xf in enumerate(cell_xfs.findall(f"{_MAIN_NS}xf")):
-            fmt_id = int(xf.get("numFmtId", "0"))
-            if fmt_id in _BUILTIN_DATE_NUMFMT or fmt_id in custom_date_fmts:
-                date_styles.add(i)
-        return date_styles
-
-    def _read_time_styles(self) -> set[int]:
-        """Indices into cellXfs whose numFmt means 'time of day'
-        (``times=True`` mode only; the reference skips times,
-        xlsparser.js:52). Time classification wins over the m-ambiguity
-        in is_date_format, so a custom 'h:mm' renders as time here
-        while remaining a date in parity mode."""
-        raw = self._read("xl/styles.xml")
-        if raw is None:
-            return set()
-        root = ET.fromstring(raw)
-        custom_time_fmts = {
-            int(nf.get("numFmtId"))
+            return set(), set()
+        custom = [
+            (int(nf.get("numFmtId")), nf.get("formatCode", ""))
             for nf in root.iter(f"{_MAIN_NS}numFmt")
-            if is_time_format(nf.get("formatCode", ""))
-        }
-        time_styles: set[int] = set()
-        cell_xfs = root.find(f"{_MAIN_NS}cellXfs")
-        if cell_xfs is None:
-            return set()
-        for i, xf in enumerate(cell_xfs.findall(f"{_MAIN_NS}xf")):
-            fmt_id = int(xf.get("numFmtId", "0"))
-            if fmt_id in _BUILTIN_TIME_NUMFMT or fmt_id in custom_time_fmts:
-                time_styles.add(i)
-        return time_styles
+        ]
+        date_ids = _BUILTIN_DATE_NUMFMT | {i for i, f in custom if is_date_format(f)}
+        time_ids = (
+            _BUILTIN_TIME_NUMFMT | {i for i, f in custom if is_time_format(f)}
+            if self.times
+            else set()
+        )
+        fmt_ids = [int(xf.get("numFmtId", "0")) for xf in cell_xfs.findall(f"{_MAIN_NS}xf")]
+        return (
+            {i for i, f in enumerate(fmt_ids) if f in date_ids},
+            {i for i, f in enumerate(fmt_ids) if f in time_ids},
+        )
 
     def _read_sheet_paths(self) -> dict[str, str]:
         """sheet name → zip path, resolved through workbook rels
@@ -274,7 +271,7 @@ class WorkbookReader:
         """Decode one sheet to a rectangular string matrix.
 
         ``max_rows`` bounds the number of (visible) XML rows parsed —
-        the streaming ``iterparse`` stops as soon as that many rows are
+        the streaming parse stops as soon as that many rows are
         collected, so a header probe costs O(1) rows of work instead of
         the whole sheet. A bounded read derives the matrix width from
         the parsed rows only (an unbounded read uses the global widest
@@ -296,10 +293,12 @@ class WorkbookReader:
         (falls back to a full parse only when the first row is empty);
         the raw indices are what ``read_sheet(want_cols=...)`` expects,
         so callers can map projected column NAMES to pruned cells even
-        with hidden columns collapsed out of the matrix."""
-        matrix, cols = self._decode_sheet(name, visible_only, max_rows=1)
+        with hidden columns collapsed out of the matrix. Header texts
+        render in parity mode (no time-of-day, no ``times`` formats),
+        so a header's names do not depend on the read's time mode."""
+        matrix, cols = self._decode_sheet(name, visible_only, max_rows=1, plain=True)
         if not matrix:
-            matrix, cols = self._decode_sheet(name, visible_only)
+            matrix, cols = self._decode_sheet(name, visible_only, plain=True)
         if not matrix:
             return [], []
         return matrix[0], cols
@@ -310,14 +309,22 @@ class WorkbookReader:
         visible_only: bool = False,
         max_rows: int | None = None,
         want_cols: set[int] | None = None,
+        plain: bool = False,
     ) -> tuple[list[list[str]], list[int]]:
         if name not in self.sheet_paths:
             raise ValueError(
                 f"no sheet named {name!r}; workbook has {self.sheet_names()}"
             )
-        raw = self._read(self.sheet_paths[name])
+        path = self.sheet_paths[name]
+        if path not in self._sheet_parts:
+            # kept for the reader's lifetime: a header probe followed by
+            # the body read decompresses the sheet part once
+            self._sheet_parts[path] = self._read(path)
+        raw = self._sheet_parts[path]
         if raw is None:
             return [], []
+        time_styles = set() if plain else self._time_styles
+        keep_time = self.keep_time and not plain
 
         hidden_cols: set[int] = set()
         rows: list[tuple[int, dict[int, str]]] = []
@@ -327,7 +334,7 @@ class WorkbookReader:
         # <sheetData> in the part, so hidden_cols is complete before
         # the first row is processed; early break keeps a bounded read
         # from ever touching the rest of the XML
-        for _event, el in ET.iterparse(io.BytesIO(raw)):
+        for el in _elements(raw, 2048 if max_rows is not None else 1 << 14):
             if el.tag == f"{_MAIN_NS}col":
                 if visible_only and el.get("hidden") in ("1", "true"):
                     lo, hi = int(el.get("min")), int(el.get("max"))
@@ -362,7 +369,7 @@ class WorkbookReader:
                 text = _cell_text(c, self._shared)
                 if text and c.get("t", "n") == "n":
                     style = int(c.get("s", "-1"))
-                    if style in self._time_styles:
+                    if style in time_styles:
                         try:
                             text = serial_to_time_str(float(text))
                         except ValueError:
@@ -370,7 +377,7 @@ class WorkbookReader:
                     elif style in self._date_styles:
                         try:
                             text = serial_to_iso(
-                                float(text), self.bug_compat_1900, self.keep_time
+                                float(text), self.bug_compat_1900, keep_time
                             )
                         except ValueError:
                             pass

@@ -8,67 +8,62 @@ workbook directory reads like any first-class format:
           .option("visible_only", "true")  # VBA visible-only parity
           .load("/data/workbooks"))
 
-Same semantics as ``excel_source.read_excel`` (header row promoted to
-sanitized column names, all columns string — reference app/data.py:57-62,
-:121): this wrapper adds only the format registration. Scale shape is
-identical too: one InputPartition per workbook (xlsx is an unsplittable
-zip; a directory parallelizes across executors), and the driver touches
-only one file's first row to fix the schema.
+The decode IS ``excel_source.read_excel``'s: the schema comes from the
+same first-workbook header probe (``excel_spec``) and each partition
+runs the same kernel (``decode_workbook``) — every workbook's own
+header is mapped to the probed columns by name, a column it lacks
+reads as ``""``, all columns string (reference app/data.py:57-62,
+:121, :128-131). A schema given with ``.schema(...)`` renames those
+columns by position, as on Spark's CSV reader with a header. This
+wrapper adds only the format registration, one
+InputPartition per workbook (xlsx is an unsplittable zip; a directory
+parallelizes across executors) and row-level ``EqualTo`` pushdown.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
+
+from excel_to_database_spark.sources.excel_source import (
+    decode_workbook,
+    excel_spec,
+    list_workbooks,
+)
+
 
 def _truthy(v) -> bool:
     return str(v).lower() in ("1", "true", "yes")
 
 
-def _list_workbooks(path: str) -> list[str]:
-    import glob as _glob
-    import os as _os
-
-    pattern = _os.path.join(path, "*.xlsx") if _os.path.isdir(path) else path
-    return sorted(_glob.glob(pattern)) or [path]
+def _read_args(options) -> dict:
+    """The ``read_excel`` keyword arguments the options carry."""
+    columns = [c.strip() for c in options.get("columns", "").split(",") if c.strip()]
+    return {
+        "sheet": options.get("sheet"),
+        "visible_only": _truthy(options.get("visible_only", "false")),
+        "bug_compat_1900": _truthy(options.get("bug_compat_1900", "false")),
+        "sanitize": _truthy(options.get("sanitize", "true")),
+        "keep_time": _truthy(options.get("keep_time", "false")),
+        "columns": tuple(columns) if columns else None,
+    }
 
 
 class XlsxDataSource(DataSource):
     """Format name ``xlsx``; options: ``sheet``, ``visible_only``,
-    ``bug_compat_1900``, ``keep_time``, ``sanitize`` (all mirroring
-    ``read_excel`` keyword arguments)."""
+    ``bug_compat_1900``, ``keep_time``, ``sanitize``, ``columns`` (all
+    mirroring ``read_excel`` keyword arguments; ``columns`` is a
+    comma-separated list)."""
 
     @classmethod
     def name(cls) -> str:
         return "xlsx"
 
     def schema(self) -> StructType:
-        from excel_to_database_spark.naming import sanitize_columns
-        from excel_to_database_spark.sources.excel_source import _header_of
-
         path = self.options.get("path")
         if not path:
             raise ValueError("xlsx datasource requires a path")
-        first = _list_workbooks(path)[0]
-        _, header, _ = _header_of(
-            first,
-            self.options.get("sheet"),
-            _truthy(self.options.get("visible_only", "false")),
-            _truthy(self.options.get("bug_compat_1900", "false")),
-        )
-        cols = (
-            sanitize_columns(header)
-            if _truthy(self.options.get("sanitize", "true"))
-            else [str(h) for h in header]
-        )
-        requested = self.options.get("columns")
-        if requested:
-            want = [c.strip() for c in requested.split(",") if c.strip()]
-            missing = [c for c in want if c not in cols]
-            if missing:
-                raise ValueError(f"columns {missing} not in sheet columns {cols}")
-            cols = want
-        return StructType([StructField(c, StringType()) for c in cols])
+        return excel_spec(path, **_read_args(self.options)).schema()
 
     def reader(self, schema: StructType) -> "XlsxReader":
         # Spark REFUSES a reader that implements pushFilters while
@@ -93,71 +88,27 @@ class XlsxReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
         self.options = options
+        self.spec = excel_spec(options["path"], **_read_args(options))
         self._pushed: list = []
 
     def partitions(self) -> list[InputPartition]:
         # one partition per workbook — the natural task granule for an
         # unsplittable zip container
-        return [InputPartition(p) for p in _list_workbooks(self.options["path"])]
+        return [InputPartition(p) for p in list_workbooks(self.options["path"])]
 
     def read(self, partition: InputPartition):
-        from excel_to_database_spark.naming import sanitize_columns
-        from excel_to_database_spark.sources.xlsx_core import WorkbookReader
-
         with open(partition.value, "rb") as f:
-            rdr = WorkbookReader(
-                f.read(),
-                _truthy(self.options.get("bug_compat_1900", "false")),
-                _truthy(self.options.get("keep_time", "false")),
-            )
-        sheet = self.options.get("sheet") or rdr.sheet_names()[0]
-        visible_only = _truthy(self.options.get("visible_only", "false"))
-        if self.options.get("columns"):
-            # column pruning: map this partition's header to raw sheet
-            # indices and decode only the schema's columns
-            header, raw_cols = rdr.sheet_columns(sheet, visible_only)
-            all_cols = (
-                sanitize_columns(header)
-                if _truthy(self.options.get("sanitize", "true"))
-                else [str(h) for h in header]
-            )
-            # the output row layout is exactly the schema: a field
-            # missing from THIS sheet's header (heterogeneous
-            # workbooks) yields "" at its slot, so width always
-            # matches the schema and a pushed filter on that field
-            # tests "" — the same value Catalyst would see post-scan.
-            # (Previously missing fields were silently dropped, which
-            # shifted every later slot: a pushed filter could test the
-            # wrong column, and the Arrow conversion could IndexError.)
-            sheet_pos = {
-                f.name: all_cols.index(f.name)
-                for f in self.schema.fields
-                if f.name in all_cols
-            }
-            positions = [sheet_pos.get(f.name) for f in self.schema.fields]
-            want_raw = {p for p in positions if p is not None}
-            n_full = len(all_cols)
-            matrix = rdr.read_sheet(
-                sheet, visible_only, want_cols={raw_cols[p] for p in want_raw}
-            )
-            name_to_out = {f.name: i for i, f in enumerate(self.schema.fields)}
-            checks = [
-                (name_to_out[c], v) for c, v in self._pushed if c in name_to_out
-            ]
-            for row in matrix[1:]:
-                padded = (row + [""] * n_full)[:n_full]
-                out = tuple(
-                    padded[p] if p is not None else "" for p in positions
-                )
-                if all(out[i] == v for i, v in checks):
-                    yield out
-            return
-        matrix = rdr.read_sheet(sheet, visible_only)
-        ncols = len(self.schema.fields)
+            rows = decode_workbook(f.read(), self.spec)
+        # the schema applies by position, as a user schema does on
+        # Spark's CSV reader with a header: slot i is the i-th header
+        # (or ``columns``) column, "" past the last; a pushed filter
+        # tests that slot — the value Catalyst would see
+        width = len(self.schema.fields)
+        pad = ("",) * (width - len(self.spec.out_cols))
         pos = {f.name: i for i, f in enumerate(self.schema.fields)}
-        checks = [(pos[c], v) for c, v in self._pushed if c in pos]
-        for row in matrix[1:]:
-            out = tuple((row + [""] * ncols)[:ncols])
+        checks = [(pos[c], v) for c, v in self._pushed]
+        for r in rows:
+            out = (r + pad)[:width]
             if all(out[i] == v for i, v in checks):
                 yield out
 

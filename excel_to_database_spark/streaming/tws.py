@@ -170,13 +170,15 @@ def ship_protobuf_to_workers(spark) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` needs the protobuf runtime for
-    its state-server protocol. With the vendored minimal runtime
-    (``ensure_protobuf``) the typed-state path now activates even in
-    environments without the protobuf distribution; a cluster install
-    of the real package always takes precedence."""
-    return ensure_protobuf()
+def enable_tws(spark) -> None:
+    """Session setup every ``transformWithStateInPandas`` query needs:
+    protobuf on the workers and the RocksDB state store provider."""
+    ship_protobuf_to_workers(spark)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
 
 
 def _prepared(events: DataFrame) -> DataFrame:
@@ -194,7 +196,7 @@ def _prepared(events: DataFrame) -> DataFrame:
 def user_stats_tws(events: DataFrame) -> DataFrame:
     """Streaming per-user stats through the typed-state API. Input
     needs (user_id, value, ts); ts is projected to epoch-µs so the
-    state row stays primitive-typed. Requires ``tws_available()``;
+    state row stays primitive-typed. Requires ``ensure_protobuf()``;
     the caller must enable the RocksDB state store provider."""
     return _prepared(events).groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=UserStatsProcessor(),
@@ -202,50 +204,6 @@ def user_stats_tws(events: DataFrame) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-
-
-def _fallback_update(key, batches, state):
-    n, mx, mts = state.get if state.exists else (0, float("-inf"), 0)
-    for pdf in batches:
-        n += len(pdf)
-        mx = max(mx, float(pdf["value"].max()))
-        mts = max(mts, int(pdf["ts_us"].max()))
-    state.update((n, mx, mts))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "max_value": [mx], "last_ts_us": [mts]}
-    )
-
-
-def user_stats_applyinpandas(events: DataFrame) -> DataFrame:
-    """The same fold through ``applyInPandasWithState`` (the Spark 3.x
-    stateful API, no extra dependency) — byte-identical output contract
-    to ``user_stats_tws``, used as the portable fallback."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return _prepared(events).groupBy("user_id").applyInPandasWithState(
-        _fallback_update,
-        outputStructType=USER_STATE_SCHEMA,
-        stateStructType=_STATE_SPEC,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def user_stats_auto(events: DataFrame) -> DataFrame:
-    """Typed-state operator when the runtime supports it, the
-    applyInPandasWithState twin otherwise. Both paths emit identical
-    rows (order-independent folds), so callers and oracles are
-    implementation-agnostic."""
-    if tws_available():
-        spark = events.sparkSession
-        ship_protobuf_to_workers(spark)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        return user_stats_tws(events)
-    return user_stats_applyinpandas(events)
 
 
 TOPK_SCHEMA = StructType(
@@ -293,7 +251,7 @@ class UserTopKProcessor(StatefulProcessor):
 
 def user_topk_tws(events: DataFrame, k: int = 3) -> DataFrame:
     """Streaming per-user top-k values via typed LIST state. Requires
-    ``tws_available()`` (the vendored protobuf runtime suffices) and
+    ``ensure_protobuf()`` (the vendored protobuf runtime suffices) and
     the RocksDB state store provider."""
     return _prepared(events).groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=UserTopKProcessor(k),
@@ -350,7 +308,7 @@ class UserTypeCountsProcessor(StatefulProcessor):
 
 def user_type_counts_tws(events: DataFrame) -> DataFrame:
     """Streaming per-(user, event_type) counts via typed MAP state.
-    Input needs (user_id, event_type). Requires ``tws_available()``
+    Input needs (user_id, event_type). Requires ``ensure_protobuf()``
     and the RocksDB state store provider."""
     return events.select("user_id", "event_type").groupBy(
         "user_id"
@@ -559,7 +517,7 @@ def user_event_sessions_tws(
     two open sessions into one, while an event AT or BELOW the
     watermark is dropped by the operator itself (Spark's
     transformWithState does no input late-filtering) — which is what
-    makes every emitted session FINAL. Requires ``tws_available()``
+    makes every emitted session FINAL. Requires ``ensure_protobuf()``
     and the RocksDB state store provider.
 
     The availableNow caveat on :func:`user_timer_markers_tws` does
@@ -651,10 +609,10 @@ def user_event_sessions_applyinpandas(
     events: DataFrame, gap_ms: int = 10_000, delay: str = "0 seconds"
 ) -> DataFrame:
     """Event-time gap sessions through ``applyInPandasWithState``
-    (GroupStateTimeout.EventTimeTimeout) — the portable fallback twin
-    of :func:`user_event_sessions_tws` with the same session contract:
-    emit-once on watermark passage, reopen/bridge for in-watermark
-    stragglers, drop-below-watermark finality."""
+    (GroupStateTimeout.EventTimeTimeout) — the portable twin of
+    :func:`user_event_sessions_tws` (registered as q165) with the same
+    session contract: emit-once on watermark passage, reopen/bridge for
+    in-watermark stragglers, drop-below-watermark finality."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -672,28 +630,9 @@ def user_event_sessions_applyinpandas(
     )
 
 
-def user_event_sessions_auto(
-    events: DataFrame, gap_ms: int = 10_000, delay: str = "0 seconds"
-) -> DataFrame:
-    """Typed-state event-time sessions when the runtime supports it,
-    the applyInPandasWithState twin otherwise (same emitted sessions;
-    only the firing boundary differs by at most the one-batch timer
-    lag both surfaces already share)."""
-    if tws_available():
-        spark = events.sparkSession
-        ship_protobuf_to_workers(spark)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        return user_event_sessions_tws(events, gap_ms=gap_ms, delay=delay)
-    return user_event_sessions_applyinpandas(events, gap_ms=gap_ms, delay=delay)
-
-
 def user_timer_markers_tws(events: DataFrame) -> DataFrame:
     """Streaming per-user timer markers via typed-state processing-time
-    timers (timeMode='ProcessingTime'). Requires ``tws_available()``
+    timers (timeMode='ProcessingTime'). Requires ``ensure_protobuf()``
     and the RocksDB state store provider.
 
     Caveat (Spark behavior, not this operator's): pending

@@ -44,6 +44,11 @@ def main() -> None:
         extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="etds_sp_wh_")},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    # StreamingQuery.recentProgress keeps only this many events: a
+    # replay with more micro-batches reports a truncated decomposition
+    progress_cap = int(
+        spark.conf.get("spark.sql.streaming.numRecentProgressUpdates", "100")
+    )
 
     for name in names:
         fn = QUERIES[name]
@@ -84,6 +89,7 @@ def main() -> None:
                 "rows": n,
                 "wall_s": round(wall, 3),
                 "n_batches": len(events),
+                "progress_truncated": len(events) >= progress_cap,
                 "trigger_s": round(trig, 3),
                 "shares_s": {k: round(v, 3) for k, v in totals.items()},
                 "in_trigger_unaccounted_s": round(trig - accounted, 3),

@@ -1,20 +1,9 @@
-"""Round-2 extension tests: typed-state streaming fold (and its
-fallback equivalence), incremental LSH matching, and the weighted
-sampling / winsorize invariants that the oracle hash alone doesn't
-spell out."""
+"""Round-2 extension tests: typed-state streaming fold, incremental
+LSH matching, and the weighted sampling / winsorize invariants that
+the oracle hash alone doesn't spell out."""
 
 import pyspark.sql.functions as F
 import pytest
-
-
-def test_tws_available_via_pbshim():
-    from excel_to_database_spark.streaming import tws
-
-    # with the vendored minimal protobuf runtime the typed-state path
-    # activates even without the protobuf distribution — auto() now
-    # always picks transformWithStateInPandas
-    assert tws.tws_available() is True
-    import google.protobuf  # noqa: F401  (importable after ensure)
 
 
 def test_pbshim_roundtrips_state_messages():
@@ -24,7 +13,10 @@ def test_pbshim_roundtrips_state_messages():
     oneofs, nested messages, repeated bytes, enums."""
     from excel_to_database_spark.streaming.tws import ensure_protobuf
 
-    assert ensure_protobuf()
+    # with the vendored minimal runtime the typed-state path activates
+    # even without the protobuf distribution
+    assert ensure_protobuf() is True
+    import google.protobuf  # noqa: F401  (importable after ensure)
     import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
 
     req = sm.StateRequest(

@@ -383,7 +383,10 @@ def test_xlsx_pruning_cell_touch_counts(monkeypatch):
     from pyspark.sql.types import StringType, StructField, StructType
 
     from excel_to_database_spark.sources import xlsx_core
-    from excel_to_database_spark.sources.excel_source import _decode_body
+    from excel_to_database_spark.sources.excel_source import (
+        ExcelSpec,
+        decode_workbook,
+    )
     from excel_to_database_spark.sources.xlsx_datasource import XlsxReader
 
     wb = build_xlsx({"S": [["a", "b", "c"], ["1", "x", "y"], ["2", "w", "z"]]})
@@ -396,12 +399,12 @@ def test_xlsx_pruning_cell_touch_counts(monkeypatch):
 
     monkeypatch.setattr(xlsx_core, "_cell_text", spy)
 
-    # the wrapper's executor-side decode (read_excel's mapInPandas body)
+    # the one kernel (read_excel's mapInPandas body)
     touched[0] = 0
-    full = _decode_body(wb, "S", False, False, False, False, None, [0, 1, 2], 3)
+    full = decode_workbook(wb, ExcelSpec(("a", "b", "c")))
     full_touch = touched[0]
     touched[0] = 0
-    pruned = _decode_body(wb, "S", False, False, False, False, {0}, [0], 3)
+    pruned = decode_workbook(wb, ExcelSpec(("a",)))
     pruned_touch = touched[0]
     assert [r[0] for r in pruned] == [r[0] for r in full] == ["1", "2"]
     assert pruned_touch < full_touch
@@ -428,6 +431,59 @@ def test_xlsx_pruning_cell_touch_counts(monkeypatch):
         rows_pruned, t_pruned = drive("a", ["a"])
         assert [r[0] for r in rows_pruned] == [r[0] for r in rows_full]
         assert t_pruned < t_full
+
+
+def test_pruned_read_opens_sheet_part_once(monkeypatch):
+    """The kernel probes the header row, then decodes the wanted
+    columns: both passes share one decompression of the sheet part,
+    on a pruned read and on a full one."""
+    import zipfile
+
+    from excel_to_database_spark.sources.excel_source import (
+        ExcelSpec,
+        decode_workbook,
+    )
+
+    wb = build_xlsx({"S": [["a", "b", "c"], ["1", "x", "y"], ["2", "w", "z"]]})
+    reads = []
+    real = zipfile.ZipFile.read
+
+    def spy(self, name, *args, **kwargs):
+        reads.append(name)
+        return real(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(zipfile.ZipFile, "read", spy)
+    rows = decode_workbook(wb, ExcelSpec(("c", "a")))
+    assert rows == [("y", "1"), ("z", "2")]
+    assert reads.count("xl/worksheets/sheet1.xml") == 1
+    reads.clear()
+    assert len(decode_workbook(wb, ExcelSpec(("a", "b", "c")))) == 2
+    assert reads.count("xl/worksheets/sheet1.xml") == 1
+
+
+def test_header_probe_parses_only_the_first_rows(monkeypatch):
+    """sheet_columns feeds the XML parser a small chunk at a time and
+    stops after the header row, so a probe's parse work does not grow
+    with the sheet (every workbook of a read is probed)."""
+    from xml.etree import ElementTree as ET
+
+    from excel_to_database_spark.sources.xlsx_core import WorkbookReader
+
+    rows = [["a", "b", "c"]] + [[f"v{i}", i, "w"] for i in range(2000)]
+    rdr = WorkbookReader(build_xlsx({"S": rows}))
+    fed = []
+    real = ET.XMLPullParser.feed
+
+    def spy(self, data):
+        fed.append(len(data))
+        return real(self, data)
+
+    monkeypatch.setattr(ET.XMLPullParser, "feed", spy)
+    assert rdr.sheet_columns("S")[0] == ["a", "b", "c"]
+    probe = sum(fed)
+    fed.clear()
+    assert len(rdr.read_sheet("S")) == 2001
+    assert probe <= 4096 < sum(fed) // 10
 
 
 def test_xlsx_datasource_heterogeneous_sheet_pushdown(spark, tmp_path):
@@ -469,3 +525,100 @@ def test_xlsx_datasource_heterogeneous_sheet_pushdown(spark, tmp_path):
     }
     # '' equality selects exactly the missing-column rows
     assert base.filter(F.col("b") == "").count() == 1
+
+
+def test_read_excel_heterogeneous_directory_maps_by_name(spark, tmp_path):
+    """Workbooks of one directory may order their columns differently
+    or lack some: both front ends map each workbook's own header to the
+    first workbook's columns BY NAME, and a missing column reads ''."""
+    from excel_to_database_spark.sources.xlsx_datasource import XlsxDataSource
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "a_full.xlsx").write_bytes(
+        build_xlsx({"S": [["a", "b", "c"], ["1", "x", "y"]]})
+    )
+    (d / "b_missing.xlsx").write_bytes(build_xlsx({"S": [["a", "c"], ["3", "z"]]}))
+    (d / "c_reordered.xlsx").write_bytes(
+        build_xlsx({"S": [["c", "a", "b"], ["y5", "5", "x5"]]})
+    )
+    want = {("1", "x", "y"), ("3", "", "z"), ("5", "x5", "y5")}
+
+    df = read_excel(spark, str(d))
+    assert df.columns == ["a", "b", "c"]
+    assert {tuple(r) for r in df.collect()} == want
+
+    spark.dataSource.register(XlsxDataSource)
+    ds = spark.read.format("xlsx").load(str(d))
+    assert ds.columns == ["a", "b", "c"]
+    assert {tuple(r) for r in ds.collect()} == want
+    # pruned reads map by name too
+    pruned = read_excel(spark, str(d), columns=["c", "a"])
+    assert {tuple(r) for r in pruned.collect()} == {
+        ("y", "1"), ("z", "3"), ("y5", "5")
+    }
+
+
+def test_decode_workbook_maps_duplicate_headers_in_order():
+    """With sanitize=False a header may repeat a name: the k-th output
+    column of that name takes the workbook's k-th column of that name."""
+    from excel_to_database_spark.sources.excel_source import (
+        ExcelSpec,
+        decode_workbook,
+    )
+
+    spec = ExcelSpec(("x", "x", "y"), sanitize=False)
+    same = build_xlsx({"S": [["x", "x", "y"], ["1", "2", "3"]]})
+    moved = build_xlsx({"S": [["y", "x", "z", "x"], ["3", "1", "-", "2"]]})
+    assert decode_workbook(same, spec) == [("1", "2", "3")]
+    assert decode_workbook(moved, spec) == [("1", "2", "3")]
+    # sanitized, the duplicate is renamed x_2 and matched by that name
+    spec = ExcelSpec(("x", "x_2", "y"))
+    assert decode_workbook(moved, spec) == [("1", "2", "3")]
+    # a name repeated past the header's copies reuses the last one
+    assert decode_workbook(same, ExcelSpec(("y", "y"))) == [("3", "3")]
+
+
+def test_header_names_do_not_depend_on_time_mode(spark, tmp_path):
+    """A date- or time-styled header cell names its column the same
+    way whatever the read's keep_time/times mode, so the probe's
+    columns match every workbook's own header and no column reads as
+    '' — through both front ends, over a directory of one header."""
+    from excel_to_database_spark.sources.xlsx_datasource import XlsxDataSource
+
+    d = tmp_path / "dated_header"
+    d.mkdir()
+    for i in (1, 2):
+        (d / f"w{i}.xlsx").write_bytes(
+            build_xlsx(
+                {"S": [["id", 45292.5, 0.25], [f"r{i}", f"v{i}", f"w{i}"]]},
+                date_styles={("S", 0, 1): 1, ("S", 0, 2): 4},
+            )
+        )
+    want = {("r1", "v1", "w1"), ("r2", "v2", "w2")}
+    base = read_excel(spark, str(d))
+    assert base.columns[0] == "id" and len(base.columns) == 3
+    for keep_time, times in [(True, False), (False, True), (True, True)]:
+        df = read_excel(spark, str(d), keep_time=keep_time, times=times)
+        assert df.columns == base.columns
+        assert {tuple(r) for r in df.collect()} == want
+
+    spark.dataSource.register(XlsxDataSource)
+    ds = spark.read.format("xlsx").option("keep_time", "true").load(str(d))
+    assert ds.columns == base.columns
+    assert {tuple(r) for r in ds.collect()} == want
+
+
+def test_xlsx_datasource_user_schema_applies_by_position(spark, tmp_path):
+    """A schema given with .schema(...) renames the header's columns by
+    position (as on Spark's CSV reader with a header); a field past the
+    header reads ''; a pushed filter tests the renamed slot."""
+    from excel_to_database_spark.sources.xlsx_datasource import XlsxDataSource
+
+    spark.dataSource.register(XlsxDataSource)
+    p = tmp_path / "s.xlsx"
+    p.write_bytes(build_xlsx({"S": [["a", "b"], ["1", "x"], ["2", "y"]]}))
+    df = spark.read.format("xlsx").schema("p string, q string, r string").load(str(p))
+    assert df.columns == ["p", "q", "r"]
+    assert {tuple(r) for r in df.collect()} == {("1", "x", ""), ("2", "y", "")}
+    assert [tuple(r) for r in df.filter(F.col("q") == "y").collect()] == [("2", "y", "")]
