@@ -1,4 +1,5 @@
-"""CSV ingestion: sniff → ``spark.read.csv`` → sanitized all-string frame.
+"""CSV ingestion: sniff → ``spark.read.csv`` → sanitized all-string frame,
+and the one sheet→frame builder for upload payloads.
 
 Reference semantics reproduced (SURVEY.md §2.1):
   * leading/trailing blank lines stripped before sniffing (data.py:33);
@@ -11,10 +12,20 @@ Scale notes: the sniff reads only a bounded sample via
 ``spark.read.text(...).limit(...)`` — the full file is scanned exactly
 once, by the distributed CSV reader, with Catalyst handling column
 pruning and (for typed reads) filter pushdown downstream.
+
+Payload sheets (xlsx matrices, CSV payload text, the legacy ``/submit``
+TSV or flat list) arrive in one request, are rectangularized on the
+driver and handed to the JVM by ``matrix_to_df`` as one Arrow stream:
+one ``string`` array per column in a ``pyarrow.Table``. Under
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+default) Spark plans it as a ``LocalTableScan``; above it, as an RDD of
+Arrow batches. Neither path starts a Python worker, so the sync's write
+job reads the rows straight from the JVM.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from excel_to_database_spark.naming import sanitize_columns
@@ -29,15 +40,17 @@ def _finalize(df: DataFrame, sanitize: bool) -> DataFrame:
 
 def matrix_to_df(spark: SparkSession, matrix: list[list[str]], sanitize: bool = True) -> DataFrame:
     """Pre-parsed sheet matrix (header row 0) → all-string DataFrame: the
-    one sheet→frame builder, for xlsx matrices and CSV payload text."""
+    one sheet→frame builder, for xlsx matrices and CSV payload text.
+    Rows may be lists or tuples."""
     if not matrix:
         raise ValueError("empty sheet matrix")
     header, body = matrix[0], matrix[1:]
     ncols = len(header)
     # rectangularize, mirroring the xlsx parser's trim/pad (xlsparser.js:189-214)
-    body = [[str(c) if c is not None else "" for c in (r + [""] * ncols)[:ncols]] for r in body]
+    body = [[str(c) if c is not None else "" for c in (list(r) + [""] * ncols)[:ncols]] for r in body]
     cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
-    return spark.createDataFrame(body, schema=", ".join(f"`{c}` string" for c in cols))
+    arrays = [pa.array([r[i] for r in body], pa.string()) for i in range(ncols)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=cols))
 
 
 def read_csv_path(
@@ -79,8 +92,12 @@ def read_csv_text(
     """Parse in-memory CSV text (the reference's upload-payload path,
     data.py:30-45) into an all-string DataFrame.
 
-    Payload sheets are small by construction (they arrived in one HTTP
-    request); parallelizing the lines is appropriate here and only here.
+    The text arrived in one HTTP request, so it is parsed on the driver
+    and reaches the JVM through ``matrix_to_df``'s Arrow hand-off: a
+    ``LocalTableScan`` below the 48 MiB
+    ``spark.sql.execution.arrow.localRelationThreshold``, an RDD of
+    Arrow batches above it. Files on storage go through
+    ``read_csv_path`` instead.
     """
     import csv as _csv
     import io as _io

@@ -140,9 +140,13 @@ class LocalDestination(Destination):
     def sync(self, df: DataFrame, table_name: str, path: str | None = None) -> LoadReport:
         spark = df.sparkSession
         schema = tenant_schema(path)
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
         fqtn = f"{schema}.{table_name}"
-        existing = spark.table(fqtn).columns if spark.catalog.tableExists(fqtn) else None
+        if spark.catalog.tableExists(fqtn):
+            existing = spark.table(fqtn).columns
+        else:
+            # an existing table implies its schema: only a new table may need one
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
+            existing = None
         action = decide_sync_action(existing, df.columns, strict=self.strict)
         df, obs = _counted(df)
         if action is SyncAction.TRUNCATE:

@@ -1,5 +1,7 @@
 import os
 
+from pyspark.sql.types import StringType, StructField, StructType
+
 from excel_to_database_spark.sources.csv_source import read_csv_path, read_csv_text
 from excel_to_database_spark.sources.payload import (
     load_legacy_submit,
@@ -39,6 +41,51 @@ def test_matrix_to_df(spark):
     df = matrix_to_df(spark, [["Col A", "Col A", "n"], ["1", "2", "3"], ["4", "5"]])
     assert df.columns == ["ColA", "ColA_2", "n"]
     assert df.count() == 2
+
+
+def _strings(*names):
+    return StructType([StructField(n, StringType(), True) for n in names])
+
+
+def test_matrix_to_df_cells_rows_and_headers(spark):
+    """Cells become ``str(c)`` (``None`` → ``""``), rows are padded or
+    trimmed to the header width, and every column is a nullable string."""
+    df = matrix_to_df(spark, [["a", "b c", "d"], [1.0, True, None], ["x"], ["1", "2", "3", "4"]])
+    assert df.schema == _strings("a", "bc", "d")
+    assert [tuple(r) for r in df.collect()] == [
+        ("1.0", "True", ""),
+        ("x", "", ""),
+        ("1", "2", "3"),
+    ]
+    # header-only sheet: zero rows of the same schema
+    empty = matrix_to_df(spark, [["a", "b c"]])
+    assert empty.schema == _strings("a", "bc")
+    assert empty.collect() == []
+    # sanitize=False keeps duplicate headers as they are
+    dup = matrix_to_df(spark, [["x", "x", 3], ["1", "2", "3"]], sanitize=False)
+    assert dup.schema == _strings("x", "x", "3")
+    assert [tuple(r) for r in dup.collect()] == [("1", "2", "3")]
+
+
+def test_matrix_to_df_accepts_tuple_rows(spark):
+    df = matrix_to_df(spark, [("a", "b"), ("1",), ("2", "3", "4")])
+    assert df.schema == _strings("a", "b")
+    assert [tuple(r) for r in df.collect()] == [("1", ""), ("2", "3")]
+
+
+def test_payload_frames_plan_as_local_table_scan(spark):
+    """Every payload entry point hands its sheet to the JVM as Arrow
+    data: the frame plans as a LocalTableScan, not a scan of a pickled
+    Python RDD."""
+    frames = [
+        *load_workbook_payload(spark, {"data": {"m": [["h1", "h2"], ["a", "b"]]}}).values(),
+        *load_workbook_payload(spark, {"data": {"c": "p;q\n1;2"}, "type": "csv"}).values(),
+        *load_legacy_submit(spark, {"name": "t", "data": "a\tb\n1\t2"}).values(),
+        *load_legacy_submit(spark, {"name": "f", "columns": 2, "data": ["h1", "h2", "a", "b"]}).values(),
+    ]
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_payload_dispatch_xlsx_and_csv(spark):

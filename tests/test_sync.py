@@ -128,6 +128,21 @@ def test_local_sync_is_one_job(spark):
     assert spark.table("x_excel_jobs.t_jobs").collect()[0].asDict() == {"a": "7", "c": "8"}
 
 
+def test_schema_ddl_only_for_a_new_table(spark, monkeypatch):
+    """The first CREATE into a new tenant creates its schema; a sync into
+    an existing table (TRUNCATE or RECREATE) issues no schema DDL."""
+    issued = []
+    sql = spark.sql
+    monkeypatch.setattr(spark, "sql", lambda q, *a, **k: issued.append(q) or sql(q, *a, **k))
+    dest = LocalDestination()
+    assert dest.sync(matrix_to_df(spark, [["a"], ["1"]]), "t_ddl", "ddlnew").action == "Created"
+    assert issued == ["CREATE DATABASE IF NOT EXISTS x_excel_ddlnew"]
+    issued.clear()
+    assert dest.sync(matrix_to_df(spark, [["a"], ["2"]]), "t_ddl", "ddlnew").action == "Truncated"
+    assert dest.sync(matrix_to_df(spark, [["b"], ["3"]]), "t_ddl", "ddlnew").action == "Recreated"
+    assert not any("DATABASE" in q for q in issued), issued
+
+
 @pytest.mark.parametrize("fmt", ["parquet", "csv"])
 def test_header_only_sheet_reports_zero_records(spark, fmt):
     dest = LocalDestination(fmt=fmt)
