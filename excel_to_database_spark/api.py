@@ -5,12 +5,23 @@
 posts (``{"data": {sheet: matrix|csv_text}, "type": "xlsx"|"csv"}``),
 loads each sheet, syncs it through the destination policy, and returns
 the reference's response shape: per-sheet messages on success
-(home.py:36-44), ``{"error": str(e)}`` on failure (home.py:45-48)."""
+(home.py:36-44), ``{"error": str(e)}`` on failure (home.py:45-48).
+
+Each sheet writes its own table, so one request syncs its sheets
+concurrently (``concurrency.overlap_builds``); the messages keep the
+payload's sheet order. A failure differs from the reference, which
+stops at the first failing sheet: every sheet is attempted, the sheets
+that load stay loaded, and ``error`` carries the error of the first
+failing sheet in payload order. ``SPARK_GRAFT_OVERLAP=0`` syncs the
+sheets one after another under the same contract."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import SparkSession
 
+from excel_to_database_spark.operators.concurrency import overlap_builds
 from excel_to_database_spark.sources.payload import (
     load_legacy_submit,
     load_workbook_payload,
@@ -28,11 +39,10 @@ def upload(
     ``{"messages": [...]}`` or ``{"error": "..."}``."""
     try:
         sheets = load_workbook_payload(spark, payload)
-        messages = [
-            sync_table(df, table_name, destination, path).message()
-            for table_name, df in sheets.items()
-        ]
-        return {"messages": messages}
+        reports = overlap_builds(
+            *[partial(sync_table, df, table_name, destination, path) for table_name, df in sheets.items()]
+        )
+        return {"messages": [r.message() for r in reports]}
     except Exception as e:  # reference behavior: any failure → error body
         return {"error": str(e)}
 

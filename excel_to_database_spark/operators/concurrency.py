@@ -1,26 +1,26 @@
-"""Overlap independent driver-blocking build jobs (guide §2.6).
+"""Overlap independent driver-blocking Spark jobs (guide §2.6).
 
-Several operators materialize an intermediate with a driver-blocking
-action before the final plan can be assembled — the rank primitives'
-bounded cell-count read (`selection.global_rank` /
-`_group_rank_build`), eager `localCheckpoint` pins. When ONE query
-needs TWO such builds that do not depend on each other (q217's
-lexical and vector towers), running them sequentially leaves the
-cluster idle through each job's scheduling latency and straggler
-tail. Spark's scheduler happily runs several jobs at once inside one
+Spark's scheduler happily runs several jobs at once inside one
 application; actions are only sequential because driver code calls
-them sequentially — submitting the independent builds from a small
-thread pool lets the second job's tasks back-fill executors freed by
-the first job's tail (FIFO scheduling is exactly the back-fill
-behaviour wanted here).
+them sequentially. Two callers submit independent work from a small
+thread pool instead:
 
-Only for builds that are INDEPENDENT (neither reads the other's
-output) and whose shared inputs are already materialized (an eager
+* q217's lexical and vector towers: each materializes an intermediate
+  with a driver-blocking action (the rank primitives' bounded
+  cell-count read, eager `localCheckpoint` pins) before the final plan
+  can be assembled. Overlapping them lets the second job's tasks
+  back-fill executors freed by the first job's tail (FIFO scheduling
+  is exactly the back-fill behaviour wanted here).
+* `api.upload`: each sheet of one request syncs into its own table, so
+  a multi-sheet request runs its per-sheet syncs concurrently.
+
+Only for work that is INDEPENDENT (neither reads the other's output)
+and whose shared inputs are already materialized (an eager
 checkpoint/persisted blocks): overlapping two thunks that would race
 to compute the SAME lazy subtree duplicates that work instead — pin
 the shared frame first (the q205 discipline) or keep them sequential.
 
-`SPARK_GRAFT_OVERLAP=0` disables the pool (sequential fallback) — the
+`SPARK_GRAFT_OVERLAP=0` disables the pool (sequential execution) — the
 deployment knob for clusters where concurrent jobs would fight for
 executors, and the A/B switch the round-16 measurements used.
 """
@@ -32,22 +32,45 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
+from pyspark import SparkContext
+from pyspark.util import inheritable_thread_target
+
 
 def overlap_builds(*thunks: Callable[[], Any]) -> list:
-    """Run the given zero-arg build thunks, overlapping their Spark
-    jobs via a thread pool (one thread per thunk — callers pass 2-3
-    independent builds, enough to fill the tail, not so many that they
-    fight for executors). Returns their results in argument order;
-    the first failing thunk's exception propagates (loudly — a build
-    that silently vanished would corrupt the consumer's plan).
+    """Run the given zero-arg thunks, overlapping their Spark jobs via a
+    thread pool of ``min(len(thunks), defaultParallelism)`` threads:
+    q217 passes its 2 tower builds, ``api.upload`` one sync per sheet,
+    and a workbook may carry dozens of sheets — more threads than cores
+    would only queue more tasks. Returns their results in argument
+    order. Every thunk runs to completion, pooled or sequential; the
+    first failing thunk in argument order then raises its exception
+    (loudly — a build that silently vanished would corrupt the
+    consumer's plan), so ``SPARK_GRAFT_OVERLAP`` changes only timing.
+
+    Each pooled thunk runs under the caller's Spark local properties
+    (``inheritable_thread_target``, one copy per thunk), so its jobs
+    carry the caller's job group and description.
 
     Results are unchanged by construction: each thunk builds exactly
-    the frame it would have built sequentially; only the wall-clock
-    interleaving of the build JOBS differs. Python threads share the
+    what it would have built sequentially; only the wall-clock
+    interleaving of the JOBS differs. Python threads share the
     SparkSession safely (py4j multiplexes; job-scoped properties are
     thread-local)."""
+
+    def settle(th: Callable[[], Any]) -> tuple[Any, Exception | None]:
+        try:
+            return th(), None
+        except Exception as e:
+            return None, e
+
     if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
-        return [th() for th in thunks]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(th) for th in thunks]
-        return [f.result() for f in futures]
+        outcomes = [settle(th) for th in thunks]
+    else:
+        workers = min(len(thunks), SparkContext._active_spark_context.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = [pool.submit(settle, inheritable_thread_target(th)) for th in thunks]
+            outcomes = [f.result() for f in futures]
+    for _, err in outcomes:
+        if err is not None:
+            raise err
+    return [result for result, _ in outcomes]

@@ -27,16 +27,19 @@ Sink mapping (reference → Spark):
 
 At scale the load path is executor-parallel end-to-end: Spark writes N
 partitions concurrently (JDBC: N connections; cloud: N staged objects →
-one COPY), the driver only issues DDL.
+one COPY), the driver only issues DDL. A payload sheet's N follows its
+bytes (``csv_source.matrix_to_df``): a small sheet is one partition.
 """
 
 from __future__ import annotations
 
 import glob
+import threading
 from contextlib import closing
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation
 
 from excel_to_database_spark.report import LoadReport
@@ -54,6 +57,9 @@ def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     ``obs.get["n"]`` is the record count, taken in the load's own job."""
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+_METADATA_LOOKUP = threading.Lock()
 
 
 class _Jdbc:
@@ -84,28 +90,43 @@ class _Jdbc:
     def execute(self, sql: str) -> None:
         self.conn.createStatement().execute(sql)
 
-    def _lists(self, rs, **names: str) -> bool:
-        """Whether metadata result ``rs`` has a row with exactly these
-        names (``_`` is a wildcard in the lookup's pattern)."""
-        found = False
-        while not found and rs.next():
-            found = all(rs.getString(k) == v for k, v in names.items())
-        rs.close()
+    def _lists(self, lookup: str, *args, **names: str) -> bool:
+        """Whether ``DatabaseMetaData.<lookup>(*args)`` returns a row
+        with exactly these names (``_`` is a wildcard in the lookup's
+        pattern). One lookup at a time per process: after another
+        sheet's DDL invalidates Derby's stored metadata statement, two
+        connections recompiling it at once deadlock (undetected; the
+        lookup fails after Derby's 60 s lock timeout)."""
+        with _METADATA_LOOKUP:
+            rs = getattr(self.conn.getMetaData(), lookup)(*args)
+            found = False
+            while not found and rs.next():
+                found = all(rs.getString(k) == v for k, v in names.items())
+            rs.close()
         return found
 
     def ensure_schema(self, schema: str) -> None:
         """CREATE SCHEMA when ``getSchemas`` does not list it (reference:
-        data.py:116, :175-177, :231); a DDL error raises."""
+        data.py:116, :175-177, :231). A failed CREATE that leaves the
+        schema listed lost a race to a concurrent sheet sync and passes;
+        any other DDL error raises."""
         schema = self.fold(schema)
-        if not self._lists(self.conn.getMetaData().getSchemas(None, schema), TABLE_SCHEM=schema):
-            self.execute(f"CREATE SCHEMA {schema}")
+
+        def listed() -> bool:
+            return self._lists("getSchemas", None, schema, TABLE_SCHEM=schema)
+
+        if not listed():
+            try:
+                self.execute(f"CREATE SCHEMA {schema}")
+            except Py4JJavaError:
+                if not listed():
+                    raise
 
     def columns(self, fqtn: str) -> list[str] | None:
         """The table's columns, or None when ``getTables`` does not list
         it (→ CREATE). Any failure of the probe itself raises."""
         schema, table = map(self.fold, fqtn.split("."))
-        found = self.conn.getMetaData().getTables(None, schema, table, None)
-        if not self._lists(found, TABLE_SCHEM=schema, TABLE_NAME=table):
+        if not self._lists("getTables", None, schema, table, None, TABLE_SCHEM=schema, TABLE_NAME=table):
             return None
         rs = self.conn.createStatement().executeQuery(f"SELECT * FROM {fqtn} WHERE 1=0")
         meta = rs.getMetaData()

@@ -153,6 +153,33 @@ def test_failed_probe_raises_and_keeps_the_table(spark, dest, monkeypatch):
     assert sorted(map(tuple, _read(spark, dest, fqtn).collect())) == [("1", "x"), ("2", "y")]
 
 
+def test_ensure_schema_passes_a_lost_create_race(spark, dest):
+    """Another connection creates the schema between this connection's
+    getSchemas probe and its CREATE SCHEMA (another sheet of the same
+    request, or another process): the failed CREATE passes because the
+    schema is now listed. A CREATE refused for another reason raises."""
+    from contextlib import closing
+
+    from py4j.protocol import Py4JJavaError
+
+    with closing(sinks._Jdbc(spark, dest.url, dest.properties)) as ours, closing(
+        sinks._Jdbc(spark, dest.url, dest.properties)
+    ) as theirs:
+        create = ours.execute
+
+        def lose_the_race(sql):
+            theirs.execute(sql)
+            create(sql)
+
+        ours.execute = lose_the_race
+        ours.ensure_schema("x_excel_lostrace")
+        assert theirs._lists("getSchemas", None, "X_EXCEL_LOSTRACE", TABLE_SCHEM="X_EXCEL_LOSTRACE")
+
+        ours.execute = create
+        with pytest.raises(Py4JJavaError, match="42939"):  # Derby reserves SYS* schema names
+            ours.ensure_schema("sys_excel_lostrace")
+
+
 def test_jdbc_source_partitioned_read_with_pushdown(spark, tmp_path):
     """The warehouse→Spark direction: a numeric-range partitioned JDBC
     read plans one stripe per partition (parallel ingest, not one
@@ -190,3 +217,41 @@ def test_jdbc_source_partitioned_read_with_pushdown(spark, tmp_path):
     )
     assert df2.rdd.getNumPartitions() == 8
     assert df2.count() == 100
+
+
+def _upload_three_sheets(spark, dest, tenant):
+    """A 3-sheet upload into a new tenant: the sheets race to create
+    the tenant's schema, and each must still be Created and load."""
+    from excel_to_database_spark.api import upload
+
+    data = {f"sheet{i}": [["k", "v"]] + [[str(r), f"s{i}"] for r in range(i + 2)] for i in range(3)}
+    out = upload(spark, {"data": data}, dest, path=tenant)
+    schema = f"x_excel_{tenant}"
+    assert out == {
+        "messages": [
+            f"Created and loaded into {schema}.sheet{i}\n{i + 2} records" for i in range(3)
+        ]
+    }
+    return [f"{schema}.sheet{i}" for i in range(3)]
+
+
+def test_multi_sheet_upload_into_new_tenant_jdbc(spark, dest):
+    for i, fqtn in enumerate(_upload_three_sheets(spark, dest, "derbymulti")):
+        rows = _read(spark, dest, fqtn).collect()
+        assert sorted(map(tuple, rows)) == [(str(r), f"s{i}") for r in range(i + 2)]
+    # re-upload: the sheets' catalog probes follow each other's TRUNCATEs
+    from excel_to_database_spark.api import upload
+
+    data = {f"sheet{i}": [["v", "k"], [f"t{i}", "0"]] for i in range(3)}
+    out = upload(spark, {"data": data}, dest, path="derbymulti")
+    assert out == {
+        "messages": [f"Truncated and loaded into x_excel_derbymulti.sheet{i}\n1 records" for i in range(3)]
+    }
+
+
+def test_multi_sheet_upload_into_new_tenant_cloud_copy(spark, tmp_path):
+    dest = _derby_copy(tmp_path)
+    url_dest = JdbcDestination(url=dest.jdbc_url, properties=DRIVER)
+    for i, fqtn in enumerate(_upload_three_sheets(spark, dest, "copymulti")):
+        rows = _read(spark, url_dest, fqtn).collect()
+        assert sorted(map(tuple, rows)) == [(str(r), f"s{i}") for r in range(i + 2)]

@@ -298,26 +298,46 @@ def test_rollup_incremental_refresh(spark, sf_dir):
     assert a == b
 
 
-def test_overlap_builds_order_fallback_and_errors(monkeypatch):
+def test_overlap_builds_order_fallback_and_errors(spark, monkeypatch):
     """operators/concurrency.overlap_builds (guide §2.6): results come
     back in argument order, the SPARK_GRAFT_OVERLAP=0 switch falls
     back to sequential execution with identical results, and a failing
-    thunk propagates loudly instead of vanishing."""
+    thunk propagates loudly instead of vanishing — in both modes after
+    every thunk ran, as the first failure in argument order."""
     import pytest
 
     from excel_to_database_spark.operators.concurrency import overlap_builds
 
-    assert overlap_builds(lambda: 1) == [1]
-    assert overlap_builds(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "0")
-    assert overlap_builds(lambda: "a", lambda: "b") == ["a", "b"]
-    monkeypatch.delenv("SPARK_GRAFT_OVERLAP")
+    def boom(msg):
+        def thunk():
+            raise ValueError(msg)
 
-    def boom():
-        raise ValueError("build failed")
+        return thunk
 
-    with pytest.raises(ValueError, match="build failed"):
-        overlap_builds(lambda: 1, boom)
+    for overlap in ("1", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_OVERLAP", overlap)
+        assert overlap_builds(lambda: 1) == [1]
+        assert overlap_builds(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+        ran = []
+        with pytest.raises(ValueError, match="first failed"):
+            overlap_builds(lambda: 1, boom("first failed"), boom("second failed"), lambda: ran.append(4))
+        assert ran == [4]
+
+
+def test_overlap_builds_jobs_carry_the_callers_group(spark):
+    """Jobs issued inside overlap_builds' worker threads carry the
+    caller's job group, so a per-query or per-sync group sees them."""
+    from excel_to_database_spark.operators.concurrency import overlap_builds
+
+    sc = spark.sparkContext
+    sc.setJobGroup("overlap_group", "overlap test")
+    try:
+        counts = overlap_builds(lambda: spark.range(10).count(), lambda: spark.range(20).count())
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert counts == [10, 20]
+    assert len(sc.statusTracker().getJobIdsForGroup("overlap_group")) >= 2
 
 
 def test_shingles_from_words_matches_shingles(spark):

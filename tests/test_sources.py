@@ -88,6 +88,57 @@ def test_payload_frames_plan_as_local_table_scan(spark):
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
+def _partitions(df):
+    return df._jdf.rdd().getNumPartitions()
+
+
+def test_small_payload_sheet_plans_one_partition(spark):
+    """A payload sheet far below the per-partition byte target is one
+    partition, narrowed from the scan's defaultParallelism without a
+    shuffle."""
+    matrix = [["a", "b", "c", "d"]] + [[f"v{r}_{c}" for c in range(4)] for r in range(50)]
+    df = matrix_to_df(spark, matrix)
+    assert _partitions(df) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "Exchange" not in plan, plan
+    assert df.count() == 50
+
+
+def test_large_payload_sheet_fans_out_by_bytes(spark):
+    """A sheet above the byte target gets one partition per started
+    target, never more than defaultParallelism."""
+    from excel_to_database_spark.sources.csv_source import _PARTITION_BYTES
+
+    cores = spark.sparkContext.defaultParallelism
+    cell = "x" * 1000
+
+    def sheet(targets):
+        rows = int(targets * _PARTITION_BYTES / (4 * len(cell)))
+        return rows, matrix_to_df(spark, [["a", "b", "c", "d"]] + [[cell] * 4] * rows)
+
+    for targets, want in ((2.5, min(3, cores)), (cores + 1.5, cores)):
+        rows, df = sheet(targets)
+        assert _partitions(df) == want, (targets, _partitions(df))
+        assert df.count() == rows
+    # above the local-relation threshold the scan runs one partition per
+    # Arrow batch (here 15); the frame still runs at most defaultParallelism
+    conf = {
+        "spark.sql.execution.arrow.localRelationThreshold": "0",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "100",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        rows, df = sheet(cores + 1.5)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert "LocalTableScan" not in plan, plan
+    assert _partitions(df) == cores and df.count() == rows
+
+
 def test_payload_dispatch_xlsx_and_csv(spark):
     out = load_workbook_payload(
         spark,

@@ -168,3 +168,60 @@ def test_partitioned_truncate_lands_values_by_name(spark):
     got = spark.table("x_excel_parttrunc.t_part")
     assert got.columns == ["id", "amt", "region"]
     assert sorted(tuple(row) for row in got.collect()) == [("3", "30", "us"), ("4", "40", "ap")]
+
+
+def test_small_sheet_sync_writes_one_file(spark):
+    """A small sheet is one partition, so its sync writes one data file
+    in its one job."""
+    dest = LocalDestination()
+    matrix = [["a", "b"]] + [[str(r), f"v{r}"] for r in range(50)]
+    df = matrix_to_df(spark, matrix)
+    assert _job_count(spark, "local_one_file", lambda: dest.sync(df, "t_files", "files")) == 1
+    table = spark.table("x_excel_files.t_files")
+    assert len(table.inputFiles()) == 1 and table.count() == 50
+
+
+def test_multi_sheet_upload_keeps_payload_order(spark):
+    """Six sheets sync concurrently on local[4]; the messages come back
+    in payload order and every table holds its rows."""
+    from excel_to_database_spark.api import upload
+
+    names = [f"s{i}" for i in range(6)]
+    data = {n: [["k", "v"]] + [[str(r), n] for r in range(i + 1)] for i, n in enumerate(names)}
+    out = upload(spark, {"data": data}, path="sixsheets")
+    assert out == {
+        "messages": [
+            f"Created and loaded into x_excel_sixsheets.{n}\n{i + 1} records"
+            for i, n in enumerate(names)
+        ]
+    }
+    for i, n in enumerate(names):
+        rows = spark.table(f"x_excel_sixsheets.{n}").collect()
+        assert sorted((r["k"], r["v"]) for r in rows) == [(str(r), n) for r in range(i + 1)]
+
+
+@pytest.mark.parametrize("overlap", ["1", "0"])
+def test_multi_sheet_upload_reports_first_failure_and_loads_the_rest(spark, monkeypatch, overlap):
+    """Every sheet of a request is attempted, concurrently or (with
+    SPARK_GRAFT_OVERLAP=0) one after another: the middle sheet reorders
+    an existing table's columns under strict mode and fails, its error
+    is the response, and the first and last sheets are loaded."""
+    from excel_to_database_spark.api import upload
+
+    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", overlap)
+    path = f"strictmulti{overlap}"
+    dest = LocalDestination(strict=True)
+    dest.sync(matrix_to_df(spark, [["a", "b"], ["1", "2"]]), "mid", path)
+    payload = {
+        "data": {
+            "first": [["x"], ["1"], ["2"]],
+            "mid": [["b", "a"], ["3", "4"]],
+            "last": [["y"], ["5"]],
+        }
+    }
+    out = upload(spark, payload, dest, path=path)
+    assert set(out) == {"error"}
+    assert "column order changed" in out["error"] and "strict mode" in out["error"]
+    assert spark.table(f"x_excel_{path}.first").count() == 2
+    assert spark.table(f"x_excel_{path}.last").collect()[0]["y"] == "5"
+    assert spark.table(f"x_excel_{path}.mid").collect()[0].asDict() == {"a": "1", "b": "2"}
