@@ -12,8 +12,7 @@ concurrently (``concurrency.overlap_builds``); the messages keep the
 payload's sheet order. A failure differs from the reference, which
 stops at the first failing sheet: every sheet is attempted, the sheets
 that load stay loaded, and ``error`` carries the error of the first
-failing sheet in payload order. ``SPARK_GRAFT_OVERLAP=0`` syncs the
-sheets one after another under the same contract."""
+failing sheet in payload order."""
 
 from __future__ import annotations
 

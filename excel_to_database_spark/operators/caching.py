@@ -1,22 +1,30 @@
-"""Cache-lifetime registry for operator-internal persists.
+"""The one owner of materialized intermediates: every persist and
+checkpoint in the package goes through this module, and
+:func:`evict_caches` releases them all. Two kinds, one lifetime:
 
-Several operators pin intermediates (shingle inverted indexes, banded
-LSH signatures, IVF assignments) because the frame feeds 2-3 consumers
-inside one query plan. Those persists previously accumulated across a
-long session running many queries; this registry makes the lifetime
-explicit: operators register what they pin, callers (or a session-level
-sweep) call :func:`evict_caches` after the consuming action.
+* :func:`pin` persists MEMORY_AND_DISK — the recomputable kind, for a
+  frame that feeds 2-3 consumers inside one plan (shingle inverted
+  indexes, banded LSH signatures, IVF assignments). Reading a
+  released pin recomputes it.
+* :func:`checkpoint` local-checkpoints — the lineage cut, for a frame
+  computed exactly once (frozen range boundaries, loop iterates, a
+  frame outliving the files it was read from). Reading a released
+  checkpoint raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+
+Both stay registered until their owner releases them: a loop with
+:func:`unpin` once the successor iterate has materialized, a
+construction through :func:`pinned`, a long-lived session with
+:func:`evict_caches` after each query's action (bench, scale_slope,
+and the query sweep all do).
 
 The registry holds STRONG references, deliberately: Spark's JVM-side
 CacheManager pins the cached blocks until ``unpersist`` is called —
 letting the Python handle be garbage-collected would not free a single
 block, it would only make the cache impossible to evict (measured: the
 round-6 weakref experiment leaked the JVM cache across bench reps and
-inflated the q76 scale slope 4×). So the registry IS the lifetime:
-long-lived sessions call :func:`evict_caches` after each query (bench,
-scale_slope, and the query sweep all do); the held handles are the
-eviction capability, bounded by pins-per-query × queries-since-evict.
-The list is lock-guarded for concurrent query threads.
+inflated the q76 scale slope 4×), and an unregistered checkpoint's
+blocks wait for a JVM GC that need not come. The list is lock-guarded
+for concurrent query threads.
 """
 
 from __future__ import annotations
@@ -26,8 +34,24 @@ import threading
 
 from pyspark.sql import DataFrame
 
-_ACTIVE: list[DataFrame] = []
+# (frame, is_checkpoint) — the kind decides how the frame is released
+_ACTIVE: list[tuple[DataFrame, bool]] = []
 _LOCK = threading.Lock()
+
+
+def _register(df: DataFrame, is_checkpoint: bool) -> DataFrame:
+    with _LOCK:
+        _ACTIVE.append((df, is_checkpoint))
+    return df
+
+
+def _release(df: DataFrame, is_checkpoint: bool) -> None:
+    if is_checkpoint:
+        # the checkpointed blocks belong to the RDD under the frame's
+        # LogicalRDD leaf, not to the SQL cache (blocking=False)
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    else:
+        df.unpersist()
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -35,17 +59,23 @@ def pin(df: DataFrame) -> DataFrame:
     :func:`evict_caches`. Returns the persisted frame."""
     from pyspark.storagelevel import StorageLevel
 
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    with _LOCK:
-        _ACTIVE.append(out)
-    return out
+    return _register(df.persist(StorageLevel.MEMORY_AND_DISK), False)
+
+
+def checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered for :func:`unpin` and
+    :func:`evict_caches`. ``eager=False`` defers materialization to the
+    first job over the frame. Returns the checkpointed frame."""
+    return _register(df.localCheckpoint(eager=eager), True)
 
 
 def unpin(df: DataFrame) -> None:
-    """Deregister and unpersist one frame :func:`pin` returned."""
+    """Deregister and release one frame :func:`pin` or
+    :func:`checkpoint` returned."""
     with _LOCK:
-        _ACTIVE[:] = [d for d in _ACTIVE if d is not df]
-    df.unpersist()
+        kinds = [k for d, k in _ACTIVE if d is df]
+        _ACTIVE[:] = [e for e in _ACTIVE if e[0] is not df]
+    _release(df, any(kinds))
 
 
 @contextlib.contextmanager
@@ -54,14 +84,16 @@ def pinned(df: DataFrame, keep: bool = False):
     against it every level; without a persist each pass re-executes
     the upstream projection over the full input — round-12: q183
     re-ran its corpus tokenization ~6×). Yields the pinned frame. A
-    frame the caller already cached is yielded as-is and never
-    released here. Any error releases the pin, so a failed
-    construction leaves no registered pin behind; on success it is
-    released too, unless ``keep`` — a lazily returned result still
-    reads the pinned blocks, and the session-level evict sweep owns
-    the pin from then on."""
+    frame that is already materialized — cached by the caller, or a
+    registered checkpoint — is yielded as-is and never released here.
+    Any error releases the pin, so a failed construction leaves no
+    registered pin behind; on success it is released too, unless
+    ``keep`` — a lazily returned result still reads the pinned blocks,
+    and the session-level evict sweep owns the pin from then on."""
     lvl = df.storageLevel
-    if lvl.useMemory or lvl.useDisk:
+    with _LOCK:
+        registered = any(d is df for d, _ in _ACTIVE)
+    if lvl.useMemory or lvl.useDisk or registered:
         yield df
         return
     out = pin(df)
@@ -75,15 +107,16 @@ def pinned(df: DataFrame, keep: bool = False):
 
 
 def evict_caches() -> int:
-    """Unpersist every operator-pinned cache registered since the last
+    """Release every pin and checkpoint registered since the last
     eviction (blocking=False — Spark frees the blocks asynchronously).
-    Returns the number of frames evicted. Safe to call at any time;
-    in-flight queries that still reference an evicted frame simply
-    recompute it."""
+    Returns the number of frames released. Call it after the consuming
+    action: an in-flight query that still references an evicted pin
+    simply recomputes it, but one that reads an evicted checkpoint
+    fails."""
     with _LOCK:
         frames, _ACTIVE[:] = _ACTIVE[:], []
-    for df in frames:
-        df.unpersist()
+    for df, is_checkpoint in frames:
+        _release(df, is_checkpoint)
     return len(frames)
 
 

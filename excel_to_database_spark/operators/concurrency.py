@@ -19,15 +19,10 @@ and whose shared inputs are already materialized (an eager
 checkpoint/persisted blocks): overlapping two thunks that would race
 to compute the SAME lazy subtree duplicates that work instead — pin
 the shared frame first (the q205 discipline) or keep them sequential.
-
-`SPARK_GRAFT_OVERLAP=0` disables the pool (sequential execution) — the
-deployment knob for clusters where concurrent jobs would fight for
-executors, and the A/B switch the round-16 measurements used.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
@@ -42,10 +37,10 @@ def overlap_builds(*thunks: Callable[[], Any]) -> list:
     q217 passes its 2 tower builds, ``api.upload`` one sync per sheet,
     and a workbook may carry dozens of sheets — more threads than cores
     would only queue more tasks. Returns their results in argument
-    order. Every thunk runs to completion, pooled or sequential; the
-    first failing thunk in argument order then raises its exception
-    (loudly — a build that silently vanished would corrupt the
-    consumer's plan), so ``SPARK_GRAFT_OVERLAP`` changes only timing.
+    order. A single thunk runs inline. Every thunk runs to completion;
+    the first failing thunk in argument order then raises its
+    exception (loudly — a build that silently vanished would corrupt
+    the consumer's plan).
 
     Each pooled thunk runs under the caller's Spark local properties
     (``inheritable_thread_target``, one copy per thunk), so its jobs
@@ -63,7 +58,7 @@ def overlap_builds(*thunks: Callable[[], Any]) -> list:
         except Exception as e:
             return None, e
 
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
+    if len(thunks) == 1:
         outcomes = [settle(th) for th in thunks]
     else:
         workers = min(len(thunks), SparkContext._active_spark_context.defaultParallelism)

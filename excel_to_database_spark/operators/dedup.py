@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from excel_to_database_spark.operators.caching import pin
+from excel_to_database_spark.operators.caching import checkpoint, pin, unpin
 from excel_to_database_spark.operators.text import spread, words
 from excel_to_database_spark.operators.io_util import maybe_read_parquet as _maybe_read_parquet
 
@@ -1043,23 +1043,27 @@ def connected_components(
     race two concurrent computations of the possibly-expensive pair
     pipeline behind ``pairs``; one eager job pins it exactly once.
     Every later lineage reads stored checkpoint blocks only, where a
-    duplicate concurrent compute is a cheap local re-read."""
-    edges = (
+    duplicate concurrent compute is a cheap local re-read. A round's
+    count also supersedes the previous label frame and the edge list
+    before the one it materialized, so each is released there: the
+    loop holds at most two iterates of each."""
+    edges = checkpoint(
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .unionByName(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
+        .distinct(),
         # materialized once: every propagation round joins the edge
         # list, and without the eager checkpoint round 1's two stage
         # trees would each re-execute the (potentially expensive)
         # pair-generation pipeline behind ``pairs``
-        .localCheckpoint(eager=True)
+        eager=True,
     )
-    labels = (
+    labels = held_labels = checkpoint(
         edges.select(F.col("src").alias("doc"))
         .distinct()
-        .withColumn("label", F.col("doc"))
-        .localCheckpoint(eager=False)
+        .withColumn("label", F.col("doc")),
+        eager=False,
     )
+    held_edges = [edges]
     for _ in range(max_iter):
         # shuffle-hash, not sort-merge: the probe side is the full
         # edge list and a SMJ would re-SORT it every round (the
@@ -1081,18 +1085,22 @@ def connected_components(
         hop = labels.select(
             F.col("doc").alias("mid_label"), F.col("label").alias("hop_label")
         )
-        updated = (
-            stepped.join(hop, "mid_label", "left")
-            .select(
+        updated = checkpoint(
+            stepped.join(hop, "mid_label", "left").select(
                 "doc",
                 F.least(
                     F.col("mid_label"), F.coalesce("hop_label", F.col("mid_label"))
                 ).alias("new_label"),
                 "label",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         changed = updated.filter(F.col("new_label") < F.col("label")).count()
+        # the count materialized ``updated`` and this round's edge list
+        unpin(held_labels)
+        while len(held_edges) > 1:
+            unpin(held_edges.pop(0))
+        held_labels = updated
         labels = updated.select("doc", F.col("new_label").alias("label"))
         if changed == 0:
             break
@@ -1102,16 +1110,20 @@ def connected_components(
         # reason as the propagation join above.
         la = labels.select(F.col("doc").alias("src"), F.col("label").alias("src_l"))
         lb = labels.select(F.col("doc").alias("dst"), F.col("label").alias("dst_l"))
-        edges = (
+        edges = checkpoint(
             edges.join(la.hint("shuffle_hash"), "src")
             .join(lb.hint("shuffle_hash"), "dst")
             .select(F.col("src_l").alias("src"), F.col("dst_l").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
+            .distinct(),
             # lazy: the NEXT round's convergence count materializes the
             # contracted list (and on the final round it is never built)
-            .localCheckpoint(eager=False)
+            eager=False,
         )
+        held_edges.append(edges)
+    # the returned labels read only ``updated``'s blocks
+    for e in held_edges:
+        unpin(e)
     return labels.select("doc", F.col("label").alias("cluster"))
 
 
@@ -1140,22 +1152,24 @@ def transitive_closure(
     ``pairs`` never re-executes per level; each level's step frame is
     checkpointed lazily with the emptiness probe (a driver-side count,
     never a data collect) as its materializing action — one job per
-    level. Levels are O(diameter) capped at ``max_depth`` (each level
+    level. Each level's step stays registered until the caller's
+    ``evict_caches``: the returned union reads every one of them.
+    Levels are O(diameter) capped at ``max_depth`` (each level
     joins the frontier against the STATIC edge list, extending reach
     one hop per level — max_depth=8 covers 9-edge paths); a
     frontier-against-visited join would double paths per level
     (O(log diameter)) at the cost of a growing join target —
     ``connected_components`` is the pointer-jumping variant that takes
     that trade."""
-    sym = (
+    sym = checkpoint(
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .unionByName(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
+        .distinct(),
         # eager ON PURPOSE (round-16 fold review): level 1 references
         # sym THREE times (frontier, edge list, anti-join target) in
         # one job — a lazy checkpoint would race three concurrent
         # stage computations of the expensive pair pipeline behind it
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     visited = sym
     frontier = sym
@@ -1175,12 +1189,16 @@ def transitive_closure(
             .select(F.col("f_src").alias("src"), F.col("s_dst").alias("dst"))
             .distinct()
         )
-        step = grown.join(
-            v,
-            (grown["src"] == v["v_src"]) & (grown["dst"] == v["v_dst"]),
-            "left_anti",
-        ).localCheckpoint(eager=False)
+        step = checkpoint(
+            grown.join(
+                v,
+                (grown["src"] == v["v_src"]) & (grown["dst"] == v["v_dst"]),
+                "left_anti",
+            ),
+            eager=False,
+        )
         if step.count() == 0:
+            unpin(step)  # empty, and not part of the result
             break
         visited = visited.unionByName(step)
         frontier = step
@@ -1441,17 +1459,17 @@ def dedup_cluster_update(
     lab = new0 if labels is None else labels.unionByName(new0)
     la = lab.select(F.col("doc").alias("doc_a"), F.col("label").alias("la"))
     lb = lab.select(F.col("doc").alias("doc_b"), F.col("label").alias("lb"))
-    lpairs_df = (
+    lpairs_df = checkpoint(
         pairs.select("doc_a", "doc_b")
         .join(la, "doc_a")
         .join(lb, "doc_b")
         .select("la", "lb")
         .filter(F.col("la") != F.col("lb"))
-        .distinct()
+        .distinct(),
         # both the routing probe and the chosen path consume this —
         # without the checkpoint the (possibly expensive) pair
         # pipeline would re-execute per consumer
-        .localCheckpoint(eager=True)
+        eager=True,
     )
     over_cap = lpairs_df.limit(frontier_cap + 1).count() > frontier_cap
 
@@ -1465,15 +1483,14 @@ def dedup_cluster_update(
                 )
             )
         cc = connected_components(graph, "la", "lb")
-        new_canon = (
-            cc.filter(F.col("doc") != F.col("cluster"))
-            .select(
+        new_canon = checkpoint(
+            cc.filter(F.col("doc") != F.col("cluster")).select(
                 F.col("doc").alias("label"), F.col("cluster").alias("canon")
-            )
+            ),
             # lineage through connected_components is already cut by
             # its per-round checkpoints; this one guarantees the
             # overwrite below never reads the files it replaces
-            .localCheckpoint(eager=True)
+            eager=True,
         )
         new_canon.write.mode("overwrite").parquet(f"{path}/canon")
         forest = spark.read.parquet(f"{path}/canon")

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.caching import checkpoint
+
 
 def epoch_day(ts: Column | str) -> Column:
     """Calendar day as an epoch-day integer (engine-portable: DuckDB
@@ -61,21 +63,19 @@ def funnel_times(
     checkpoint also means stage i+1's join reads stage i's blocks,
     never its lineage."""
     frames: list[DataFrame] = []
-    cur = (
-        events.filter(F.col(type_col) == stages[0])
-        .groupBy(key)
-        .agg(F.min(ts).alias("t_0"))
-        .localCheckpoint(eager=True)
+    cur = checkpoint(
+        events.filter(F.col(type_col) == stages[0]).groupBy(key).agg(F.min(ts).alias("t_0")),
+        eager=True,
     )
     frames.append(cur)
     for i, stage in enumerate(stages[1:], start=1):
-        cur = (
+        cur = checkpoint(
             events.filter(F.col(type_col) == stage)
             .join(cur.select(key, f"t_{i - 1}"), key)
             .filter(F.col(ts) > F.col(f"t_{i - 1}"))
             .groupBy(key)
-            .agg(F.min(ts).alias(f"t_{i}"))
-            .localCheckpoint(eager=True)
+            .agg(F.min(ts).alias(f"t_{i}")),
+            eager=True,
         )
         frames.append(cur)
     return frames

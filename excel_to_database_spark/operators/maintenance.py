@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.caching import checkpoint, unpin
+
 
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
@@ -142,17 +144,16 @@ def dedup_cluster_compact(
     if canon is None:
         return out
     rows_before = canon.count()
-    folded = (
-        canon.groupBy("label")
-        .agg(F.min("canon").alias("canon"))
-        # cut lineage so the overwrite never reads the files it replaces
-        .localCheckpoint(eager=True)
-    )
-    rows_after = folded.count()
-    if rows_after < rows_before or _n_files(spark, f"{path}/canon") > target_files:
-        folded.coalesce(target_files).write.mode("overwrite").parquet(
-            f"{path}/canon"
-        )
-        spark.catalog.refreshByPath(f"{path}/canon")
+    # cut lineage so the overwrite never reads the files it replaces
+    folded = checkpoint(canon.groupBy("label").agg(F.min("canon").alias("canon")), eager=True)
+    try:
+        rows_after = folded.count()
+        if rows_after < rows_before or _n_files(spark, f"{path}/canon") > target_files:
+            folded.coalesce(target_files).write.mode("overwrite").parquet(
+                f"{path}/canon"
+            )
+            spark.catalog.refreshByPath(f"{path}/canon")
+    finally:
+        unpin(folded)
     out["canon"] = {"rows_before": rows_before, "rows_after": rows_after}
     return out

@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from excel_to_database_spark.operators.caching import pinned
+from excel_to_database_spark.operators.caching import checkpoint, pin, pinned
 
 _FANOUT = 4096
 
@@ -402,9 +402,9 @@ def global_rank(
          (correctly: recomputation would re-draw the boundaries) and
          the caller re-runs; on a cluster with a configured reliable
          checkpoint dir, swap in ``checkpoint()`` to survive executor
-         loss at the cost of a filesystem round-trip. Blocks are
-         freed when the plan handle is GC'd (deep_evict's GC cycle),
-         not by ``evict_caches``;
+         loss at the cost of a filesystem round-trip. The checkpoint
+         is registered with ``caching``: ``evict_caches`` after the
+         consuming action frees its blocks;
       3. count rows per partition and prefix-sum on the DRIVER — a
          ≤|partitions|-row bounded meta read (the histogram-read
          discipline: the driver sees counts, never data rows);
@@ -423,9 +423,12 @@ def global_rank(
     # over the checkpointed RDD, so materialization folds into it —
     # one fixed job per build instead of two (see _group_rank_build
     # for the full argument and the round-16 A/B numbers)
-    ranged = df.repartitionByRange(F.col(value_col), F.col(id_col)).withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)
+    ranged = checkpoint(
+        df.repartitionByRange(F.col(value_col), F.col(id_col)).withColumn(
+            "__pid", F.spark_partition_id()
+        ),
+        eager=False,
+    )
     counts = sorted(
         (r["__pid"], r["n"])
         for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -469,8 +472,6 @@ def spearman_rho(
     reference documents scan before, 1.0× after; guide §2.3/§5 — the
     first build's range-shuffle map stage computes the signals once
     and persists them, the second build reads the cached blocks)."""
-    from excel_to_database_spark.operators.caching import pin
-
     base = pin(df.select(id_col, col_a, col_b))
     ra = global_rank(base.select(id_col, col_a), col_a, id_col, "ra").select(
         id_col, "ra"
@@ -526,7 +527,7 @@ def _group_rank_build(
          bounds re-execution, not re-planning; same non-reliable-
          blocks tradeoff as documented there: executor loss fails
          the job rather than silently re-drawing boundaries, and
-         blocks free on GC, not evict_caches);
+         ``evict_caches`` frees the blocks);
       3. ONE count aggregation to the ≤(P+G)-row cell table, read on
          the driver (counts, never data rows; ``_MAX_META_ROWS``
          rejects loudly if the group key is too wide for the
@@ -578,9 +579,12 @@ def _group_rank_build(
     # stage computes — and stores — every partition). Interleaved A/B
     # at sf0.1 (paired medians, 4 reps each): q208 4.15→3.89 s,
     # q167 2.80→2.43 s. Same non-reliable-blocks tradeoff as before.
-    ranged = df.repartitionByRange(
-        F.col(group_col), vcol, F.col(id_col)
-    ).withColumn("__pid", F.spark_partition_id()).localCheckpoint(eager=False)
+    ranged = checkpoint(
+        df.repartitionByRange(F.col(group_col), vcol, F.col(id_col)).withColumn(
+            "__pid", F.spark_partition_id()
+        ),
+        eager=False,
+    )
     # bounded: ≤ partitions + groups − 1 rows (contiguity argument).
     # The limit bounds what the driver MATERIALIZES before the
     # guard fires — a high-cardinality group key must reject loudly,

@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from excel_to_database_spark.operators.caching import pin
+from excel_to_database_spark.operators.caching import checkpoint, pin, pinned, unpin
 from pyspark.sql.window import Window
 
 def cosine_topk(
@@ -1150,20 +1150,20 @@ def ivf_assign_converged(
     scanned twice from cache (refine + SSE probe) and only
     n_cells × dim partial sums shuffle; the tiny centroid frame is
     localCheckpoint-ed so its lineage stays one sweep deep. Returns
-    (centroids, assignments, sse_history)."""
-    from excel_to_database_spark.operators.caching import pin
-
+    (centroids, assignments, sse_history). A sweep's refined centroids
+    supersede the previous ones, which are released once they land."""
     base = pin(emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")))
-    cents = (
+    cents = checkpoint(
         base.orderBy(F.asc("id"))
         .limit(n_lists)
-        .select(F.col("id").alias("cell"), F.col("v").alias("cv"))
-        .localCheckpoint(eager=True)
+        .select(F.col("id").alias("cell"), F.col("v").alias("cv")),
+        eager=True,
     )
     assigned = _ivf_nearest_cell(base, cents)
     history = [ivf_sse(cents, assigned)]
     for _ in range(max_sweeps):
-        cents = ivf_refine(cents, assigned).localCheckpoint(eager=True)
+        stale, cents = cents, checkpoint(ivf_refine(cents, assigned), eager=True)
+        unpin(stale)
         assigned = _ivf_nearest_cell(base, cents)
         history.append(ivf_sse(cents, assigned))
         prev, cur = history[-2], history[-1]
@@ -1326,8 +1326,6 @@ def ann_ivf_pq(
         )
     else:
         cents, assigned = ivf_assign(emb, id_col, vec_col, n_lists, sweeps=sweeps)
-    from excel_to_database_spark.operators.caching import pin
-
     assigned = pin(assigned)  # probed by queries AND scanned as candidates
     codes = product_quantize(emb, id_col, vec_col, m, pq_k, dim).select(
         F.col("id").alias("nid"), "codes"
@@ -2708,7 +2706,6 @@ def embedding_robust_stats(
     literals. The id column never leaves the source scan (guide §2.3:
     project before everything). Returns
     ``(dim, n, median_q, mad_q, n_outliers)``."""
-    from excel_to_database_spark.operators.caching import pinned
     from excel_to_database_spark.operators.selection import (
         _group_bounds,
         _grouped_descend,

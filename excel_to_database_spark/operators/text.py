@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.caching import checkpoint, pin, pinned, unpin
+
 # BPE-ish token pattern: letter runs, digit runs, single punctuation
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -39,6 +41,21 @@ def spread(df):
 def words(text: Column) -> Column:
     """Whitespace tokens of lower-cased text."""
     return F.split(F.lower(F.trim(text)), r"\s+")
+
+
+def staged_words(df, id_col: str, text_col: str, *extras):
+    """The tokenize-and-pin pass of every operator whose token stream
+    fans out to several plan branches: ``(doc, *extras, w)`` with ``w``
+    the :func:`words` of ``text_col``, spread across the cluster and
+    EAGERLY checkpointed, so each branch re-reads the blocks instead of
+    re-scanning and re-splitting the source (round-16: 2-7 documents
+    FileScans per plan unpinned, 1 after)."""
+    return checkpoint(
+        spread(df).select(
+            F.col(id_col).alias("doc"), *extras, words(F.col(text_col)).alias("w")
+        ),
+        eager=True,
+    )
 
 
 def token_count_ws(text: Column) -> Column:
@@ -227,22 +244,14 @@ def tfidf_top_terms(
     (``ln`` is only ~1-ulp reproducible), which is what the oracle
     uses.
 
-    The tokenized (doc, words) frame is pinned by an EAGER
-    localCheckpoint (round-16): it feeds the term explode AND the
+    The :func:`staged_words` frame feeds the term explode AND the
     corpus-size aggregate — which MUST count every document including
-    token-less ones, so it cannot derive from the tf table (the
-    semantic point the round-16 checklist recorded); counting docs on
-    the pinned frame keeps that semantics at zero extra scans
-    (3 documents FileScans before, 1 after)."""
+    token-less ones, so it cannot derive from the tf table."""
     from pyspark.sql import DataFrame as _DF  # noqa: F401
     from pyspark.sql.window import Window
 
-    staged = (
-        spread(df)
-        .select(F.col(id_col).alias("doc"), words(F.col(text_col)).alias("__w"))
-        .localCheckpoint(eager=True)
-    )
-    tok = staged.select("doc", F.explode("__w").alias("term"))
+    staged = staged_words(df, id_col, text_col)
+    tok = staged.select("doc", F.explode("w").alias("term"))
     tf = tok.groupBy("doc", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # corpus size as a one-row broadcast frame, not a driver count() —
@@ -437,25 +446,17 @@ def bigram_lm_fluency(
     (production-only; not oracle-checked — libm log2 is not guaranteed
     correctly rounded across engines).
 
-    Scale shape: the tokenized (doc, words) frame is pinned by an
-    EAGER localCheckpoint before it fans out (round-16) — it feeds
-    THREE independent plan branches (the bigram-count aggregate, the
-    vocabulary-size aggregate, and the per-occurrence probe side of
-    the scoring join), and unpinned each branch re-scanned the source
-    and re-split the text: the fixed plan-node audit showed 4
-    documents FileScans in q159's plan and runtime bytes read were
-    2.0× one reference scan (the bm25/q213 single-scan discipline;
-    post-pin both read 1.0×). The LM itself is two hash aggregates
+    Scale shape: the :func:`staged_words` frame feeds THREE plan
+    branches (the bigram-count aggregate, the vocabulary-size
+    aggregate, and the per-occurrence probe side of the scoring join;
+    unpinned, q159's plan held 4 documents FileScans). The LM itself
+    is two hash aggregates
     (bigram counts, then prefix counts from the bigram table — never
     another corpus pass); probabilities attach per distinct BIGRAM
     TYPE before the one join back to occurrences, so per-occurrence
     work is a single equi-join probe. Vocabulary size joins as a
     broadcast 1-row frame (no driver-side action)."""
-    staged = (
-        spread(df)
-        .select(F.col(id_col).alias("doc"), words(F.col(text_col)).alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    staged = staged_words(df, id_col, text_col)
     return bigram_lm_fluency_from_words(staged, "doc", "w", log_space=log_space)
 
 
@@ -527,18 +528,10 @@ def bigram_novelty(df, id_col: str, text_col: str):
     with many docs; high = unusual phrasing). Integer-exact end to end
     (distinct counts and a ratio of counts), so the score is
     oracle-reproducible. Two shuffles: bigram docfreq, then the
-    per-doc aggregate. The tokenized (doc, words) frame is pinned by
-    an EAGER localCheckpoint (round-16): its gram explode feeds BOTH
-    the docfreq aggregate and the probe side of the docfreq join, and
-    unpinned each branch re-scanned + re-tokenized the source (2
-    documents FileScans in q141's plan, 2.0× runtime bytes; 1.0×
-    post-pin — the bm25/q213 single-scan discipline; the re-explode
-    from pinned blocks is CPU-only, no I/O)."""
-    staged = (
-        spread(df)
-        .select(F.col(id_col).alias("doc"), words(F.col(text_col)).alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    per-doc aggregate. The :func:`staged_words` frame's gram explode
+    feeds BOTH the docfreq aggregate and the probe side of the docfreq
+    join (the re-explode from pinned blocks is CPU-only, no I/O)."""
+    staged = staged_words(df, id_col, text_col)
     return bigram_novelty_from_words(staged, "doc", "w")
 
 
@@ -814,27 +807,17 @@ def dsir_importance(
     the mean-ratio form keeps the same ordering signal while staying
     transcendental-free, so the score itself is value-checkable).
 
-    Returns (doc, n_words, score). Scale shape (round-16): the
-    tokenized (doc, tgt, words) frame is pinned by an EAGER
-    localCheckpoint — pre-pin, the corpus/target bucket tables, the
-    totals row, and the per-word probe each re-scanned the source (4
-    documents FileScans, 3.4× runtime bytes; 1.0× post-pin) — and
-    BOTH distributions plus both totals come from ONE Σ-words
-    hash-aggregate: cb = count per bucket, tb = count_if(tgt) per
-    bucket in the same pass (a bucket with no target hits yields
-    tb = 0, exactly what the old left-join's coalesce produced), and
+    Returns (doc, n_words, score). Scale shape: the bucket tables,
+    the totals row and the per-word probe all read the
+    :func:`staged_words` frame (doc, tgt, w), and BOTH distributions
+    plus both totals come from ONE Σ-words hash-aggregate: cb = count
+    per bucket, tb = count_if(tgt) per bucket in the same pass (a
+    bucket with no target hits yields tb = 0, exactly what the old
+    left-join's coalesce produced), and
     (c_total, t_total) are sums OVER the ≤``buckets``-row table, not
     another corpus pass. One bounded broadcast table, one probe join,
     the final per-doc mean — nothing pairwise, nothing driver-side."""
-    staged = (
-        spread(df)
-        .select(
-            F.col(id_col).alias("doc"),
-            is_target.alias("tgt"),
-            words(F.col(text_col)).alias("w"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    staged = staged_words(df, id_col, text_col, is_target.alias("tgt"))
     toks = (
         staged.select("doc", "tgt", F.explode("w").alias("w"))
         .filter(F.col("w") != "")
@@ -1549,11 +1532,14 @@ def padding_efficiency(df, id_col: str, len_col: str, batch_size: int = 8, n_sha
     # policy windows — unpinned each policy re-scanned the source and
     # re-ran the (regex-heavy) length expression (2 FileScans in
     # q189's plan, 1 after)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(len_col).cast("bigint").alias("tok"),
-        shard.alias("shard"),
-    ).localCheckpoint(eager=True)
+    base = checkpoint(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.col(len_col).cast("bigint").alias("tok"),
+            shard.alias("shard"),
+        ),
+        eager=True,
+    )
     outs = []
     for policy, order in (
         ("arrival", [F.col("id").asc()]),
@@ -1880,8 +1866,6 @@ def bpe_train_merges(df, id_col: str, text_col: str, n_merges: int = 8):
     realistic merge counts (hundreds to tens of thousands) use
     :func:`bpe_train_merges_local` — identical trajectory, one corpus
     scan, driver-local merge loop over the capped dictionary."""
-    from excel_to_database_spark.operators.caching import pin
-
     wrapped = F.regexp_replace(
         F.replace(
             F.replace(F.col("__w"), F.lit(BPE_SEP), F.lit("")),
@@ -1891,45 +1875,57 @@ def bpe_train_merges(df, id_col: str, text_col: str, n_merges: int = 8):
         "(.)",
         BPE_SEP + "$1" + BPE_END,
     )
-    state = pin(
-        df.select(F.explode(words(F.col(text_col))).alias("__w"))
-        .groupBy("__w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .select(wrapped.alias("s"), "w")
+    syms = F.filter(
+        F.split(F.replace(F.col("s"), F.lit(BPE_END), F.lit("")), BPE_SEP),
+        lambda x: x != "",
     )
-    learned = []
-    for r in range(1, n_merges + 1):
-        syms = F.filter(
-            F.split(F.replace(F.col("s"), F.lit(BPE_END), F.lit("")), BPE_SEP),
-            lambda x: x != "",
-        )
-        # size >= 2 guard: Spark's sequence(1, 0) DESCENDS ([1, 0])
-        # rather than producing an empty range (the hashed-ngram lesson)
-        prs = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.concat(
-                    F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
-                ),
+    # size >= 2 guard: Spark's sequence(1, 0) DESCENDS ([1, 0])
+    # rather than producing an empty range (the hashed-ngram lesson)
+    prs = F.when(
+        F.size(syms) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(syms) - 1),
+            lambda i: F.concat(
+                F.element_at(syms, i), F.lit(" "), F.element_at(syms, i + 1)
             ),
-        ).otherwise(F.array().cast("array<string>"))
-        counts = (
-            state.select(F.explode(prs).alias("pair"), "w")
-            .groupBy("pair")
-            .agg(F.sum("w").cast("bigint").alias("cnt"))
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    # the live state, and its predecessor until the live one is read
+    held = [
+        pin(
+            df.select(F.explode(words(F.col(text_col))).alias("__w"))
+            .groupBy("__w")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
+            .select(wrapped.alias("s"), "w")
         )
-        top = counts.orderBy(F.desc("cnt"), F.asc("pair")).limit(1).collect()
-        if not top:  # pairs exhausted — nothing left to merge
-            break
-        pair, cnt = top[0]["pair"], int(top[0]["cnt"])
-        learned.append((r, pair, cnt))
-        if r < n_merges:
-            a, b = pair.split(" ", 1)
-            pat = F.lit(BPE_SEP + a + BPE_END + BPE_SEP + b + BPE_END)
-            rep = F.lit(BPE_SEP + a + b + BPE_END)
-            folded = F.replace(F.col("s"), pat, rep)
-            state = pin(state.select(folded.alias("s"), "w"))
+    ]
+    learned = []
+    try:
+        for r in range(1, n_merges + 1):
+            counts = (
+                held[-1]
+                .select(F.explode(prs).alias("pair"), "w")
+                .groupBy("pair")
+                .agg(F.sum("w").cast("bigint").alias("cnt"))
+            )
+            top = counts.orderBy(F.desc("cnt"), F.asc("pair")).limit(1).collect()
+            # the collect materialized the live state: its predecessor
+            # is superseded
+            while len(held) > 1:
+                unpin(held.pop(0))
+            if not top:  # pairs exhausted — nothing left to merge
+                break
+            pair, cnt = top[0]["pair"], int(top[0]["cnt"])
+            learned.append((r, pair, cnt))
+            if r < n_merges:
+                a, b = pair.split(" ", 1)
+                pat = F.lit(BPE_SEP + a + BPE_END + BPE_SEP + b + BPE_END)
+                rep = F.lit(BPE_SEP + a + b + BPE_END)
+                folded = F.replace(F.col("s"), pat, rep)
+                held.append(pin(held[-1].select(folded.alias("s"), "w")))
+    finally:
+        for f in held:
+            unpin(f)
     return df.sparkSession.createDataFrame(
         learned, "rank bigint, pair string, cnt bigint"
     )
@@ -1968,24 +1964,20 @@ def bpe_train_merges_local(
     pair ASC) with the pair space-joined — identical to the Spark
     path's ORDER BY and the q206 oracle. Returns the same
     ``(rank, pair, cnt)`` frame."""
-    from excel_to_database_spark.operators.caching import pin
-
-    vocab = pin(
+    with pinned(
         df.select(F.explode(words(F.col(text_col))).alias("__w"))
         .groupBy("__w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    )
-    n_vocab = vocab.count()
-    if n_vocab > max_vocab_rows:
-        vocab.unpersist()
-        raise ValueError(
-            f"distinct-word dictionary has {n_vocab} rows "
-            f"(> max_vocab_rows={max_vocab_rows}) — too wide for the "
-            "driver-local merge loop; raise the cap deliberately or use "
-            "the per-round Spark path (bpe_train_merges)"
-        )
-    rows = vocab.collect()
-    vocab.unpersist()
+    ) as vocab:
+        n_vocab = vocab.count()
+        if n_vocab > max_vocab_rows:
+            raise ValueError(
+                f"distinct-word dictionary has {n_vocab} rows "
+                f"(> max_vocab_rows={max_vocab_rows}) — too wide for the "
+                "driver-local merge loop; raise the cap deliberately or use "
+                "the per-round Spark path (bpe_train_merges)"
+            )
+        rows = vocab.collect()
     state = [
         (list(w.replace(BPE_SEP, "").replace(BPE_END, "")), int(freq))
         for w, freq in rows
@@ -2104,14 +2096,10 @@ def bm25_scores(
     (convention 7), and the per-doc score the FIXED-ORDER sum of the
     per-term doubles (identical expression tree in SQL, so bit-equal).
 
-    Scale shape: ONE corpus scan — the tokenized frame (id, dl, words)
-    is pinned by an EAGER localCheckpoint before it fans out to its
-    three consumers (the tf explode, the N/L aggregate, and the
-    (id, dl) join side), so each branch re-reads the pinned blocks,
-    never the source (the q213 single-scan discipline; pre-pin the
-    executed plan held 4 source FileScans and runtime bytes-read was
-    2.0× one scan — round-15 advisor finding). The pin costs one
-    linear materialization of ≈corpus-sized blocks to executor-local
+    Scale shape: ONE corpus scan — the :func:`staged_words` frame
+    (doc, dl, w) feeds three consumers (the tf explode, the N/L
+    aggregate, and the (doc, dl) join side). The pin costs one linear
+    materialization of ≈corpus-sized blocks to executor-local
     storage, no shuffle; term tf is filtered to the ≤|terms| literal
     set BEFORE any shuffle (the explode output for non-query terms
     never leaves the map side), df/N/L ride two 1-row broadcast
@@ -2120,24 +2108,20 @@ def bm25_scores(
         raise ValueError("terms must name at least one query term")
     if len(set(terms)) != len(terms):
         raise ValueError(f"duplicate query terms: {terms!r}")
-    base = (
-        spread(df)
-        .select(
-            F.col(id_col).alias("id"),
-            token_count_ws(F.col(text_col)).cast("bigint").alias("dl"),
-            words(F.col(text_col)).alias("__w"),
-        )
-        .localCheckpoint(eager=True)
+    base = staged_words(
+        df, id_col, text_col, token_count_ws(F.col(text_col)).cast("bigint").alias("dl")
     )
     tf_raw = (
-        base.select("id", F.explode("__w").alias("w"))
+        base.select("doc", F.explode("w").alias("w"))
         .filter(F.col("w").isin(list(terms)))
-        .groupBy("id", "w")
+        .groupBy("doc", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
-    tf = tf_raw.groupBy("id").pivot("w", list(terms)).sum("tf")
+    # the group key stays out of the term namespace: a pivot column is
+    # named by its term, and "doc" is a term a query may ask for
+    tf = tf_raw.groupBy(F.col("doc").alias("__doc")).pivot("w", list(terms)).sum("tf")
     tf = tf.select(
-        "id", *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"tf_{t}") for t in terms]
+        F.col("__doc").alias("doc"), *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"tf_{t}") for t in terms]
     )
     # conditional counts, not a pivot: a global agg over an EMPTY
     # (doc, term) frame still returns one all-zero row, so a query
@@ -2154,8 +2138,8 @@ def bm25_scores(
         F.sum("dl").cast("bigint").alias("total_tokens"),
     )
     scored = (
-        base.select("id", "dl")
-        .join(tf, "id", "left")
+        base.select("doc", "dl")
+        .join(tf, "doc", "left")
         .crossJoin(F.broadcast(df_row))
         .crossJoin(F.broadcast(nl))
     )
@@ -2181,7 +2165,7 @@ def bm25_scores(
     for t in terms[1:]:
         score = score + term_score(t)
     return scored.select(
-        F.col("id"),
+        F.col("doc").alias("id"),
         "dl",
         *[F.coalesce(F.col(f"tf_{t}"), F.lit(0)).cast("bigint").alias(f"tf_{t}") for t in terms],
         score.alias("score"),

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.caching import checkpoint, pin
 from excel_to_database_spark.queries.base import dsum, query, sql_dsum, t
 
 # ---------------------------------------------------------------------------
@@ -293,9 +294,10 @@ def q134_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned (round-16): the |sources|-row aggregate feeds both the
     # totals row and the final projection — unpinned the corpus
     # aggregation ran twice (2 documents FileScans in the plan)
-    tok = d.groupBy("source").agg(
-        F.sum(F.expr("(n_chars + 3) div 4")).alias("avail")
-    ).localCheckpoint(eager=True)
+    tok = checkpoint(
+        d.groupBy("source").agg(F.sum(F.expr("(n_chars + 3) div 4")).alias("avail")),
+        eager=True,
+    )
     tot = tok.agg(
         F.sum("avail").alias("total"), F.count(F.lit(1)).alias("n_src")
     )
@@ -536,8 +538,6 @@ def q133_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership = d.select(F.col("doc_id").alias("doc"), in_corpus.alias("in_corpus"))
     # both the new-batch and corpus branches filter this frame — one
     # signature aggregation, not two
-    from excel_to_database_spark.operators.caching import pin
-
     sig = pin(
         D.minhash_signatures(D.shingles(d, "doc_id", "text", 3), 16).join(
             membership, "doc"

@@ -13,6 +13,7 @@ from excel_to_database_spark.operators import dedup as D
 from excel_to_database_spark.operators import multimodal as M
 from excel_to_database_spark.operators import similarity as S
 from excel_to_database_spark.operators import text as T
+from excel_to_database_spark.operators.caching import checkpoint, pin
 from excel_to_database_spark.queries.base import query, t
 
 # ---------------------------------------------------------------------------
@@ -313,10 +314,11 @@ def q158_incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFra
         # storage, never a driver collect) before the index dir is
         # removed — the returned frame must stay evaluable after the
         # finally below deletes the parquet it was derived from
-        out = (
-            D.dedup_cluster_labels(spark, path)
-            .select(F.col("doc").cast("long"), F.col("cluster").cast("long"))
-            .localCheckpoint(eager=True)
+        out = checkpoint(
+            D.dedup_cluster_labels(spark, path).select(
+                F.col("doc").cast("long"), F.col("cluster").cast("long")
+            ),
+            eager=True,
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -1324,15 +1326,9 @@ def q98_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's tokens. Corpus frequencies are one map-side-combinable
     groupBy; the join back is on the word key."""
     d = t(spark, sf_dir, "documents")
-    # pinned tokenize pass (round-16): the token stream feeds the
-    # frequency aggregate AND the join-back probe — unpinned each
-    # branch re-scanned + re-split the text (2 documents FileScans)
-    staged = (
-        T.spread(d)
-        .select("doc_id", T.words(F.col("text")).alias("__w"))
-        .localCheckpoint(eager=True)
-    )
-    tok = staged.select("doc_id", F.explode("__w").alias("word"))
+    # the token stream feeds the frequency aggregate AND the join-back probe
+    staged = T.staged_words(d, "doc_id", "text")
+    tok = staged.select(F.col("doc").alias("doc_id"), F.explode("w").alias("word"))
     freq = tok.groupBy("word").agg(F.count(F.lit(1)).alias("corpus_freq"))
     return (
         tok.join(freq, "word")
@@ -1494,9 +1490,10 @@ def q103_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rate aggregation AND the sampling probe — unpinned each
     # branch re-scanned the text and re-tokenized (3 documents
     # FileScans, 2.0× runtime bytes; 1.0× post-pin)
-    tok = d.select(
-        "source", "doc_id", T.token_count_ws(F.col("text")).alias("toks")
-    ).localCheckpoint(eager=True)
+    tok = checkpoint(
+        d.select("source", "doc_id", T.token_count_ws(F.col("text")).alias("toks")),
+        eager=True,
+    )
     rates = T.mixture_rates(tok, "source", "toks").withColumnRenamed(
         "total_w", "total_tokens"
     )
@@ -1592,8 +1589,6 @@ def q109_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pair list feeds all three triangle legs: persist it (bounded
     # by duplicate volume) instead of re-running the shingle pipeline
     # per leg — without this the plan scans `documents` 12 times
-    from excel_to_database_spark.operators.caching import pin
-
     p = pin(
         D.jaccard_pairs(D.shingles(d, "doc_id", "text", 3), threshold=0.6)
         .select("doc_a", "doc_b")
@@ -1708,14 +1703,9 @@ def q115_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full sort) broadcast back onto the token stream; corpus
     frequencies are one map-side-combinable aggregation."""
     d = t(spark, sf_dir, "documents")
-    # pinned tokenize pass (round-16, the q98 shape): token stream
-    # feeds the vocab aggregate AND the OOV probe
-    staged = (
-        T.spread(d)
-        .select("doc_id", T.words(F.col("text")).alias("__w"))
-        .localCheckpoint(eager=True)
-    )
-    tok = staged.select("doc_id", F.explode("__w").alias("word"))
+    # the token stream feeds the vocab aggregate AND the OOV probe
+    staged = T.staged_words(d, "doc_id", "text")
+    tok = staged.select(F.col("doc").alias("doc_id"), F.explode("w").alias("word"))
     freq = tok.groupBy("word").agg(F.count(F.lit(1)).alias("cf"))
     vocab = (
         freq.orderBy(F.desc("cf"), F.asc("word"))
@@ -2210,18 +2200,9 @@ def q167_ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherits q159's value-exactness, so rank, n, and bucket are all
     oracle-exact."""
     d = t(spark, sf_dir, "documents")
-    # one tokenize-and-pin pass carries lang too (round-16): the
-    # lang join-back previously re-scanned documents for (doc_id,
-    # lang) — pruned columns, but still a second corpus pass at scale
-    base = (
-        T.spread(d)
-        .select(
-            F.col("doc_id").alias("doc"),
-            "lang",
-            T.words(F.col("text")).alias("w"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    # the tokenize-and-pin pass carries lang too: the lang join-back
+    # would otherwise be a second corpus pass
+    base = T.staged_words(d, "doc_id", "text", "lang")
     fl = T.bigram_lm_fluency_from_words(base, "doc", "w")
     scored = fl.join(base.select("doc", "lang"), "doc").select(
         "doc", "lang", "mean_prob"
@@ -2286,8 +2267,6 @@ def q168_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text for n_tokens — a second runtime corpus read the plan
     audit cannot see (measured at sf0.001: 1.5× one reference scan
     before, 1.0× after; guide §2.3)."""
-    from excel_to_database_spark.operators.caching import pin
-
     d = t(spark, sf_dir, "documents")
     base = pin(
         T.spread(d).select("doc_id", T.words(F.col("text")).alias("__w"))
@@ -2707,10 +2686,9 @@ def q175_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         # materialize BEFORE the temp/table cleanup (the q158 lesson:
         # a lazy frame must not outlive the storage it reads)
-        return (
-            spark.table(table)
-            .select("grp", "n_old", "n_new", "tv_distance", "drifted")
-            .localCheckpoint(eager=True)
+        return checkpoint(
+            spark.table(table).select("grp", "n_old", "n_new", "tv_distance", "drifted"),
+            eager=True,
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -2868,22 +2846,11 @@ def q177_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an INTEGER sum, and each correlation is pure IEEE arithmetic
     over those exact sums — all three r values oracle-exact."""
     d = t(spark, sf_dir, "documents")
-    # ONE tokenize-and-pin pass serves all three signals (round-16):
-    # fluency and novelty fan the tokenized frame out to their
-    # aggregate/probe branches and quality reads the raw text — built
-    # independently, the fixed plan-node audit counted SEVEN documents
-    # FileScans in this query's plan (2.5× runtime bytes). The shared
-    # eager checkpoint carries (doc, text, words) once; every branch
-    # re-reads blocks.
-    base = (
-        T.spread(d)
-        .select(
-            F.col("doc_id").alias("doc"),
-            "text",
-            T.words(F.col("text")).alias("w"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    # ONE tokenize-and-pin pass serves all three signals: fluency and
+    # novelty fan it out to their aggregate/probe branches and quality
+    # reads the raw text (built independently: SEVEN documents
+    # FileScans in this query's plan)
+    base = T.staged_words(d, "doc_id", "text", "text")
     fl = T.bigram_lm_fluency_from_words(base, "doc", "w")
     nv = T.bigram_novelty_from_words(base, "doc", "w").select("doc", "novelty")
     qs = base.select("doc", T.quality_score(F.col("text")).alias("q"))
@@ -2991,7 +2958,6 @@ def q178_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic in sample density, so the corpus-wide registration spent
     its time measuring what a pipeline would never run corpus-wide.
     The oracle applies the identical filter — still value-exact."""
-    from excel_to_database_spark.operators.caching import pin
     from excel_to_database_spark.operators.text import hash_bucket
 
     d = t(spark, sf_dir, "documents").filter(
@@ -3241,8 +3207,6 @@ def q181_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation from parquet — pre-pin the query paid TWO full
     # corpus scans at runtime (2 documents FileScans in the fixed
     # plan-node audit, 2.0× runtime bytes; 1.0× post-pin)
-    from excel_to_database_spark.operators.caching import pin
-
     counts = pin(
         d.groupBy("source").agg(
             F.sum(T.token_count_ws(F.col("text"))).cast("bigint").alias("avail_tokens"),
@@ -3841,7 +3805,7 @@ def _image_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tasks duplicate the compute — eager is the right variant here, the
     CC edge-list argument)."""
     d = t(spark, sf_dir, "documents").filter(F.length("text") >= 1)
-    base = d.select("doc_id", "text").localCheckpoint(eager=True)
+    base = checkpoint(d.select("doc_id", "text"), eager=True)
     return base.unionByName(_image_replicas(base))
 
 
@@ -4345,10 +4309,8 @@ def q204_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         # materialize BEFORE the temp/table cleanup (the q158 lesson)
-        return (
-            spark.table(table)
-            .select("doc_new", "n_corpus_dups")
-            .localCheckpoint(eager=True)
+        return checkpoint(
+            spark.table(table).select("doc_new", "n_corpus_dups"), eager=True
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -4765,13 +4727,16 @@ def _video_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≥1100-char repeat inflation (3 documents FileScans in q212's
     plan, 2.0× runtime bytes; 1.0× post-pin)."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    base = d.select(
-        "doc_id",
-        F.expr(
-            "repeat(text, CAST((1100 + length(text) - 1) div length(text)"
-            " AS INT))"
-        ).alias("text"),
-    ).localCheckpoint(eager=True)
+    base = checkpoint(
+        d.select(
+            "doc_id",
+            F.expr(
+                "repeat(text, CAST((1100 + length(text) - 1) div length(text)"
+                " AS INT))"
+            ).alias("text"),
+        ),
+        eager=True,
+    )
     re_enc = base.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 10000000).alias("doc_id"),
         F.expr(
@@ -4907,10 +4872,10 @@ def q213_pipeline_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     tradeoff (same as selection.group_rank): blocks are non-reliable
     (executor loss fails the job instead of recomputing — acceptable
     for a pinned frame that is cheap to rebuild by re-running the
-    query) and are freed when the plan handle is GC'd, not by
-    evict_caches. The oracle replays the identical chain as one DuckDB
-    CTE pipeline, computing the totals inline — identical keep
-    decisions because every boundary is integer-exact."""
+    query) and are freed by evict_caches after the action. The oracle
+    replays the identical chain as one DuckDB CTE pipeline, computing
+    the totals inline — identical keep decisions because every
+    boundary is integer-exact."""
     from excel_to_database_spark.operators import web as W
 
     d = t(spark, sf_dir, "documents")
@@ -4960,7 +4925,7 @@ def q213_pipeline_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the totals read: the one corpus scan happens HERE, and both the
     # bounded collect below and the returned plan read the pinned
     # frame — never the parquet again (round-14 verdict #1)
-    gated = gated.localCheckpoint(eager=True)
+    gated = checkpoint(gated, eager=True)
     # bounded |sources|-row driver read -> literal rate fold (the
     # selection-descent discipline: counts, never data rows)
     counts = {
@@ -5215,10 +5180,9 @@ def q217_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round-15 advisor finding: unpinned, each branch rebuilt the
     # documents⋈embeddings join from the parquet — the q213 defect
     # class). One scan of each table, both towers read the blocks.
-    cand = (
-        d.join(e, d["doc_id"] == e["vec_id"])
-        .select("doc_id", "text", "embedding")
-        .localCheckpoint(eager=True)
+    cand = checkpoint(
+        d.join(e, d["doc_id"] == e["vec_id"]).select("doc_id", "text", "embedding"),
+        eager=True,
     )
 
     def dfold(arr):

@@ -3014,19 +3014,6 @@ def test_winsorized_collect_rides_checkpoint_q135(spark, sf_dir):
     )
 
 
-def test_hybrid_overlap_env_equivalence_q217(spark, sf_dir, monkeypatch):
-    """The q217 tower overlap (operators/concurrency.overlap_builds,
-    guide §2.6) is a SCHEDULING change only: the overlapped (default)
-    and sequential (SPARK_GRAFT_OVERLAP=0) constructions must return
-    identical top-10 rows in identical order."""
-    from excel_to_database_spark.queries import QUERIES
-
-    on = [tuple(r) for r in QUERIES["q217_hybrid_rrf_search"](spark, sf_dir).collect()]
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "0")
-    off = [tuple(r) for r in QUERIES["q217_hybrid_rrf_search"](spark, sf_dir).collect()]
-    assert on == off and len(on) == 10
-
-
 def test_embedding_robust_stats_reference_many_vectors_few_dims(spark):
     """The skew shape the round-15 migration exists for (few dims x
     many vectors — every dim holds ALL N rows, the per-dim window

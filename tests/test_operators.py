@@ -298,12 +298,11 @@ def test_rollup_incremental_refresh(spark, sf_dir):
     assert a == b
 
 
-def test_overlap_builds_order_fallback_and_errors(spark, monkeypatch):
+def test_overlap_builds_order_fallback_and_errors(spark):
     """operators/concurrency.overlap_builds (guide §2.6): results come
-    back in argument order, the SPARK_GRAFT_OVERLAP=0 switch falls
-    back to sequential execution with identical results, and a failing
-    thunk propagates loudly instead of vanishing — in both modes after
-    every thunk ran, as the first failure in argument order."""
+    back in argument order, a single thunk runs inline, and a failing
+    thunk propagates loudly instead of vanishing — after every thunk
+    ran, as the first failure in argument order."""
     import pytest
 
     from excel_to_database_spark.operators.concurrency import overlap_builds
@@ -314,14 +313,12 @@ def test_overlap_builds_order_fallback_and_errors(spark, monkeypatch):
 
         return thunk
 
-    for overlap in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_OVERLAP", overlap)
-        assert overlap_builds(lambda: 1) == [1]
-        assert overlap_builds(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
-        ran = []
-        with pytest.raises(ValueError, match="first failed"):
-            overlap_builds(lambda: 1, boom("first failed"), boom("second failed"), lambda: ran.append(4))
-        assert ran == [4]
+    assert overlap_builds(lambda: 1) == [1]
+    assert overlap_builds(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+    ran = []
+    with pytest.raises(ValueError, match="first failed"):
+        overlap_builds(lambda: 1, boom("first failed"), boom("second failed"), lambda: ran.append(4))
+    assert ran == [4]
 
 
 def test_overlap_builds_jobs_carry_the_callers_group(spark):

@@ -200,16 +200,14 @@ def test_multi_sheet_upload_keeps_payload_order(spark):
         assert sorted((r["k"], r["v"]) for r in rows) == [(str(r), n) for r in range(i + 1)]
 
 
-@pytest.mark.parametrize("overlap", ["1", "0"])
-def test_multi_sheet_upload_reports_first_failure_and_loads_the_rest(spark, monkeypatch, overlap):
-    """Every sheet of a request is attempted, concurrently or (with
-    SPARK_GRAFT_OVERLAP=0) one after another: the middle sheet reorders
-    an existing table's columns under strict mode and fails, its error
-    is the response, and the first and last sheets are loaded."""
+def test_multi_sheet_upload_reports_first_failure_and_loads_the_rest(spark):
+    """Every sheet of a request is attempted concurrently: the middle
+    sheet reorders an existing table's columns under strict mode and
+    fails, its error is the response, and the first and last sheets
+    are loaded."""
     from excel_to_database_spark.api import upload
 
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", overlap)
-    path = f"strictmulti{overlap}"
+    path = "strictmulti"
     dest = LocalDestination(strict=True)
     dest.sync(matrix_to_df(spark, [["a", "b"], ["1", "2"]]), "mid", path)
     payload = {
