@@ -28,6 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark import SparkContext
+from pyspark.sql import SparkSession
 from pyspark.util import inheritable_thread_target
 
 
@@ -43,8 +44,9 @@ def overlap_builds(*thunks: Callable[[], Any]) -> list:
     the consumer's plan).
 
     Each pooled thunk runs under the caller's Spark local properties
-    (``inheritable_thread_target``, one copy per thunk), so its jobs
-    carry the caller's job group and description.
+    and job tags (``inheritable_thread_target`` given the active
+    session, one copy per thunk), so its jobs carry the caller's job
+    group, description and tags.
 
     Results are unchanged by construction: each thunk builds exactly
     what it would have built sequentially; only the wall-clock
@@ -62,8 +64,17 @@ def overlap_builds(*thunks: Callable[[], Any]) -> list:
         outcomes = [settle(th) for th in thunks]
     else:
         workers = min(len(thunks), SparkContext._active_spark_context.defaultParallelism)
+        session = SparkSession.active()
+
+        def inherit(th: Callable[[], Any]) -> Callable[[], Any]:
+            # a fresh copy per thunk: a thread that sets its own job
+            # group must not change its siblings'. The session form
+            # returns the session itself when pinned-thread mode is off.
+            wrap = inheritable_thread_target(session)
+            return th if wrap is session else wrap(th)
+
         with ThreadPoolExecutor(max_workers=workers) as pool:
-            futures = [pool.submit(settle, inheritable_thread_target(th)) for th in thunks]
+            futures = [pool.submit(settle, inherit(th)) for th in thunks]
             outcomes = [f.result() for f in futures]
     for _, err in outcomes:
         if err is not None:

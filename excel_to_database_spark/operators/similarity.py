@@ -4,16 +4,24 @@ Two paths (driver north star: 'brute-force cosine top-k as the
 baseline; an LSH-bucketed variant as the scale path'):
 
   * ``cosine_topk`` — exact brute force. The *oracle-exact* variant
-    routes dot products through position-explode + decimal sums so
-    DuckDB reproduces every double bit-for-bit; the *fast* variant
-    (``exact=False``) is a single-pass JVM ``zip_with``/``aggregate``
-    reduction (no explode, no extra shuffle) for production use.
+    (``exact=True``) sums per-element products as decimal(30,12), so
+    DuckDB's ``SUM(decimal)`` reproduces every double bit-for-bit; the
+    *fast* variant (``exact=False``) is a double ``zip_with``/
+    ``aggregate`` reduction for production use.
   * ``ann_hyperplane_lsh`` — banded random-hyperplane LSH:
     deterministic ±1 hyperplanes derived from md5 parity (no RNG
     state), ``bands`` independent sign-pattern buckets per vector
     (OR-amplification — candidates share ANY band's bucket), search
     only within colliding buckets. Recall is tested against brute
     force in tests/test_llm_ops.py.
+
+Every dot-product and squared-norm fold of this module (and of q217)
+comes from one kernel: ``dot``, ``sq_norm`` and ``cosine``. Its NULL
+contract: a cosine is NULL when either norm is 0 (``try_divide``, where
+``/`` raises ANSI DIVIDE_BY_ZERO); top-k operators drop NULL-cosine
+pairs, so a zero-norm query has no neighbours and a zero-norm vector is
+nobody's neighbour; a nearest-cell pick ranks NULLs last, then takes
+the lowest cell.
 
 At 100 TB the brute-force path is |Q|·|D| work — it exists as the
 correctness baseline and for small |Q|; the LSH path turns the scan
@@ -23,12 +31,106 @@ into a bucket-equi-join, which is the shape that survives scale-up.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from excel_to_database_spark.operators.caching import checkpoint, pin, pinned, unpin
 from pyspark.sql.window import Window
+
+_DEC = "decimal(30,12)"
+_FOLDS: dict = {}
+_FOLDS_LOCK = threading.Lock()
+
+
+def _memo(key: tuple, build):
+    """Fold expressions over named columns are plain unresolved ASTs,
+    reusable across DataFrames; building the decimal lambda trees costs
+    py4j round trips (~0.5 s per index build), so each is built once
+    per live SparkContext (a JVM restart invalidates py4j handles; the
+    strong ref in the value keeps ``id(sc)`` stable). Folds over Column
+    arguments are built fresh."""
+    if not all(isinstance(c, (str, bool)) for c in key):
+        return build()
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    with _FOLDS_LOCK:
+        got = _FOLDS.get((id(sc), *key))
+        if got is None:
+            for stale in [k for k in _FOLDS if k[0] != id(sc)]:
+                del _FOLDS[stale]
+            got = _FOLDS[(id(sc), *key)] = (sc, build())
+    return got[1]
+
+
+def _sum_products(arr, exact: bool):
+    # decimal(30,12) addition is exact and order-independent, so the
+    # sequential aggregate equals the SQL oracle's SUM(decimal)
+    # bit-for-bit. The lambda re-casts after each add because decimal +
+    # widens precision and the accumulator type must stay fixed; the
+    # cast is lossless (18 integer digits headroom).
+    if not exact:
+        return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+    return F.aggregate(
+        arr, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC)
+    ).cast("double")
+
+
+def _product(a, b, exact: bool):
+    p = a.cast("double") * b.cast("double")
+    return p.cast(_DEC) if exact else p
+
+
+def dot(a, b, exact: bool):
+    """Σ a[i]·b[i] over two array columns (names or Columns) as a double:
+    decimal-exact (``exact=True``, the oracle discipline) or a plain
+    double fold."""
+    return _memo(
+        ("dot", a, b, exact),
+        lambda: _sum_products(F.zip_with(a, b, lambda x, y: _product(x, y, exact)), exact),
+    )
+
+
+def sq_norm(a, exact: bool):
+    """Σ a[i]² over an array column, folded as ``dot``."""
+    return _memo(
+        ("sq_norm", a, exact),
+        lambda: _sum_products(F.transform(a, lambda x: _product(x, x, exact)), exact),
+    )
+
+
+def cosine(dot_col, n2_a, n2_b):
+    """``dot / (√n2_a · √n2_b)`` from a ``dot`` and two ``sq_norm``
+    values (Columns or column names): NULL when either norm is 0."""
+    return F.try_divide(dot_col, F.sqrt(n2_a) * F.sqrt(n2_b))
+
+
+def _cell_cosine(exact: bool):
+    """Cosine of a vector ``v`` and a centroid ``cv``."""
+    return cosine(dot("v", "cv", exact), sq_norm("v", exact), sq_norm("cv", exact))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(qid, nid, cosine) → each query's ``k`` best neighbours by
+    (cosine desc, nid) as (query_id, neighbor_id, cosine, rank).
+    NULL-cosine pairs rank nowhere: they sort last, so dropping them
+    after the window leaves the same ranks — and a filter above the
+    window is not pushed into the pair join, where it would fold every
+    pair's cosine a second time."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter((F.col("rank") <= k) & F.col("cosine").isNotNull())
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col("nid").alias("neighbor_id"),
+            "cosine",
+            "rank",
+        )
+    )
+
 
 def cosine_topk(
     emb: DataFrame,
@@ -45,31 +147,7 @@ def cosine_topk(
     # expressions, so the values are bit-identical), never per pair —
     # per-pair work is exactly one dot fold.
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-
-    def dfold(arr):
-        # decimal(30,12) addition is exact and order-independent, so the
-        # sequential aggregate equals the SQL oracle's SUM(decimal)
-        # bit-for-bit. The lambda re-casts after each add because
-        # decimal + widens precision and the accumulator type must stay
-        # fixed; the cast is lossless (18 integer digits headroom).
-        return F.aggregate(
-            arr,
-            F.lit(0).cast("decimal(30,12)"),
-            lambda acc, x: (acc + x).cast("decimal(30,12)"),
-        ).cast("double")
-
-    def ffold(arr):
-        return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-    if exact:
-        n2 = dfold(
-            F.transform(
-                "v", lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)")
-            )
-        )
-    else:
-        n2 = ffold(F.transform("v", lambda a: a.cast("double") * a.cast("double")))
-
+    n2 = sq_norm("v", exact)
     q = base.filter(query_filter) if query_filter is not None else base
     q = q.select(F.col("id").alias("qid"), F.col("v").alias("qv"), n2.alias("qn2"))
     d = base.select(F.col("id").alias("nid"), F.col("v").alias("nv"), n2.alias("nn2"))
@@ -77,35 +155,10 @@ def cosine_topk(
     # partition, which would serialize the dot-product fold below
     d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
     pairs = F.broadcast(q).crossJoin(d).filter(F.col("qid") != F.col("nid"))
-
-    if exact:
-        dot = dfold(
-            F.zip_with(
-                "qv",
-                "nv",
-                lambda a, b: (a.cast("double") * b.cast("double")).cast("decimal(30,12)"),
-            )
-        )
-    else:
-        # single-pass JVM reduction — the production path
-        dot = ffold(
-            F.zip_with("qv", "nv", lambda a, b: a.cast("double") * b.cast("double"))
-        )
     scored = pairs.select(
-        "qid", "nid", (dot / (F.sqrt("qn2") * F.sqrt("nn2"))).alias("cosine")
+        "qid", "nid", cosine(dot("qv", "nv", exact), "qn2", "nn2").alias("cosine")
     )
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def cosine_pairs(
@@ -170,20 +223,7 @@ def cosine_pairs(
     import pandas as _pd
 
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-
-    def dfold(arr):
-        return F.aggregate(
-            arr,
-            F.lit(0).cast("decimal(30,12)"),
-            lambda acc, x: (acc + x).cast("decimal(30,12)"),
-        ).cast("double")
-
-    exact_n2 = dfold(
-        F.transform(
-            "v", lambda x: (x.cast("double") * x.cast("double")).cast("decimal(30,12)")
-        )
-    )
-    base = pin(base.withColumn("n2", exact_n2))
+    base = pin(base.withColumn("n2", sq_norm("v", True)))
 
     # replicate each vector to every block pair it participates in:
     # as the LEFT side of (b, j≥b) and the RIGHT side of (i≤b, b)
@@ -248,19 +288,13 @@ def cosine_pairs(
     nside = base.select(
         F.col("id").alias("nid"), F.col("v").alias("nv"), F.col("n2").alias("nn2")
     )
-    dot = dfold(
-        F.zip_with(
-            "qv", "nv",
-            lambda x, y: (x.cast("double") * y.cast("double")).cast("decimal(30,12)"),
-        )
-    )
     return (
         cand.join(qside, "qid")
         .join(nside, "nid")
         .select(
             F.col("qid").alias("vec_a"),
             F.col("nid").alias("vec_b"),
-            (dot / (F.sqrt("qn2") * F.sqrt("nn2"))).alias("cosine"),
+            cosine(dot("qv", "nv", True), "qn2", "nn2").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -348,107 +382,24 @@ def semantic_dedup_blocked(
     disables the split."""
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     base, n_lists, _P = _spread_cpu_dense(base, n_lists)
-
-    def dfold(arr):
-        return F.aggregate(
-            arr,
-            F.lit(0).cast("decimal(30,12)"),
-            lambda acc, x: (acc + x).cast("decimal(30,12)"),
-        ).cast("double")
-
-    n2 = dfold(
-        F.transform(
-            "v", lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)")
-        )
-    )
-    base = base.withColumn("n2", n2)
+    base = base.withColumn("n2", sq_norm("v", True))
     cents = (
         base.orderBy(F.asc("id"))
         .limit(n_lists)
-        .select(
-            F.col("id").alias("cell"), F.col("v").alias("cv"), F.col("n2").alias("cn2")
-        )
+        .select(F.col("id").alias("cell"), F.col("v").alias("cv"))
     )
-    # Assignment sieve: the naive N × n_lists decimal-fold crossJoin is
-    # the step that turns √N-scaled cell counts into an O(N^1.5·dim)
-    # INTERPRETED cost (measured 168s at 20k×142 cells). Instead, one
-    # Arrow-batched numpy matmul scores every vector against the
-    # broadcast centroid matrix in float64, and only vectors whose
-    # top-2 centroids are within a safety margin (float error +
-    # decimal(30,12) quantization ≪ 1e-6) pay the decimal-exact
-    # rescore on that tiny candidate set — the same sieve-then-rescore
-    # discipline as the pair scoring, so assignment stays bit-identical
-    # to the oracle's full decimal argmax.
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql.functions import pandas_udf
-
-    cents_rows = (
-        base.orderBy(F.asc("id")).limit(n_lists).select("id", "v").collect()
-    )  # n_lists rows — driver-small by construction
+    cents_rows = cents.collect()  # n_lists rows — driver-small by construction
     id_t = dict(emb.dtypes)[id_col]
     if not cents_rows:  # empty corpus: no cells, no pairs
         return emb.sparkSession.createDataFrame(
             [],
             f"cell {id_t}, vec_a {id_t}, vec_b {id_t}, cosine double",
         )
-    _C = _np.stack([list(r["v"]) for r in cents_rows]).astype(_np.float64)
-    _cids = [r["id"] for r in cents_rows]
-    _cn = _np.sqrt((_C * _C).sum(axis=1))
-
-    def _near_cells_fn(vs):
-        if len(vs) == 0:
-            return _pd.Series([], dtype=object)
-        V = _np.stack(vs.to_numpy()).astype(_np.float64)
-        vn = _np.sqrt((V * V).sum(axis=1))
-        ids = _np.array(_cids)
-        with _np.errstate(divide="ignore", invalid="ignore"):
-            sims = (V @ _C.T) / _np.outer(vn, _cn)
-        out = []
-        for s in sims:
-            finite = _np.isfinite(s)
-            if not finite.any():
-                # zero-norm vector (or all-zero centroids): the sieve
-                # cannot rank — hand ALL cells to the decimal multi
-                # path, whose nulls-last tie-break matches the oracle
-                out.append(list(ids))
-            else:
-                b = s[finite].max()
-                out.append(list(ids[finite & (s >= b - 1e-6)]))
-        return _pd.Series(out)
-
-    _near_cells = pandas_udf(_near_cells_fn, f"array<{id_t}>")
-    with_cand = base.withColumn("cands", _near_cells("v"))
-    single = with_cand.filter(F.size("cands") == 1).select(
-        "id", "v", "n2", F.col("cands")[0].alias("cell")
-    )
-    dot_c = dfold(
-        F.zip_with(
-            "v", "cv",
-            lambda a, b: (a.cast("double") * b.cast("double")).cast("decimal(30,12)"),
-        )
-    )
-    multi_scored = (
-        with_cand.filter(F.size("cands") > 1)
-        .select("id", "v", "n2", F.explode("cands").alias("cell"))
-        .join(F.broadcast(cents), "cell")
-        .select(
-            "id", "v", "n2", "cell",
-            # try_divide: a zero-norm vector (or centroid) gets a NULL
-            # sim instead of an ANSI DIVIDE_BY_ZERO — the nulls-last
-            # window pick then assigns it to the lowest candidate cell
-            F.try_divide(dot_c, F.sqrt("n2") * F.sqrt("cn2")).alias("sim"),
-        )
-    )
-    pick = Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("cell"))
-    multi = (
-        multi_scored.withColumn("rn", F.row_number().over(pick))
-        .filter(F.col("rn") == 1)
-        .select("id", "v", "n2", "cell")
-    )
-    # three consumers (sieve, both verify join sides) — compute the
-    # assignment once
-    assign = pin(single.unionByName(multi))
+    # the naive N × n_lists decimal-fold crossJoin turned √N-scaled
+    # cell counts into an O(N^1.5·dim) interpreted cost (measured 168s
+    # at 20k×142 cells); the numpy sieve rescores only near-ties. Three
+    # consumers (sieve, both verify join sides) — compute it once.
+    assign = pin(_sieved_nearest_cell(base, cents, cents_rows))
     # hot-cell sub-split (see docstring): probe is one aggregate over
     # the pinned assignment; when no cell exceeds the cap — every
     # testdata scale — assign passes through with sub ≡ 0
@@ -503,7 +454,6 @@ def semantic_dedup_blocked(
         n = _np.concatenate(out_n) if out_n else _np.array([], dtype=ids.dtype)
         return _pd.DataFrame({"cell": cell, "qid": q, "nid": n})
 
-    id_t = dict(emb.dtypes)[id_col]
     # pre-partition by the group keys at full width: groupBy reuses the
     # compatible user partitioning, and the CPU-bound Gram stage keeps
     # one task per core instead of AQE's byte-coalesced handful
@@ -520,18 +470,12 @@ def semantic_dedup_blocked(
     # interpreted decimal folds across cores (AQE would coalesce the
     # post-join stage to a couple of tasks on byte size alone)
     pairs = cand.join(qside, "qid").join(nside, "nid").repartition(_P)
-    dot = dfold(
-        F.zip_with(
-            "qv", "nv",
-            lambda x, y: (x.cast("double") * y.cast("double")).cast("decimal(30,12)"),
-        )
-    )
     return (
         pairs.select(
             "cell",
             F.col("qid").alias("vec_a"),
             F.col("nid").alias("vec_b"),
-            (dot / (F.sqrt("qn2") * F.sqrt("nn2"))).alias("cosine"),
+            cosine(dot("qv", "nv", True), "qn2", "nn2").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -655,139 +599,19 @@ def ann_hyperplane_lsh(
         # a pair colliding in several bands must be scored once
         .dropDuplicates(["qid", "nid"])
     )
-    if exact:
-        dot = _dec_fold(
-            F.zip_with(
-                "qv", "nv",
-                lambda a, b: (a.cast("double") * b.cast("double")).cast("decimal(30,12)"),
-            )
-        )
-        nq = _dec_fold(
-            F.transform(
-                "qv", lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)")
-            )
-        )
-        nd = _dec_fold(
-            F.transform(
-                "nv", lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)")
-            )
-        )
-    else:
-        dot = F.aggregate(
-            F.zip_with("qv", "nv", lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        nq = F.aggregate(
-            F.transform("qv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        nd = F.aggregate(
-            F.transform("nv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    scored = pairs.select("qid", "nid", (dot / (F.sqrt(nq) * F.sqrt(nd))).alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
+    scored = pairs.select(
+        "qid",
+        "nid",
+        cosine(
+            dot("qv", "nv", exact), sq_norm("qv", exact), sq_norm("nv", exact)
+        ).alias("cosine"),
     )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the coarse-quantizer scale path
 # ---------------------------------------------------------------------------
-
-
-def _dec_fold(arr):
-    """Decimal(30,12) fold → double: exact, order-independent addition
-    so DuckDB's SUM(decimal) reproduces the value bit-for-bit (same
-    discipline as cosine_topk's exact path)."""
-    return F.aggregate(
-        arr,
-        F.lit(0).cast("decimal(30,12)"),
-        lambda acc, x: (acc + x).cast("decimal(30,12)"),
-    ).cast("double")
-
-
-_VC_EXPRS: dict = {}
-
-
-def _vc_cos_exprs(exact: bool):
-    """Cached (dot, |v|², |cv|²) expression trio over the fixed column
-    names ("v", "cv"). An unresolved Column is a plain AST node —
-    reusable across DataFrames — and building the decimal variant's
-    deep lambda trees costs ~0.5s of py4j round trips, a fixed plan-
-    construction tax the small-corpus index build paid on every call.
-    Keyed by the live SparkContext (a JVM restart invalidates py4j
-    handles; a strong ref in the value keeps id() stable)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    key = (id(sc), exact)
-    got = _VC_EXPRS.get(key)
-    if got is not None:
-        return got[1]
-    if exact:
-        trio = (
-            _dec_fold(
-                F.zip_with(
-                    "v",
-                    "cv",
-                    lambda a, b: (
-                        a.cast("double") * b.cast("double")
-                    ).cast("decimal(30,12)"),
-                )
-            ),
-            _dec_fold(
-                F.transform(
-                    "v",
-                    lambda a: (
-                        a.cast("double") * a.cast("double")
-                    ).cast("decimal(30,12)"),
-                )
-            ),
-            _dec_fold(
-                F.transform(
-                    "cv",
-                    lambda a: (
-                        a.cast("double") * a.cast("double")
-                    ).cast("decimal(30,12)"),
-                )
-            ),
-        )
-    else:
-        trio = (
-            F.aggregate(
-                F.zip_with(
-                    "v", "cv", lambda a, b: a.cast("double") * b.cast("double")
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            F.aggregate(
-                F.transform("v", lambda a: a.cast("double") * a.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            F.aggregate(
-                F.transform("cv", lambda a: a.cast("double") * a.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    for k in [k for k in _VC_EXPRS if k[0] != id(sc)]:
-        del _VC_EXPRS[k]  # drop handles of dead contexts
-    _VC_EXPRS[key] = (sc, trio)
-    return trio
 
 
 def _write_driver_parquet(path: str, table) -> None:
@@ -826,8 +650,9 @@ def _append_driver_parquet(path: str, table) -> None:
 def _sieved_nearest_cell(
     base: DataFrame, cents: DataFrame, cents_rows=None
 ) -> DataFrame:
-    """Decimal-EXACT nearest-centroid assignment via the q125 sieve
-    discipline: one Arrow-batched numpy pass scores every vector
+    """Decimal-EXACT nearest-centroid assignment of every ``base`` row
+    (``id``, ``v`` and any further columns, carried through) via the
+    q125 sieve discipline: one Arrow-batched numpy pass scores every vector
     against the driver-collected centroid matrix in float64 and keeps
     only centroids within a safety margin of the top (float error +
     decimal(30,12) quantization ≪ 1e-6 — the margin cannot drop the
@@ -836,9 +661,8 @@ def _sieved_nearest_cell(
     value the SQL oracle reproduces. Replaces the full N × n_lists
     decimal crossJoin (every row paid 3 interpreted decimal folds per
     centroid — the dominant cost of the q146 build) with bit-identical
-    output. Zero-norm vectors (undefined cosine) resolve through the
-    nulls-last decimal pick to their lowest candidate cell instead of
-    raising ANSI DIVIDE_BY_ZERO.
+    output. Zero-norm vectors (NULL cosine) resolve through the
+    nulls-last decimal pick to their lowest candidate cell.
 
     ``cents_rows``: optional pre-collected [(cell, cv), ...] — the
     index build already holds the centroid rows on the driver (they
@@ -851,10 +675,9 @@ def _sieved_nearest_cell(
     if cents_rows is None:
         cents_rows = cents.select("cell", "cv").collect()  # n_lists rows
     cell_t = cents.schema["cell"].dataType.simpleString()
+    cols = base.columns
     if not cents_rows:
-        return base.select(
-            "id", "v", F.lit(None).cast(cell_t).alias("cell")
-        ).limit(0)
+        return base.select(*cols, F.lit(None).cast(cell_t).alias("cell")).limit(0)
     _C = _np.stack([list(r["cv"]) for r in cents_rows]).astype(_np.float64)
     _cids = [r["cell"] for r in cents_rows]
     _cn = _np.sqrt((_C * _C).sum(axis=1))
@@ -880,23 +703,23 @@ def _sieved_nearest_cell(
     near = pandas_udf(_near_fn, f"array<{cell_t}>")
     with_cand = base.withColumn("cands", near("v"))
     single = with_cand.filter(F.size("cands") == 1).select(
-        "id", "v", F.col("cands")[0].alias("cell")
+        *cols, F.col("cands")[0].alias("cell")
     )
-    dot, nv, nc = _vc_cos_exprs(exact=True)
     multi_scored = (
         with_cand.filter(F.size("cands") > 1)
-        .select("id", "v", F.explode("cands").alias("cell"))
+        .select(*cols, F.explode("cands").alias("cell"))
         .join(F.broadcast(cents.select("cell", "cv")), "cell")
         .select(
-            "id", "v", "cell",
-            F.try_divide(dot, F.sqrt(nv) * F.sqrt(nc)).alias("sim"),
+            *cols,
+            "cell",
+            _cell_cosine(True).alias("sim"),
         )
     )
     pick = Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("cell"))
     multi = (
         multi_scored.withColumn("rn", F.row_number().over(pick))
         .filter(F.col("rn") == 1)
-        .select("id", "v", "cell")
+        .select(*cols, "cell")
     )
     return single.unionByName(multi)
 
@@ -905,11 +728,12 @@ def _ivf_nearest_cell(
     base: DataFrame, cents: DataFrame, exact: bool = False, cents_rows=None
 ) -> DataFrame:
     """Assign every (id, v) row to its max-cosine centroid (ties broken
-    by lowest cell id). Centroids are broadcast; one narrow pass.
-    ``exact=True`` routes the three folds through decimal so the
-    assignment itself is oracle-reproducible (the q125 discipline) —
-    used by the persisted-index build, whose per-cell stats are
-    checked value-exact against SQL.
+    by lowest cell id, NULL cosines last). Centroids are broadcast; one
+    narrow pass. ``exact=True`` runs the numpy sieve with decimal-exact
+    rescoring of near-ties (``_sieved_nearest_cell``), so the
+    assignment itself is oracle-reproducible — used by the
+    persisted-index build, whose per-cell stats are checked value-exact
+    against SQL.
 
     The corpus side drives parallelism: a small-file parquet arrives
     as one partition, which would serialize the per-vector fold work
@@ -917,9 +741,8 @@ def _ivf_nearest_cell(
     base = base.repartition(base.sparkSession.sparkContext.defaultParallelism)
     if exact:
         return _sieved_nearest_cell(base, cents, cents_rows=cents_rows)
-    dot, nv, nc = _vc_cos_exprs(exact=False)
     scored = base.crossJoin(F.broadcast(cents)).select(
-        "id", "v", "cell", (dot / (F.sqrt(nv) * F.sqrt(nc))).alias("sim")
+        "id", "v", "cell", _cell_cosine(False).alias("sim")
     )
     pick = Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("cell"))
     return (
@@ -1016,14 +839,10 @@ def ivf_probe_index(
     pipeline runs per micro-batch against a persisted corpus index
     (streaming/ingest.stream_ann_probe) — per-batch cost is
     |batch| · n_probe/n_lists of the corpus, never corpus²."""
-    dot_c = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
     probe_rank = Window.partitionBy("qid").orderBy(F.desc("psim"), F.asc("cell"))
     probes = (
         queries.crossJoin(F.broadcast(cents))
-        .select("qid", "qv", "cell", dot_c.alias("psim"))
+        .select("qid", "qv", "cell", dot("qv", "cv", False).alias("psim"))
         .withColumn("rn", F.row_number().over(probe_rank))
         .filter(F.col("rn") <= n_probe)
         .select("qid", "qv", "cell")
@@ -1033,52 +852,15 @@ def ivf_probe_index(
         "cell",
     ).filter(F.col("qid") != F.col("nid"))
 
-    if exact_score:
-        # decimal folds → ``n_probe = n_lists`` becomes the oracle-
-        # reproducible exact degeneration (q80 discipline)
-        dot = _dec_fold(
-            F.zip_with(
-                "qv", "nv",
-                lambda a, b: (a.cast("double") * b.cast("double")).cast("decimal(30,12)"),
-            )
-        )
-        nq = _dec_fold(
-            F.transform(
-                "qv", lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)")
-            )
-        )
-        nd = _dec_fold(
-            F.transform(
-                "nv", lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)")
-            )
-        )
-    else:
-        dot = F.aggregate(
-            F.zip_with("qv", "nv", lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        nq = F.aggregate(
-            F.transform("qv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        nd = F.aggregate(
-            F.transform("nv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
+    # decimal folds under ``exact_score`` → ``n_probe = n_lists`` is
+    # the oracle-reproducible exact degeneration (q80 discipline)
+    e = exact_score
     scored = cand.select(
-        "qid", "nid", (dot / (F.sqrt(nq) * F.sqrt(nd))).alias("cosine")
+        "qid",
+        "nid",
+        cosine(dot("qv", "nv", e), sq_norm("qv", e), sq_norm("nv", e)).alias("cosine"),
     ).dropDuplicates(["qid", "nid"])
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def ivf_refine(cents: DataFrame, assigned: DataFrame) -> DataFrame:
@@ -1359,37 +1141,24 @@ def _ivf_pq_search(
     search-many and build-per-run produce identical rows by
     construction. Inputs: q (qid, qv), cents (cell, cv),
     assigned (id, v, cell), codes (nid, codes), cb (code, s, cv)."""
-    dot_c = F.aggregate(
-        F.zip_with("qv", "cv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
     probe_rank = Window.partitionBy("qid").orderBy(F.desc("psim"), F.asc("cell"))
     probes = (
         q.crossJoin(F.broadcast(cents))
-        .select("qid", "cell", dot_c.alias("psim"))
+        .select("qid", "cell", dot("qv", "cv", False).alias("psim"))
         .withColumn("rn", F.row_number().over(probe_rank))
         .filter(F.col("rn") <= n_probe)
         .select("qid", "cell")
     )
 
     sub_q = F.slice("qv", F.col("s") * w + 1, F.lit(w))
-    pdot = F.aggregate(
-        F.zip_with(sub_q, F.col("cv"), lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    pn2 = F.aggregate(
-        F.transform("cv", lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
     lut = q.crossJoin(F.broadcast(cb)).select(
-        "qid", "s", "code", pdot.alias("pdot"), pn2.alias("pn2")
+        "qid",
+        "s",
+        "code",
+        dot(sub_q, "cv", False).alias("pdot"),
+        sq_norm("cv", False).alias("pn2"),
     )
-    qn = F.sqrt(
-        F.aggregate(
-            F.transform("qv", lambda a: a.cast("double") * a.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
+    qn = F.sqrt(sq_norm("qv", False))
     qnorm = q.select("qid", qn.alias("qn"))
 
     cand = (
@@ -1411,7 +1180,8 @@ def _ivf_pq_search(
         .select(
             "qid",
             "nid",
-            (F.col("adot") / (F.col("qn") * F.sqrt("an2"))).alias("cosine"),
+            # the kernel's NULL contract: a zero-norm query scores NULL
+            F.try_divide(F.col("adot"), F.col("qn") * F.sqrt("an2")).alias("cosine"),
         )
     )
     rk = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
@@ -1422,66 +1192,24 @@ def _ivf_pq_search(
             .filter(F.col("rn") <= r)
             .select("qid", "nid")
         )
-        if exact_rerank:
-            # decimal rerank: with rerank covering every candidate and
-            # n_probe = n_lists this is the oracle-reproducible exact
-            # degeneration (q80 discipline) — qn too must re-derive
-            # through decimal or the last bits differ
-            nd = _dec_fold(
-                F.transform(
-                    "nv",
-                    lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)"),
-                )
+        # ``exact_rerank`` folds in decimal: with rerank covering every
+        # candidate and n_probe = n_lists this is the oracle-reproducible
+        # exact degeneration (q80 discipline) — the query norm too is
+        # re-folded in decimal, or the last bits differ
+        e = exact_rerank
+        scored = (
+            shortlist.join(q, "qid")
+            .join(
+                assigned.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
+                "nid",
             )
-            dot_e = _dec_fold(
-                F.zip_with(
-                    "qv", "nv",
-                    lambda a, b: (a.cast("double") * b.cast("double")).cast("decimal(30,12)"),
-                )
+            .select(
+                "qid",
+                "nid",
+                cosine(dot("qv", "nv", e), sq_norm("nv", e), sq_norm("qv", e)).alias("cosine"),
             )
-            qn_e = F.sqrt(
-                _dec_fold(
-                    F.transform(
-                        "qv",
-                        lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)"),
-                    )
-                )
-            )
-            scored = (
-                shortlist.join(q, "qid")
-                .join(
-                    assigned.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
-                    "nid",
-                )
-                .select("qid", "nid", (dot_e / (F.sqrt(nd) * qn_e)).alias("cosine"))
-            )
-        else:
-            nd = F.aggregate(
-                F.transform("nv", lambda a: a.cast("double") * a.cast("double")),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-            dot_e = F.aggregate(
-                F.zip_with("qv", "nv", lambda a, b: a.cast("double") * b.cast("double")),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-            scored = (
-                shortlist.join(q, "qid")
-                .join(
-                    assigned.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
-                    "nid",
-                )
-                .select("qid", "nid", (dot_e / (F.sqrt(nd) * qn)).alias("cosine"))
-            )
-    return (
-        scored.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("nid").alias("neighbor_id"),
-            "cosine",
-            "rank",
         )
-    )
+    return _top_k(scored, k)
 
 
 #: sieve crossover in units of N·m·k interpreted decimal subvector
@@ -1921,13 +1649,9 @@ def build_ivf_pq_index(
     # drift baseline (mean assignment distance — see ivf_pq_index_health
     # for the rebuild-resets-baseline contract). n_lists result rows —
     # driver-small by construction.
-    dot, nv, nc = _vc_cos_exprs(exact=False)
     per_cell = (
         persisted.join(F.broadcast(spark.read.parquet(f"{path}/cents")), "cell")
-        .select(
-            "cell",
-            (F.lit(1.0) - dot / (F.sqrt(nv) * F.sqrt(nc))).alias("d"),
-        )
+        .select("cell", (F.lit(1.0) - _cell_cosine(False)).alias("d"))
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
@@ -2154,10 +1878,9 @@ def _mean_assign_dist(assigned: DataFrame, cents: DataFrame) -> float:
     coarse quantizer still fits the data. One broadcast join + one
     aggregate; double folds (monitoring statistic, not an
     oracle-checked value)."""
-    dot, nv, nc = _vc_cos_exprs(exact=False)
     row = (
         assigned.join(F.broadcast(cents), "cell")
-        .select((F.lit(1.0) - dot / (F.sqrt(nv) * F.sqrt(nc))).alias("d"))
+        .select((F.lit(1.0) - _cell_cosine(False)).alias("d"))
         .agg(F.avg("d"))
         .collect()[0][0]
     )

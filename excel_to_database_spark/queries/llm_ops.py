@@ -5145,7 +5145,7 @@ def _q217_oracle() -> str:
     rl AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
            FROM lex),
     rv AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY cosine DESC, doc_id) AS vec_rank
-           FROM vec)
+           FROM vec WHERE cosine IS NOT NULL)
     SELECT doc_id, CAST(lex_rank AS BIGINT) AS lex_rank,
            CAST(vec_rank AS BIGINT) AS vec_rank,
            1.0 / (60 + lex_rank) + 1.0 / (60 + vec_rank) AS rrf_score
@@ -5180,39 +5180,27 @@ def q217_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round-15 advisor finding: unpinned, each branch rebuilt the
     # documents⋈embeddings join from the parquet — the q213 defect
     # class). One scan of each table, both towers read the blocks.
+    # each candidate's norm is folded once, into the checkpoint
     cand = checkpoint(
-        d.join(e, d["doc_id"] == e["vec_id"]).select("doc_id", "text", "embedding"),
+        d.join(e, d["doc_id"] == e["vec_id"]).select(
+            "doc_id", "text", "embedding", S.sq_norm("embedding", True).alias("n2")
+        ),
         eager=True,
     )
 
-    def dfold(arr):
-        return F.aggregate(
-            arr,
-            F.lit(0).cast("decimal(30,12)"),
-            lambda acc, x: (acc + x).cast("decimal(30,12)"),
-        ).cast("double")
-
-    qv = e.filter(F.col("vec_id") == 7).select(F.col("embedding").alias("q"))
-    sq = lambda c: dfold(  # noqa: E731
-        F.transform(c, lambda a: (a.cast("double") * a.cast("double")).cast("decimal(30,12)"))
+    qv = e.filter(F.col("vec_id") == 7).select(
+        F.col("embedding").alias("q"), S.sq_norm("embedding", True).alias("qn2")
     )
+    # a zero norm makes the cosine NULL, which must not take a vector
+    # rank: drop those sides before the cross join (a filter on the
+    # cosine itself is pushed into the join condition and folds every
+    # candidate's cosine twice)
     vec = (
-        cand.select("doc_id", "embedding")
-        .crossJoin(F.broadcast(qv))
+        cand.filter(F.col("n2") > 0)
+        .crossJoin(F.broadcast(qv.filter(F.col("qn2") > 0)))
         .select(
             "doc_id",
-            (
-                dfold(
-                    F.zip_with(
-                        "embedding",
-                        "q",
-                        lambda a, b: (a.cast("double") * b.cast("double")).cast(
-                            "decimal(30,12)"
-                        ),
-                    )
-                )
-                / (F.sqrt(sq("embedding")) * F.sqrt(sq("q")))
-            ).alias("cosine"),
+            S.cosine(S.dot("embedding", "q", True), "n2", "qn2").alias("cosine"),
         )
     )
     # the two tower BUILDS are independent (both read only the pinned

@@ -921,12 +921,21 @@ def test_semantic_dedup_auto_n_lists(spark):
 
 
 def test_semantic_dedup_zero_norm_and_empty(spark):
-    """Degenerate inputs must not crash or silently drop rows: a
-    zero-norm vector (NaN cosine against every centroid) is still
-    assigned — to its lowest candidate cell via the nulls-last decimal
-    pick — and an empty corpus returns an empty frame with the pair
-    schema instead of raising on np.stack."""
+    """One NULL contract for a zero-norm vector across the vector
+    operators: its cosine is NULL, so nothing raises ANSI
+    DIVIDE_BY_ZERO, it appears in no output row, and the top-k
+    operators return the other rows exactly as a corpus without it
+    does. semantic_dedup_blocked still assigns it (lowest candidate
+    cell, nulls-last pick) and an empty corpus returns an empty frame
+    with the pair schema instead of raising on np.stack. The zero
+    vector has the highest id, so it seeds no centroid or codeword."""
+    import math
+
     rows = [(i, [1.0, 0.5, 0.25, float(i) * 1e-6]) for i in range(12)]
+    rows += [
+        (i, [math.sin(i), math.cos(2 * i), -math.sin(3 * i), 0.5 * math.cos(i)])
+        for i in range(20, 28)
+    ]
     rows.append((99, [0.0, 0.0, 0.0, 0.0]))  # zero-norm vector
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     pairs = S.semantic_dedup_blocked(
@@ -941,6 +950,157 @@ def test_semantic_dedup_zero_norm_and_empty(spark):
     )
     assert empty.count() == 0
     assert set(empty.columns) == {"cell", "vec_a", "vec_b", "cosine"}
+
+    args = ("vec_id", "embedding")
+    same_without_zero = {
+        "cosine_topk exact": lambda e: S.cosine_topk(e, *args, k=3, exact=True),
+        "cosine_topk fast": lambda e: S.cosine_topk(e, *args, k=3, exact=False),
+        "lsh planes=0 exact": lambda e: S.ann_hyperplane_lsh(
+            e, *args, k=3, planes=0, dim=4, exact=True
+        ),
+        "lsh planes=2": lambda e: S.ann_hyperplane_lsh(e, *args, k=3, planes=2, dim=4),
+        "ivf exact_score": lambda e: S.ann_ivf(
+            e, *args, k=3, n_lists=3, n_probe=2, exact_score=True
+        ),
+        "ivf fast": lambda e: S.ann_ivf(e, *args, k=3, n_lists=3, n_probe=2),
+    }
+    without = df.filter("vec_id != 99")
+    for name, op in same_without_zero.items():
+        got = sorted(map(tuple, op(df).collect()))
+        assert got == sorted(map(tuple, op(without).collect())), name
+        assert got and all(99 not in r[:2] for r in got), name
+    pq = S.ann_ivf_pq(
+        df, *args, k=3, n_lists=3, n_probe=3, m=2, pq_k=4, rerank=5, dim=4
+    ).collect()
+    assert pq and all(99 not in (r["query_id"], r["neighbor_id"]) for r in pq)
+
+
+def test_cosine_kernel_matches_duckdb_decimal_sum(spark):
+    """The kernel's exact fold is DuckDB's
+    CAST(SUM(CAST(a*b AS DECIMAL(30,12))) AS DOUBLE) bit for bit, over
+    vectors with negative components spanning four decades (|x| ≤ 10:
+    every product keeps its 12th decimal within double precision). The
+    double fold agrees to 1e-12 relative, up to the exact side's
+    rounding of each product to 12 decimals."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+
+    dim = 8
+    rng = random.Random(7)
+    rows = [
+        (
+            i,
+            [rng.uniform(-1, 1) * 10 ** rng.randint(-3, 1) for _ in range(dim)],
+            [rng.uniform(-1, 1) * 10 ** rng.randint(-3, 1) for _ in range(dim)],
+        )
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
+    got = {
+        r["id"]: r[1:]
+        for r in df.select(
+            "id",
+            S.dot("a", "b", True),
+            S.sq_norm("a", True),
+            S.dot("a", "b", False),
+            S.sq_norm("a", False),
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "t",
+        pa.table({"id": [r[0] for r in rows], "a": [r[1] for r in rows], "b": [r[2] for r in rows]}),
+    )
+    want = {
+        r[0]: r[1:]
+        for r in con.execute(
+            f"""
+            SELECT id,
+                   CAST(SUM(CAST(CAST(a[i] AS DOUBLE) * CAST(b[i] AS DOUBLE)
+                                 AS DECIMAL(30,12))) AS DOUBLE),
+                   CAST(SUM(CAST(CAST(a[i] AS DOUBLE) * CAST(a[i] AS DOUBLE)
+                                 AS DECIMAL(30,12))) AS DOUBLE)
+            FROM t, range(1, {dim + 1}) AS g(i) GROUP BY id
+            """
+        ).fetchall()
+    }
+    assert set(got) == set(want)
+    for i, (dot_e, n2_e, dot_f, n2_f) in got.items():
+        assert (dot_e, n2_e) == want[i]
+        for fast, exact in ((dot_f, dot_e), (n2_f, n2_e)):
+            assert abs(fast - exact) <= 1e-12 * abs(exact) + dim * 0.5e-12
+
+
+def test_only_the_cosine_kernel_folds_products():
+    """Every dot-product and squared-norm fold comes from the kernel in
+    operators/similarity.py: no other function builds an ``aggregate``
+    over a ``zip_with``/``transform`` whose lambda multiplies two
+    ``.cast("double")`` operands, and no function nests a helper that
+    calls ``aggregate``. Squared-difference folds fold another element
+    function and are listed with their reason."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(S.__file__).resolve().parent.parent
+    kernel = {("operators/similarity.py", f) for f in ("_sum_products", "dot", "sq_norm")}
+    allow = {
+        ("operators/similarity.py", "ivf_sse"): "k-means objective: squared L2 distance",
+        ("operators/similarity.py", "quantize_embeddings"): "squared quantization error",
+        ("operators/similarity.py", "product_quantize"): "squared L2 subvector distance",
+        ("operators/similarity.py", "jl_distortion_pairs"): "bigint squared differences",
+    }
+
+    def is_call(node, *names):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, (ast.Attribute, ast.Name))
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) in names
+        )
+
+    def casts_double(node):
+        return any(
+            is_call(n, "cast") and any(
+                isinstance(a, ast.Constant) and a.value == "double" for a in n.args
+            )
+            for n in ast.walk(node)
+        )
+
+    def product_fold(call):
+        if not (is_call(call, "aggregate") and call.args and is_call(call.args[0], "zip_with", "transform")):
+            return False
+        return any(
+            isinstance(n, ast.BinOp) and isinstance(n.op, ast.Mult)
+            and casts_double(n.left) and casts_double(n.right)
+            for n in ast.walk(call.args[0])
+        )
+
+    def nested_helpers(fn):
+        for n in ast.walk(fn):
+            if n is fn:
+                continue
+            body = n.value if isinstance(n, ast.Assign) and isinstance(n.value, ast.Lambda) else n
+            if isinstance(body, (ast.FunctionDef, ast.Lambda)) and any(
+                is_call(c, "aggregate") for c in ast.walk(body)
+            ):
+                yield n
+
+    offenders, used = [], set()
+    for path in sorted((pkg / "operators").glob("*.py")) + sorted((pkg / "queries").glob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(), rel)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or (rel, fn.name) in kernel:
+                continue
+            hits = [n.lineno for n in ast.walk(fn) if product_fold(n)]
+            hits += [n.lineno for n in nested_helpers(fn)]
+            if hits and (rel, fn.name) in allow:
+                used.add((rel, fn.name))
+            elif hits:
+                offenders += [f"{rel}:{line} in {fn.name}" for line in sorted(set(hits))]
+    assert offenders == []
+    assert used == set(allow)  # no stale allowlist entry
 
 
 def test_ivf_pq_index_health_no_history(spark, tmp_path):

@@ -323,17 +323,29 @@ def test_overlap_builds_order_fallback_and_errors(spark):
 
 def test_overlap_builds_jobs_carry_the_callers_group(spark):
     """Jobs issued inside overlap_builds' worker threads carry the
-    caller's job group, so a per-query or per-sync group sees them."""
+    caller's job group and job tags, so a per-query or per-sync group
+    sees them, and PySpark does not warn that tags were dropped."""
+    import warnings
+
     from excel_to_database_spark.operators.concurrency import overlap_builds
+
+    def run(n):
+        return lambda: (spark.range(n).count(), spark.getTags())
 
     sc = spark.sparkContext
     sc.setJobGroup("overlap_group", "overlap test")
+    spark.addTag("overlap_tag")
     try:
-        counts = overlap_builds(lambda: spark.range(10).count(), lambda: spark.range(20).count())
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            outcomes = overlap_builds(run(10), run(20))
     finally:
+        spark.removeTag("overlap_tag")
         sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert counts == [10, 20]
+    assert [n for n, _ in outcomes] == [10, 20]
+    assert all("overlap_tag" in tags for _, tags in outcomes)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
     assert len(sc.statusTracker().getJobIdsForGroup("overlap_group")) >= 2
 
 
