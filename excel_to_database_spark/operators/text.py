@@ -2096,53 +2096,44 @@ def bm25_scores(
     (convention 7), and the per-doc score the FIXED-ORDER sum of the
     per-term doubles (identical expression tree in SQL, so bit-equal).
 
-    Scale shape: ONE corpus scan — the :func:`staged_words` frame
-    (doc, dl, w) feeds three consumers (the tf explode, the N/L
-    aggregate, and the (doc, dl) join side). The pin costs one linear
-    materialization of ≈corpus-sized blocks to executor-local
-    storage, no shuffle; term tf is filtered to the ≤|terms| literal
-    set BEFORE any shuffle (the explode output for non-query terms
-    never leaves the map side), df/N/L ride two 1-row broadcast
-    frames. Returns (id, dl, tf_<term>..., score)."""
+    Scale shape: ONE corpus scan and no shuffle of tokens. Each
+    document's terms are counted inside its own row —
+    ``size(filter(w, x -> x = t))``, the oracle's
+    ``len(list_filter(w, x -> x = t))`` — so the pinned frame is one
+    narrow row per document (doc, dl, tf_<term>...): one linear
+    materialization, no explode, no (doc, term) group-by, no join
+    back to the documents. N, L and every df_t come from ONE 1-row
+    aggregate over that frame (map-side partials, then a single-row
+    merge), cross-joined as a broadcast. Returns
+    (id, dl, tf_<term>..., score)."""
     if not terms:
         raise ValueError("terms must name at least one query term")
     if len(set(terms)) != len(terms):
         raise ValueError(f"duplicate query terms: {terms!r}")
-    base = staged_words(
-        df, id_col, text_col, token_count_ws(F.col(text_col)).cast("bigint").alias("dl")
+
+    def equals(term):
+        # one-argument lambda: F.filter passes (x, index) to two
+        return lambda x: x == F.lit(term)
+
+    counts = checkpoint(
+        spread(df)
+        .select(F.col(id_col).alias("doc"), words(F.col(text_col)).alias("w"))
+        .select(
+            "doc",
+            F.size("w").cast("bigint").alias("dl"),
+            *[F.size(F.filter("w", equals(t))).cast("bigint").alias(f"tf_{t}") for t in terms],
+        ),
+        eager=True,
     )
-    tf_raw = (
-        base.select("doc", F.explode("w").alias("w"))
-        .filter(F.col("w").isin(list(terms)))
-        .groupBy("doc", "w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    # the group key stays out of the term namespace: a pivot column is
-    # named by its term, and "doc" is a term a query may ask for
-    tf = tf_raw.groupBy(F.col("doc").alias("__doc")).pivot("w", list(terms)).sum("tf")
-    tf = tf.select(
-        F.col("__doc").alias("doc"), *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"tf_{t}") for t in terms]
-    )
-    # conditional counts, not a pivot: a global agg over an EMPTY
-    # (doc, term) frame still returns one all-zero row, so a query
-    # whose terms match nothing scores every document exactly 0.0
-    # instead of producing an empty result
-    df_row = tf_raw.agg(
-        *[
-            F.count(F.when(F.col("w") == t, 1)).cast("bigint").alias(f"df_{t}")
-            for t in terms
-        ]
-    )
-    nl = base.agg(
+    # a global agg over an EMPTY frame still returns one row (counts
+    # 0), so a query whose terms match nothing scores every document
+    # exactly 0.0 instead of producing an empty result
+    stats = counts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("total_tokens"),
+        *[F.count(F.when(F.col(f"tf_{t}") > 0, 1)).cast("bigint").alias(f"df_{t}") for t in terms],
     )
-    scored = (
-        base.select("doc", "dl")
-        .join(tf, "doc", "left")
-        .crossJoin(F.broadcast(df_row))
-        .crossJoin(F.broadcast(nl))
-    )
+    scored = counts.crossJoin(F.broadcast(stats))
     dec = "decimal(38,0)"
 
     def term_score(t):

@@ -28,6 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.io_util import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -71,19 +73,23 @@ def query(name: str, oracle: str | None = None):
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Plain parquet scan → Catalyst gets full
-    pushdown/pruning; never cached, never collected.
+    pushdown/pruning; never cached, never collected. The file is opened
+    through :func:`~excel_to_database_spark.operators.io_util.read_parquet`:
+    its schema is inferred by a Spark job on the first open only, and a
+    later open of the unchanged file under the same parquet confs reads
+    with that schema, so a warm query runs no inference job.
 
-    ``events.ts`` is written as TIMESTAMP(NANOS), which Spark refuses by
-    default: read nanos as long and truncate to microsecond timestamps —
+    ``events.ts`` may be written as TIMESTAMP(NANOS), which Spark refuses
+    by default: read nanos as long and truncate to microsecond timestamps —
     the same ns→µs truncation DuckDB applies, so both engines see
     identical instants."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

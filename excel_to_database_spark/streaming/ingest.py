@@ -20,6 +20,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.io_util import read_parquet
 from excel_to_database_spark.sync.sinks import Destination, LocalDestination
 
 # the canonical events schema (TESTDATA.md) — the fallback when the
@@ -38,9 +39,13 @@ def read_events_stream(
     ``ts`` to a µs-precision TIMESTAMP under the pinned-UTC session —
     the streaming twin of the batch loader ``queries/base.t``.
 
-    The file source needs a declared schema, so the footer of the
-    existing data is probed once on the driver (metadata only, no data
-    scan) and the same dtype guard as the batch path is applied:
+    The file source needs a declared schema, so the existing data's
+    schema is inferred first. Inference is a Spark job (a task reads
+    the parquet footers; no row data is scanned). A single local file
+    goes through :func:`~excel_to_database_spark.operators.io_util.read_parquet`,
+    which remembers the result, so a restart on the unchanged file
+    runs no job; a directory infers on every call. The same dtype
+    guard as the batch path is then applied:
 
       * ``timestamp``/``timestamp_ntz`` (current testdata encodes
         TIMESTAMP(MICROS), isAdjustedToUTC=false) → cast to TIMESTAMP;
@@ -62,7 +67,7 @@ def read_events_stream(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
         try:
-            schema = spark.read.parquet(path).schema  # driver footer probe
+            schema = read_parquet(spark, path).schema
         except AnalysisException:
             # path empty/missing at start-up (legal for a stream that
             # will pick files up as they land) → events contract.

@@ -375,12 +375,13 @@ def test_pipeline_fused_no_documents_rescan_q213(spark, sf_dir):
 def test_bm25_topk_is_take_ordered_q215(spark, sf_dir):
     """q215's global top-10 must compile to TakeOrderedAndProject
     (per-partition heaps + one merge), never a global sort; the only
-    joins are the tf equi-join and the two 1-row broadcast stat
-    frames (BroadcastNestedLoopJoin on a 1-row side is the intended
-    shape, same as bigram_lm_fluency's vocab frame; the Exchange
-    SinglePartition feeding the 1-row N/L and df aggregates is the
-    normal global-agg final step over map-side partials — counts, not
-    data rows — so it is NOT asserted away here)."""
+    join is the cross join with the one 1-row broadcast stat frame
+    (BroadcastNestedLoopJoin on a 1-row side is the intended shape,
+    same as bigram_lm_fluency's vocab frame; the Exchange
+    SinglePartition feeding the 1-row N/L/df aggregate is the normal
+    global-agg final step over map-side partials — counts, not data
+    rows — so it is NOT asserted away here). Term counts are taken
+    inside each document's row, so there is no tf equi-join."""
     plan = _plan(spark, sf_dir, "q215_bm25_keyword_topk")
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
