@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from excel_to_database_spark.operators.caching import checkpoint, pin, unpin
 from excel_to_database_spark.operators.text import spread, words
-from excel_to_database_spark.operators.io_util import maybe_read_parquet as _maybe_read_parquet
+from excel_to_database_spark.operators.io_util import local_frame, maybe_read_parquet as _maybe_read_parquet
 
 
 def normalized_text(text):
@@ -1316,7 +1316,8 @@ def build_lsh_text_index(
     _banded(sig, bands, rows).write.mode("overwrite").parquet(f"{path}/bands")
     spark = docs.sparkSession
     n_docs = spark.read.parquet(f"{path}/bands").select("doc").distinct().count()
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(n, num_hashes, bands, rows, n_docs)],
         "n int, num_hashes int, bands int, rows int, n_docs bigint",
     ).write.mode("overwrite").parquet(f"{path}/meta")
@@ -1337,7 +1338,8 @@ def lsh_text_index_append(
         "append"
     ).parquet(f"{path}/bands")
     n_new = new_docs.select(id_col).distinct().count()
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (
                 int(meta["n"]),
@@ -1537,9 +1539,7 @@ def dedup_cluster_update(
         merges = [(x, uf.find(x)) for x in list(uf.parent)]
         merges = [(x, c) for x, c in merges if x != c]
         if merges:
-            mdf = spark.createDataFrame(
-                merges, f"label {id_type}, canon {id_type}"
-            )
+            mdf = local_frame(spark, merges, f"label {id_type}, canon {id_type}")
             delta = mdf
             if canon is not None:
                 # canon rows pointing at a losing root are superseded
@@ -1556,9 +1556,7 @@ def dedup_cluster_update(
             # append-only: the delta scan reads existing canon files
             # while new files land beside them — nothing is replaced
             delta.write.mode("append").parquet(f"{path}/canon")
-        forest = spark.createDataFrame(
-            merges or [], f"label {id_type}, canon {id_type}"
-        )
+        forest = local_frame(spark, merges, f"label {id_type}, canon {id_type}")
         resolve = new0.join(F.broadcast(forest), "label", "left")
 
     # resolve the batch's own labels through the merged forest before

@@ -36,11 +36,11 @@ reconcile).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from excel_to_database_spark.operators.caching import checkpoint, pin, pinned
+from excel_to_database_spark.operators.io_util import local_frame
 
 _FANOUT = 4096
 
@@ -145,14 +145,13 @@ def _grouped_descend(
     survive into the SAME bucket keep sharing one cell; ranks that
     diverge continue as separate cells over disjoint ranges, so the
     broadcast-join fan-out is pruned right back by the range filter.
-    The parameter frame goes through the session's Arrow path (a
-    LocalRelation): a list-of-tuples frame is a Python RDD, which
-    costs a Python worker round trip per level. Even a LocalRelation
-    broadcast is one extra Spark job per level, so a level with ONE
-    cell — every level of a single-rank, single-group caller — filters
-    on its group and carries its parameters as literals instead (same
-    aggregation, no join). ``df`` should be pinned by the caller: the
-    descent makes ≤⌈log₄₀₉₆(range)⌉ passes over it.
+    The parameter frame is an ``io_util.local_frame`` (a
+    LocalRelation), yet even its broadcast is one extra Spark job per
+    level, so a level with ONE cell — every level of a single-rank,
+    single-group caller — filters on its group and carries its
+    parameters as literals instead (same aggregation, no join).
+    ``df`` should be pinned by the caller: the descent makes
+    ≤⌈log₄₀₉₆(range)⌉ passes over it.
 
     Buckets are 2^s wide and indexed by ARITHMETIC SHIFT, never by
     subtraction or double division (round-12 self-review): a
@@ -201,9 +200,7 @@ def _grouped_descend(
                 .select(F.lit(0).alias("__cell"), "__b", "__n")
             )
         else:
-            params = df.sparkSession.createDataFrame(
-                pd.DataFrame(prows, columns=pschema.fieldNames()), pschema
-            )
+            params = local_frame(df.sparkSession, prows, pschema)
             # shiftright takes the per-cell shift as a COLUMN here
             bexpr = F.expr(f"shiftright(CAST(`{value_col}` AS BIGINT), __s)")
             hist_df = (
@@ -360,7 +357,8 @@ def skew_report(df: DataFrame, key_col: str, label: str) -> DataFrame:
             {0: (int(meta["min_size"]), int(meta["max_size"]))},
             descending=True,
         )
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [
             (
                 label,
@@ -393,10 +391,16 @@ def global_rank(
          bounds re-execution but NOT re-planning, so an intervening
          cache eviction could silently shift rows between partitions
          after the counts were read: the round-13 advisor finding).
-         Since round 16 the checkpoint is LAZY: the count read in
-         step 3 is the first job over the RDD, so materialization
-         folds into it — one fixed job per build instead of two,
-         with the boundaries still frozen exactly once.
+         The checkpoint is LAZY (``eager=False``), but that does not
+         make the step-3 count read the first job: under AQE, which
+         ``session._DEFAULT_CONFS`` enables, ``localCheckpoint``
+         plans the frame inside the call, and planning runs the
+         range-boundary sample and the range shuffle's map stage
+         there (a probe at local[4] counted 2 jobs during the call
+         and 2 on the count). Laziness saves only the separate
+         materialization job of an eager checkpoint (3 jobs during
+         the call): the count read writes the blocks, and the
+         boundaries still freeze exactly once.
          Cluster tradeoff, chosen deliberately: localCheckpoint
          blocks are NON-RELIABLE — an executor loss fails the job
          (correctly: recomputation would re-draw the boundaries) and
@@ -419,10 +423,10 @@ def global_rank(
     which is what q205's Spearman formula requires."""
     from pyspark.sql.window import Window
 
-    # eager=False: the per-partition count read below is the first job
-    # over the checkpointed RDD, so materialization folds into it —
-    # one fixed job per build instead of two (see _group_rank_build
-    # for the full argument and the round-16 A/B numbers)
+    # eager=False: the per-partition count read below writes the
+    # checkpoint's blocks, one job fewer than an eager checkpoint; the
+    # range sample and shuffle still run inside this call under AQE
+    # (see the docstring and _group_rank_build's round-16 A/B numbers)
     ranged = checkpoint(
         df.repartitionByRange(F.col(value_col), F.col(id_col)).withColumn(
             "__pid", F.spark_partition_id()
@@ -527,7 +531,10 @@ def _group_rank_build(
          bounds re-execution, not re-planning; same non-reliable-
          blocks tradeoff as documented there: executor loss fails
          the job rather than silently re-drawing boundaries, and
-         ``evict_caches`` frees the blocks);
+         ``evict_caches`` frees the blocks). It is lazy, yet under
+         AQE the call itself runs the range sample and the range
+         shuffle's map stage (2 jobs); the step-3 read writes the
+         blocks;
       3. ONE count aggregation to the ≤(P+G)-row cell table, read on
          the driver (counts, never data rows; ``_MAX_META_ROWS``
          rejects loudly if the group key is too wide for the
@@ -568,17 +575,18 @@ def _group_rank_build(
     from pyspark.sql.window import Window
 
     vcol = F.col(value_col).desc() if value_desc else F.col(value_col).asc()
-    # eager=False (round-16 verdict #7): fold the checkpoint
-    # materialization INTO the cells-count job below — one fixed job
-    # per build instead of two. The checkpointed RDD (and its range
-    # partitioner) is created at THIS call; laziness defers only WHEN
-    # blocks materialize — the first job over them, which here is the
-    # cells read itself, so the counts describe exactly the blocks
-    # they materialized and boundaries still freeze once (the
-    # cells aggregation sits above the range shuffle, so its map
-    # stage computes — and stores — every partition). Interleaved A/B
-    # at sf0.1 (paired medians, 4 reps each): q208 4.15→3.89 s,
-    # q167 2.80→2.43 s. Same non-reliable-blocks tradeoff as before.
+    # eager=False (round-16 verdict #7): the cells-count job below
+    # writes the checkpoint's blocks, so the build runs no separate
+    # materialization job. The checkpointed RDD (and its range
+    # partitioner) is created at THIS call, and under AQE creating it
+    # plans the range exchange, which runs the boundary sample and the
+    # shuffle's map stage here (2 jobs during the call, 2 on the cells
+    # read, in a local[4] probe; an eager checkpoint ran 3 during the
+    # call). Laziness defers only WHEN blocks are written, so the counts
+    # describe exactly the blocks they materialized and boundaries
+    # still freeze once. Interleaved A/B at sf0.1 (paired medians, 4
+    # reps each): q208 4.15→3.89 s, q167 2.80→2.43 s. Same
+    # non-reliable-blocks tradeoff as before.
     ranged = checkpoint(
         df.repartitionByRange(F.col(group_col), vcol, F.col(id_col)).withColumn(
             "__pid", F.spark_partition_id()
@@ -642,7 +650,7 @@ def _group_rank_build(
             StructField("__woff", LongType()),
         ]
     )
-    off = df.sparkSession.createDataFrame(offsets, off_schema)
+    off = local_frame(df.sparkSession, offsets, off_schema)
     w = Window.partitionBy("__pid", group_col).orderBy(vcol, F.col(id_col))
     ranked = (
         ranged.withColumn("__pid", F.col("__pid").cast("long"))
@@ -865,7 +873,7 @@ def exact_group_quantiles(
             tuple([g, totals[g]] + [res[(g, int(p))][0] for p in qs])
             for g in sorted(totals)
         ]
-        cuts = df.sparkSession.createDataFrame(rows, cschema)
+        cuts = local_frame(df.sparkSession, rows, cschema)
         return (cuts, base) if return_ranked else cuts
 
 
@@ -908,7 +916,7 @@ def _exact_group_quantiles_ranked(
             StructField("__n", LongType()),
         ]
     )
-    tdf = df.sparkSession.createDataFrame(targets, tschema)
+    tdf = local_frame(df.sparkSession, targets, tschema)
     hits = ranked.join(F.broadcast(tdf), [group_col, "__rn"])
     agg = [
         F.max(F.when(F.col("__p") == p, F.col(value_col))).alias(f"p{p}")

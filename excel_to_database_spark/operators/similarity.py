@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from excel_to_database_spark.operators.caching import checkpoint, pin, pinned, unpin
+from excel_to_database_spark.operators.io_util import local_frame
 from pyspark.sql.window import Window
 
 _DEC = "decimal(30,12)"
@@ -288,15 +289,26 @@ def cosine_pairs(
     nside = base.select(
         F.col("id").alias("nid"), F.col("v").alias("nv"), F.col("n2").alias("nn2")
     )
-    return (
-        cand.join(qside, "qid")
-        .join(nside, "nid")
-        .select(
-            F.col("qid").alias("vec_a"),
-            F.col("nid").alias("vec_b"),
-            cosine(dot("qv", "nv", True), "qn2", "nn2").alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    return _verified(
+        cand.join(qside, "qid").join(nside, "nid"),
+        threshold,
+        F.col("qid").alias("vec_a"),
+        F.col("nid").alias("vec_b"),
+    )
+
+
+def _verified(pairs: DataFrame, threshold: float, *cols) -> DataFrame:
+    """``cols`` plus the exact ``cosine`` of each candidate pair's
+    (qv, qn2) and (nv, nn2), keeping pairs with cosine ≥ ``threshold``.
+    A filter on a projected cosine is pushed through the projection
+    (the alias replaced by its fold) into the pair join's condition,
+    and the projection then folds every surviving pair a second time.
+    The optimizer does not push a filter on a generator's output below
+    the generator, so the cosine comes out of a one-element
+    ``explode`` and is folded once."""
+    cos = cosine(dot("qv", "nv", True), "qn2", "nn2")
+    return pairs.select(*cols, F.explode(F.array(cos)).alias("cosine")).filter(
+        F.col("cosine") >= threshold
     )
 
 
@@ -391,7 +403,8 @@ def semantic_dedup_blocked(
     cents_rows = cents.collect()  # n_lists rows — driver-small by construction
     id_t = dict(emb.dtypes)[id_col]
     if not cents_rows:  # empty corpus: no cells, no pairs
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [],
             f"cell {id_t}, vec_a {id_t}, vec_b {id_t}, cosine double",
         )
@@ -470,14 +483,8 @@ def semantic_dedup_blocked(
     # interpreted decimal folds across cores (AQE would coalesce the
     # post-join stage to a couple of tasks on byte size alone)
     pairs = cand.join(qside, "qid").join(nside, "nid").repartition(_P)
-    return (
-        pairs.select(
-            "cell",
-            F.col("qid").alias("vec_a"),
-            F.col("nid").alias("vec_b"),
-            cosine(dot("qv", "nv", True), "qn2", "nn2").alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    return _verified(
+        pairs, threshold, "cell", F.col("qid").alias("vec_a"), F.col("nid").alias("vec_b")
     )
 
 
@@ -1562,7 +1569,8 @@ def build_ivf_pq_index(
     id_f = base.schema["id"]
     v_f = base.schema["v"]
     low = base.orderBy(F.asc("id")).limit(max(n_lists, pq_k)).collect()
-    cb = spark.createDataFrame(
+    cb = local_frame(
+        spark,
         [
             (r["id"], s, list(r["v"])[s * w:(s + 1) * w])
             for r in low[:pq_k]
@@ -1589,8 +1597,8 @@ def build_ivf_pq_index(
         cents_local = [r.asDict() for r in cents.select("cell", "cv").collect()]
     else:
         cents_local = [{"cell": r["id"], "cv": list(r["v"])} for r in low[:n_lists]]
-        cents = spark.createDataFrame(
-            [(c["cell"], c["cv"]) for c in cents_local], cents_schema
+        cents = local_frame(
+            spark, [(c["cell"], c["cv"]) for c in cents_local], cents_schema
         )
         for _ in range(sweeps):
             assigned_s = _ivf_nearest_cell(base, cents, exact=exact_assign)

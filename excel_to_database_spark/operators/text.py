@@ -13,6 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from excel_to_database_spark.operators.caching import checkpoint, pin, pinned, unpin
+from excel_to_database_spark.operators.io_util import local_frame
 
 # BPE-ish token pattern: letter runs, digit runs, single punctuation
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -929,7 +930,8 @@ def quality_rank_buckets(
     else:
         from pyspark.sql.types import LongType, StructField, StructType
 
-        tdf = scored.sparkSession.createDataFrame(
+        tdf = local_frame(
+            scored.sparkSession,
             sorted(totals.items()),
             StructType(
                 [
@@ -1926,9 +1928,7 @@ def bpe_train_merges(df, id_col: str, text_col: str, n_merges: int = 8):
     finally:
         for f in held:
             unpin(f)
-    return df.sparkSession.createDataFrame(
-        learned, "rank bigint, pair string, cnt bigint"
-    )
+    return local_frame(df.sparkSession, learned, "rank bigint, pair string, cnt bigint")
 
 
 def bpe_train_merges_local(
@@ -2007,9 +2007,7 @@ def bpe_train_merges_local(
                     i += 1
                 j += 1
             del syms[j:]
-    return df.sparkSession.createDataFrame(
-        learned, "rank bigint, pair string, cnt bigint"
-    )
+    return local_frame(df.sparkSession, learned, "rank bigint, pair string, cnt bigint")
 
 
 def interleaved_training_order(
@@ -2045,7 +2043,8 @@ def interleaved_training_order(
     )
     n_groups = len(totals)
     gfield = df.schema[group_col]
-    gidx = df.sparkSession.createDataFrame(
+    gidx = local_frame(
+        df.sparkSession,
         [(g, i + 1) for i, g in enumerate(sorted(totals))],
         StructType(
             [

@@ -14,6 +14,7 @@ from excel_to_database_spark.operators import multimodal as M
 from excel_to_database_spark.operators import similarity as S
 from excel_to_database_spark.operators import text as T
 from excel_to_database_spark.operators.caching import checkpoint, pin
+from excel_to_database_spark.operators.io_util import local_frame
 from excel_to_database_spark.queries.base import query, t
 
 # ---------------------------------------------------------------------------
@@ -1218,7 +1219,7 @@ def q96_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("__r", LongType()),
         ]
     )
-    tdf = spark.createDataFrame(tiles, tschema)
+    tdf = local_frame(spark, tiles, tschema)
     # greatest(__q, 1): the otherwise-branch divisor is only reachable
     # when q ≥ 1 (q = 0 ⇒ big = n, the when-branch covers every row),
     # but Spark may evaluate both branches — keep the dead divisor ≥ 1
@@ -5374,7 +5375,7 @@ def q219_weighted_median_length(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("__wt", LongType()),
         ]
     )
-    tdf = spark.createDataFrame(tot_rows, tschema)
+    tdf = local_frame(spark, tot_rows, tschema)
     j = cum.join(F.broadcast(tdf), "lang")
     return (
         j.filter(F.lit(2) * F.col("cw") >= F.col("__wt"))

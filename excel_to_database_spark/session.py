@@ -49,6 +49,14 @@ _DEFAULT_CONFS = {
     # spare; JVM metaspace after 5 passes read 172.1 MB at 100 and
     # 172.6 MB at 2000.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # PySpark 4.1 wraps every functions.* and Column call in
+    # _with_origin, which records the Python call site in the JVM (about
+    # 5 py4j calls each): on a 4-vCPU host F.col("a") cost 535 us and
+    # col + 1 425 us against 22 us for a bare py4j round trip, and a
+    # warm query builds hundreds of column expressions. Off, an analysis
+    # error names the failing expression but no longer the Python line
+    # that built it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -15,8 +15,9 @@ pruning and (for typed reads) filter pushdown downstream.
 
 Payload sheets (xlsx matrices, CSV payload text, the legacy ``/submit``
 TSV or flat list) arrive in one request, are rectangularized on the
-driver and handed to the JVM by ``matrix_to_df`` as one Arrow stream:
-one ``string`` array per column in a ``pyarrow.Table``. Under
+driver and handed to the JVM by ``matrix_to_df`` as one Arrow stream
+(``operators.io_util.local_frame``): one ``string`` array per column
+in a ``pyarrow.Table``. Under
 ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
 default) Spark plans it as a ``LocalTableScan``; above it, as an RDD of
 Arrow batches. Neither path starts a Python worker, so the sync's write
@@ -35,8 +36,10 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from excel_to_database_spark.naming import sanitize_columns
+from excel_to_database_spark.operators.io_util import local_frame
 from excel_to_database_spark.sources.csv_sniff import SAMPLE_LINES, sniff_delimiter
 
 #: Arrow bytes of a payload sheet per partition (and per written file).
@@ -68,7 +71,7 @@ def matrix_to_df(spark: SparkSession, matrix: list[list[str]], sanitize: bool = 
     cols = sanitize_columns(header) if sanitize else [str(h) for h in header]
     arrays = [pa.array([r[i] for r in body], pa.string()) for i in range(ncols)]
     table = pa.Table.from_arrays(arrays, names=cols)
-    df = spark.createDataFrame(table)
+    df = local_frame(spark, table, StructType([StructField(c, StringType()) for c in cols]))
     n = min(max(1, -(-table.nbytes // _PARTITION_BYTES)), spark.sparkContext.defaultParallelism)
     # the scan never runs more partitions than rows (min(rows, cores) as a
     # local relation, one per Arrow batch above the threshold), so only

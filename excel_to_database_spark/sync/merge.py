@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from excel_to_database_spark.operators.io_util import local_frame
+
 
 def _rewrite_via_temp(
     spark: SparkSession,
@@ -250,6 +252,8 @@ def schema_diff(old: DataFrame, new: DataFrame) -> DataFrame:
             rows.append((c, "added", None, n[c]))
         elif o[c] != n[c]:
             rows.append((c, "type_changed", o[c], n[c]))
-    return old.sparkSession.createDataFrame(
-        rows, "column string, change string, old_type string, new_type string"
+    return local_frame(
+        old.sparkSession,
+        rows,
+        "column string, change string, old_type string, new_type string",
     )

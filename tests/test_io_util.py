@@ -1,7 +1,11 @@
 """``io_util.read_parquet`` infers a local parquet file's schema once:
 a later open of the unchanged file under the same parquet schema confs
-runs no Spark job and plans exactly as an inferring read does."""
+runs no Spark job and plans exactly as an inferring read does.
+``io_util.local_frame`` is the only builder of driver-built frames: its
+frames are Arrow ``LocalRelation``s with the exact schema asked for."""
 
+import ast
+import pathlib
 import re
 
 import numpy as np
@@ -10,7 +14,17 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
-from excel_to_database_spark.operators.io_util import read_parquet
+from pyspark.sql.types import (
+    ArrayType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from excel_to_database_spark.operators.io_util import local_frame, read_parquet
 
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -93,3 +107,88 @@ def test_directory_path_infers_every_time(spark, tmp_path):
         df, jobs = _jobs(spark, f"rp_dir_{i}", lambda: read_parquet(spark, str(d)))
         assert jobs >= 1
         assert df.count() == 20
+
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "excel_to_database_spark"
+
+
+def test_only_io_util_creates_dataframes():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "operators/io_util.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == []
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+MIXED = StructType(
+    [
+        StructField("i", IntegerType()),
+        StructField("b", LongType()),
+        StructField("s", StringType()),
+        StructField("v", ArrayType(FloatType())),
+    ]
+)
+
+
+@pytest.mark.parametrize(
+    "rows, schema, dtypes",
+    [
+        ([], MIXED, [("i", "int"), ("b", "bigint"), ("s", "string"), ("v", "array<float>")]),
+        ([], "k string, n bigint", [("k", "string"), ("n", "bigint")]),
+        (
+            [(1, 2**40, "a", [1.5, -0.25]), (-7, -(2**62), "", [])],
+            MIXED,
+            [("i", "int"), ("b", "bigint"), ("s", "string"), ("v", "array<float>")],
+        ),
+        (
+            [(None, None, None, None), (3, 4, "x", [None, 2.0])],
+            MIXED,
+            [("i", "int"), ("b", "bigint"), ("s", "string"), ("v", "array<float>")],
+        ),
+        (
+            [("en", 5, 2), ("fr", 0, None)],
+            "lang string, __q bigint, __r int",
+            [("lang", "string"), ("__q", "bigint"), ("__r", "int")],
+        ),
+    ],
+    ids=["empty", "empty-ddl", "values", "nulls", "ddl"],
+)
+def test_local_frame_round_trips_exact_types_and_values(spark, rows, schema, dtypes):
+    df, jobs = _jobs(spark, "local-frame", lambda: local_frame(spark, rows, schema))
+    assert df.dtypes == dtypes
+    plan = _plan(df)
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    got, jobs_collect = _jobs(spark, "local-frame-collect", df.collect)
+    assert [tuple(r) for r in got] == [tuple(r) for r in rows]
+    assert jobs == jobs_collect == 0
+
+
+def test_local_frame_rejects_a_value_its_field_cannot_hold(spark):
+    with pytest.raises((TypeError, pa.ArrowInvalid, pa.ArrowTypeError)):
+        local_frame(spark, [("not a number",)], "n int")
+
+
+def test_q210_cuts_are_a_local_relation_collected_without_a_job(spark, sf_dir):
+    from excel_to_database_spark.operators import evict_caches
+    from excel_to_database_spark.queries import QUERIES
+
+    df = QUERIES["q210_exact_group_quantiles"](spark, sf_dir)
+    try:
+        plan = _plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan
+        rows, jobs = _jobs(spark, "q210-action", df.collect)
+        assert rows and jobs == 0
+    finally:
+        evict_caches()

@@ -1,5 +1,7 @@
-"""Session defaults that hold the engine's warm working set."""
+"""Session defaults that hold the engine's warm working set and keep
+column calls free of call-site capture."""
 
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
 
@@ -24,3 +26,11 @@ def test_codegen_cache_holds_a_working_set_above_100(spark):
     c2 = compiles()
     assert c1 - c0 >= 150  # the round really was 150+ distinct classes
     assert c2 - c1 == 0
+
+
+def test_column_calls_do_not_capture_the_call_site(spark):
+    """PySpark wraps every functions.* and Column call in _with_origin,
+    which records the Python call site in the JVM unless DataFrame
+    debugging is off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
