@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from excel_to_database_spark.operators.caching import checkpoint, pin, unpin
+from excel_to_database_spark.operators.caching import checkpoint, pin, pinned, unpin
 from excel_to_database_spark.operators.text import spread, words
 from excel_to_database_spark.operators.io_util import local_frame, maybe_read_parquet as _maybe_read_parquet
 
@@ -197,14 +197,14 @@ def _split_by_docfreq(sh: DataFrame, max_df: int):
 
 
 def _hot_heavy_docs(
-    sh: DataFrame, hot: DataFrame, threshold: float
+    sizes: DataFrame, hot: DataFrame, threshold: float
 ) -> DataFrame:
     """Docs whose hot-shingle count h reaches threshold·n (n = total
-    shingles). These are the only docs that can form a qualifying pair
-    through hot shingles ALONE: a pair scoring ≥ t needs c ≥ t·n_x
-    common shingles on each constrained side x, so if every common
-    shingle is hot then h_x ≥ c ≥ t·n_x — i.e. x is hot-heavy."""
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
+    shingles, from ``sizes``). These are the only docs that can form a
+    qualifying pair through hot shingles ALONE: a pair scoring ≥ t
+    needs c ≥ t·n_x common shingles on each constrained side x, so if
+    every common shingle is hot then h_x ≥ c ≥ t·n_x — i.e. x is
+    hot-heavy."""
     hot_counts = hot.groupBy("doc").agg(F.count(F.lit(1)).alias("h"))
     # the 1e-9 slack keeps a boundary doc (h == ceil(t·n)) classified
     # heavy under double rounding — erring inclusive costs a few extra
@@ -231,11 +231,18 @@ def _hot_common_counts(
     )
 
 
-def jaccard_pairs(
-    sh: DataFrame, threshold: float, max_df: int = 4096
-) -> DataFrame:
-    """Exact Jaccard over shingle sets via inverted index:
-    (doc_a, doc_b, jaccard) for pairs ≥ threshold.
+def _overlap_counts(
+    sh: DataFrame, threshold: float, max_df: int, a: str, b: str, ordered: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The inverted-index candidate core of :func:`jaccard_pairs` and
+    :func:`containment_pairs`: returns ``(common, sizes)`` — exact
+    common-shingle counts (a, b, c) for every doc pair sharing a
+    shingle, and per-doc shingle counts (doc, n).
+
+    ``ordered=False`` pairs each unordered pair once (a < b) for a
+    score that bounds BOTH sides (Jaccard: c ≥ t·max(n_a, n_b));
+    ``ordered=True`` keeps both orders (a != b) for a score that bounds
+    only the ``a`` side (containment of a in b: c ≥ t·n_a).
 
     The shingle self-join is CPU-bound (pair blow-up inside frequent
     shingles) while its input *bytes* are tiny, so AQE would coalesce it
@@ -254,13 +261,15 @@ def jaccard_pairs(
       * common counts come from COLD shingles only (join fan-out ≤
         max_df² per key), then |hot(a) ∩ hot(b)| is added back per
         candidate pair via a narrow join over only the candidates' hot
-        rows — so every reported score is the full exact Jaccard;
+        rows — so every reported count is the full exact overlap;
       * a pair whose common shingles are ALL hot has no cold join row.
-        Such a pair scoring ≥ t forces c ≥ t·n on both docs (jaccard ≤
-        c/max(na, nb)), hence both docs are hot-heavy (h ≥ t·n) — so
-        joining hot shingles of hot-heavy docs only recovers exactly
-        the missing candidates. Lossless for the threshold, with the
-        quadratic confined to boilerplate-dominated docs.
+        Such a pair scoring ≥ t forces c ≥ t·n on every bounded side,
+        hence each bounded side is hot-heavy (h ≥ t·n) — so joining
+        hot shingles of hot-heavy docs (against hot-heavy docs when
+        both sides are bounded, against ALL hot rows when only ``a``
+        is) recovers exactly the missing candidates. Lossless for the
+        threshold, with the quadratic confined to boilerplate-dominated
+        docs.
 
     When no shingle exceeds ``max_df`` (probed against the cached
     index) the plan is the unguarded single join, byte-for-byte."""
@@ -268,37 +277,37 @@ def jaccard_pairs(
     sh = pin(sh.repartition(n_part, "shingle"))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
     cold, hot, any_hot = _split_by_docfreq(sh, max_df)
-    a = cold.select(F.col("doc").alias("doc_a"), "shingle")
-    b = cold.select(F.col("doc").alias("doc_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    if any_hot:
-        heavy = _hot_heavy_docs(sh, hot, threshold)
-        hh = hot.join(heavy, "doc")
-        hot_pairs = (
-            hh.select(F.col("doc").alias("doc_a"), "shingle")
-            .join(hh.select(F.col("doc").alias("doc_b"), "shingle"), "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
+
+    def self_join(left: DataFrame, right: DataFrame) -> DataFrame:
+        keep = F.col(a) != F.col(b) if ordered else F.col(a) < F.col(b)
+        return (
+            left.select(F.col("doc").alias(a), "shingle")
+            .join(right.select(F.col("doc").alias(b), "shingle"), "shingle")
+            .filter(keep)
         )
+
+    common = self_join(cold, cold).groupBy(a, b).agg(F.count(F.lit(1)).alias("c"))
+    if any_hot:
+        heavy = hot.join(_hot_heavy_docs(sizes, hot, threshold), "doc")
+        hot_pairs = self_join(heavy, hot if ordered else heavy).select(a, b).distinct()
         cand = (
             common.unionByName(
                 hot_pairs.withColumn("c", F.lit(0).cast("long"))
             )
-            .groupBy("doc_a", "doc_b")
+            .groupBy(a, b)
             .agg(F.max("c").alias("c"))
         )
-        c_hot = _hot_common_counts(cand, hot, "doc_a", "doc_b")
-        common = cand.join(c_hot, ["doc_a", "doc_b"], "left").select(
-            "doc_a",
-            "doc_b",
-            (F.col("c") + F.coalesce("c_hot", F.lit(0))).alias("c"),
+        c_hot = _hot_common_counts(cand, hot, a, b)
+        common = cand.join(c_hot, [a, b], "left").select(
+            a, b, (F.col("c") + F.coalesce("c_hot", F.lit(0))).alias("c")
         )
+    return common, sizes
+
+
+def _jaccard(common: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard ≥ threshold) from common-shingle counts
+    (doc_a, doc_b, c) and per-doc shingle counts (doc, n):
+    c / (n_a + n_b − c)."""
     sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n").alias("nb"))
     return (
@@ -316,6 +325,21 @@ def jaccard_pairs(
     )
 
 
+def jaccard_pairs(
+    sh: DataFrame, threshold: float, max_df: int = 4096
+) -> DataFrame:
+    """Exact Jaccard over shingle sets via inverted index:
+    (doc_a, doc_b, jaccard) for pairs ≥ threshold. Candidates and
+    their exact common counts come from :func:`_overlap_counts`
+    (repartitioned shingle self-join with the exact hot-shingle guard
+    for shingles in more than ``max_df`` docs); Jaccard bounds both
+    docs of a pair."""
+    common, sizes = _overlap_counts(
+        sh, threshold, max_df, "doc_a", "doc_b", ordered=False
+    )
+    return _jaccard(common, sizes, threshold)
+
+
 def containment_pairs(
     sh: DataFrame, threshold: float, max_df: int = 4096
 ) -> DataFrame:
@@ -327,48 +351,17 @@ def containment_pairs(
     dominated by the long doc), so a Jaccard-threshold dedup never
     pairs them.
 
-    Same inverted-index join discipline and hot-shingle guard as
-    ``jaccard_pairs``, with one asymmetry: containment ≥ t only bounds
-    the SUB side (c ≥ t·n_sub ⇒ sub is hot-heavy; the super side is
-    unconstrained), so the hot-only candidate recovery joins hot
-    shingles of hot-heavy subs against hot shingles of ALL docs — the
-    fan-out per hot shingle is |hot-heavy subs| · df, quadratic only
-    when boilerplate-dominated docs are themselves numerous."""
-    n_part = sh.sparkSession.sparkContext.defaultParallelism
-    sh = pin(sh.repartition(n_part, "shingle"))
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    cold, hot, any_hot = _split_by_docfreq(sh, max_df)
-    a = cold.select(F.col("doc").alias("doc_sub"), "shingle")
-    b = cold.select(F.col("doc").alias("doc_super"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_sub") != F.col("doc_super"))
-        .groupBy("doc_sub", "doc_super")
-        .agg(F.count(F.lit(1)).alias("c"))
+    Same inverted-index core and hot-shingle guard as
+    ``jaccard_pairs`` (:func:`_overlap_counts`), with one asymmetry:
+    containment ≥ t only bounds the SUB side (c ≥ t·n_sub ⇒ sub is
+    hot-heavy; the super side is unconstrained), so the hot-only
+    candidate recovery joins hot shingles of hot-heavy subs against
+    hot shingles of ALL docs — the fan-out per hot shingle is
+    |hot-heavy subs| · df, quadratic only when boilerplate-dominated
+    docs are themselves numerous."""
+    common, sizes = _overlap_counts(
+        sh, threshold, max_df, "doc_sub", "doc_super", ordered=True
     )
-    if any_hot:
-        heavy = _hot_heavy_docs(sh, hot, threshold)
-        hot_pairs = (
-            hot.join(heavy, "doc")
-            .select(F.col("doc").alias("doc_sub"), "shingle")
-            .join(hot.select(F.col("doc").alias("doc_super"), "shingle"), "shingle")
-            .filter(F.col("doc_sub") != F.col("doc_super"))
-            .select("doc_sub", "doc_super")
-            .distinct()
-        )
-        cand = (
-            common.unionByName(
-                hot_pairs.withColumn("c", F.lit(0).cast("long"))
-            )
-            .groupBy("doc_sub", "doc_super")
-            .agg(F.max("c").alias("c"))
-        )
-        c_hot = _hot_common_counts(cand, hot, "doc_sub", "doc_super")
-        common = cand.join(c_hot, ["doc_sub", "doc_super"], "left").select(
-            "doc_sub",
-            "doc_super",
-            (F.col("c") + F.coalesce("c_hot", F.lit(0))).alias("c"),
-        )
     ssub = sizes.select(F.col("doc").alias("doc_sub"), F.col("n").alias("n_sub"))
     return (
         common.join(ssub, "doc_sub")
@@ -562,35 +555,27 @@ def _cold_hot_split(
     bucket members. Returns (cold_pairs, hot) where ``hot`` is None
     when no bucket exceeds the cap — in that case ``cold_pairs`` is
     byte-identical to the unguarded self-join."""
+
+    def self_join(idx: DataFrame) -> DataFrame:
+        x = idx.select(F.col("doc").alias("doc_a"), "band", "sig")
+        y = idx.select(F.col("doc").alias("doc_b"), "band", "sig")
+        return (
+            x.join(y, ["band", "sig"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+        )
+
+    any_hot = False
     if max_bucket is not None:
         bsize = banded.groupBy("band", "sig").agg(
             F.count(F.lit(1)).alias("bn")
         )
         any_hot = not bsize.filter(F.col("bn") > max_bucket).isEmpty()
-    else:
-        any_hot = False
     if not any_hot:
-        x = banded.select(F.col("doc").alias("doc_a"), "band", "sig")
-        y = banded.select(F.col("doc").alias("doc_b"), "band", "sig")
-        return (
-            x.join(y, ["band", "sig"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b"),
-            None,
-        )
+        return self_join(banded), None
     flagged = banded.join(bsize, ["band", "sig"])
-    cold = flagged.filter(F.col("bn") <= max_bucket)
     hot = flagged.filter(F.col("bn") > max_bucket).select("doc", "band", "sig")
-    cold_pairs = (
-        cold.select(F.col("doc").alias("doc_a"), "band", "sig")
-        .join(
-            cold.select(F.col("doc").alias("doc_b"), "band", "sig"),
-            ["band", "sig"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    return cold_pairs, hot
+    return self_join(flagged.filter(F.col("bn") <= max_bucket)), hot
 
 
 def _star_edges(hot: DataFrame) -> DataFrame:
@@ -659,17 +644,9 @@ def lsh_matches_between(
     doc, written once at ingest), and each new batch joins only its own
     bands against that index — cost proportional to |batch| + collision
     volume, never |corpus|². Returns (doc_new, doc_corpus) distinct
-    pairs."""
-    x = _banded(sig_new, bands, rows).select(
-        F.col("doc").alias("doc_new"), "band", "sig"
-    )
-    y = _banded(sig_corpus, bands, rows).select(
-        F.col("doc").alias("doc_corpus"), "band", "sig"
-    )
-    return (
-        x.join(y, ["band", "sig"])
-        .select("doc_new", "doc_corpus")
-        .distinct()
+    pairs: :func:`lsh_matches_against_index` over the corpus bands."""
+    return lsh_matches_against_index(
+        sig_new, _banded(sig_corpus, bands, rows), bands, rows
     )
 
 
@@ -764,20 +741,7 @@ def verify_jaccard(pairs: DataFrame, sh: DataFrame, threshold: float) -> DataFra
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard(common, sizes, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -815,16 +779,12 @@ def simhash_fingerprints(
     return sums.select("doc", fp.cast("bigint").alias("fingerprint"))
 
 
-def simhash_pairs(
-    fp: DataFrame, max_distance: int = 3, bits: int = 32
-) -> DataFrame:
-    """Pairs within Hamming distance ≤ d — via pigeonhole banding, not
-    an all-pairs scan: split the fingerprint into d+1 bit-chunks; two
-    fingerprints within distance d must agree EXACTLY on at least one
-    chunk (≤ d differing bits can dirty at most d chunks). Candidates
-    come from equi-joins on (chunk index, chunk value) — the same
-    bucket-join shape as MinHash LSH — then the exact Hamming check
-    filters. Results are identical to the quadratic scan, guaranteed."""
+def _simhash_banded(fp: DataFrame, max_distance: int, bits: int) -> DataFrame:
+    """(doc, fingerprint, band, chunk): the fingerprint split into
+    ``max_distance + 1`` pigeonhole bit-chunks of ceil(bits / bands)
+    bits, one row per chunk. Two fingerprints within Hamming distance
+    d agree EXACTLY on at least one chunk (≤ d differing bits can
+    dirty at most d chunks)."""
     n_bands = max_distance + 1
     width = -(-bits // n_bands)  # ceil
     chunks = F.array(
@@ -835,29 +795,49 @@ def simhash_pairs(
             for b in range(n_bands)
         ]
     )
-    # both self-join sides scan the banded fingerprints: persist so the
-    # fingerprint aggregation (a groupBy over every token) runs once
-    banded = pin(
-        fp.select("doc", "fingerprint", F.posexplode(chunks).alias("band", "chunk"))
+    return fp.select("doc", "fingerprint", F.posexplode(chunks).alias("band", "chunk"))
+
+
+def _hamming_join(
+    x: DataFrame, y: DataFrame, a: str, b: str, max_distance: int
+) -> DataFrame:
+    """(a, b, hamming ≤ max_distance) over two :func:`_simhash_banded`
+    frames: equi-join on (band, chunk), one row per distinct doc pair,
+    exact-distance filter. When ``x`` and ``y`` are the same frame (a
+    self-join) each unordered pair is kept once, a < b."""
+    left = x.select(
+        F.col("doc").alias(a), F.col("fingerprint").alias("fa"), "band", "chunk"
     )
-    a = banded.select(
-        F.col("doc").alias("doc_a"), F.col("fingerprint").alias("fa"), "band", "chunk"
+    right = y.select(
+        F.col("doc").alias(b), F.col("fingerprint").alias("fb"), "band", "chunk"
     )
-    b = banded.select(
-        F.col("doc").alias("doc_b"), F.col("fingerprint").alias("fb"), "band", "chunk"
-    )
+    joined = left.join(right, ["band", "chunk"])
+    if x is y:
+        joined = joined.filter(F.col(a) < F.col(b))
     return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "fa", "fb")
+        joined.select(a, b, "fa", "fb")
         .distinct()
         .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).alias("hamming"),
+            a, b, F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).alias("hamming")
         )
         .filter(F.col("hamming") <= max_distance)
     )
+
+
+def simhash_pairs(
+    fp: DataFrame, max_distance: int = 3, bits: int = 32
+) -> DataFrame:
+    """Pairs within Hamming distance ≤ d — via pigeonhole banding, not
+    an all-pairs scan: split the fingerprint into d+1 bit-chunks; two
+    fingerprints within distance d must agree EXACTLY on at least one
+    chunk (≤ d differing bits can dirty at most d chunks). Candidates
+    come from equi-joins on (chunk index, chunk value) — the same
+    bucket-join shape as MinHash LSH — then the exact Hamming check
+    filters. Results are identical to the quadratic scan, guaranteed."""
+    # both self-join sides scan the banded fingerprints: persist so the
+    # fingerprint aggregation (a groupBy over every token) runs once
+    banded = pin(_simhash_banded(fp, max_distance, bits))
+    return _hamming_join(banded, banded, "doc_a", "doc_b", max_distance)
 
 
 def simhash_matches_between(
@@ -874,36 +854,12 @@ def simhash_matches_between(
     argument, never an all-pairs scan; per-batch probe cost is
     O(|new| · bands) plus collision volume, independent of corpus
     size."""
-    n_bands = max_distance + 1
-    width = -(-bits // n_bands)  # ceil
-
-    def banded(fp: DataFrame, doc_out: str, fp_out: str) -> DataFrame:
-        chunks = F.array(
-            *[
-                F.shiftright(F.col("fingerprint"), b * width).bitwiseAND(
-                    F.lit((1 << width) - 1)
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return fp.select(
-            F.col("doc").alias(doc_out),
-            F.col("fingerprint").alias(fp_out),
-            F.posexplode(chunks).alias("band", "chunk"),
-        )
-
-    a = banded(new_fp, "doc_new", "fn")
-    b = banded(corpus_fp, "doc_corpus", "fc")
-    return (
-        a.join(b, ["band", "chunk"])
-        .select("doc_new", "doc_corpus", "fn", "fc")
-        .distinct()
-        .select(
-            "doc_new",
-            "doc_corpus",
-            F.bit_count(F.col("fn").bitwiseXOR(F.col("fc"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_distance)
+    return _hamming_join(
+        _simhash_banded(new_fp, max_distance, bits),
+        _simhash_banded(corpus_fp, max_distance, bits),
+        "doc_new",
+        "doc_corpus",
+        max_distance,
     )
 
 
@@ -1328,16 +1284,20 @@ def lsh_text_index_append(
 ) -> int:
     """Incremental maintenance: shingle + sign the new batch with the
     parameters recorded in the index meta and append its band rows —
-    |batch|-proportional, no corpus rescan. Returns docs appended."""
+    |batch|-proportional, no corpus rescan. Returns the docs appended,
+    counted as the build counts them: a doc shorter than ``n`` words
+    has no shingles, so no signature and no band rows, and is not
+    counted."""
     meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     sig = minhash_signatures(
         shingles(new_docs, id_col, text_col, int(meta["n"])),
         int(meta["num_hashes"]),
     )
-    _banded(sig, int(meta["bands"]), int(meta["rows"])).write.mode(
-        "append"
-    ).parquet(f"{path}/bands")
-    n_new = new_docs.select(id_col).distinct().count()
+    with pinned(sig) as sig:
+        _banded(sig, int(meta["bands"]), int(meta["rows"])).write.mode(
+            "append"
+        ).parquet(f"{path}/bands")
+        n_new = sig.count()  # one signature row per doc with band rows
     local_frame(
         spark,
         [

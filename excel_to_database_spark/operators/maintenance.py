@@ -1,7 +1,7 @@
 """Small-file maintenance for append-maintained parquet state.
 
 Every incremental lifecycle in the engine appends one parquet file (or
-few) per batch — IVF-PQ ``assigned``/``codes``, the text-LSH ``bands``
+few) per batch — the IVF-PQ ``corpus``, the text-LSH ``bands``
 index, the dedup-cluster ``labels`` table. At streaming cadence that is
 thousands of tiny files per day: list/open overhead starts to dominate
 probe latency long before data volume does (the classic small-files
@@ -59,7 +59,10 @@ def compact_parquet_dir(
     """Rewrite one parquet directory into ``target_files`` files.
     Returns {"files_before", "files_after", "rows"}; a directory
     already at or under the target is left untouched (no-op, zero
-    writes)."""
+    writes). A missing directory raises ``ValueError`` naming it."""
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        raise ValueError(f"nothing to compact: no table at {path}")
     before = _n_files(spark, path)
     rows = spark.read.parquet(path).count()
     if before <= target_files:
@@ -102,18 +105,10 @@ def ivf_pq_index_compact(
 ) -> dict:
     """Fold an IVF-PQ index's append-grown data back to
     ``target_files`` parquet files (the amortized-maintenance sibling
-    of ``ivf_pq_index_append``): the single ``corpus`` table on the
-    v3 layout, the separate ``assigned`` + ``codes`` tables on older
-    indexes. Probe results and ``ivf_pq_index_health`` are
-    content-unchanged."""
-    fs, hpath, jvm = _fs(spark, f"{path}/corpus")
-    if fs.exists(hpath):
-        return {
-            "corpus": compact_parquet_dir(spark, f"{path}/corpus", target_files)
-        }
+    of ``ivf_pq_index_append``): its one ``corpus`` table. Probe
+    results and ``ivf_pq_index_health`` are content-unchanged."""
     return {
-        "assigned": compact_parquet_dir(spark, f"{path}/assigned", target_files),
-        "codes": compact_parquet_dir(spark, f"{path}/codes", target_files),
+        "corpus": compact_parquet_dir(spark, f"{path}/corpus", target_files)
     }
 
 

@@ -190,8 +190,8 @@ def lint_window_funnels(df, query_name: str) -> list[str]:
 # ---------------------------------------------------------------------------
 # Multi-scan lint (round-17, verdict #7): the round-16 hidden-re-scan
 # class — ~20 queries whose plans or runtimes read a base table 2–3.5×
-# — was found by scripts/scan_audit.py AFTER its first (vacuous) regex
-# shipped a false all-clear. Wiring the corrected counter into the
+# — was found by a one-off scan-count audit AFTER its first (vacuous)
+# regex shipped a false all-clear. Wiring the corrected counter into the
 # correctness sweep makes the class un-reintroducible: a NEW query (or
 # a regression in a fixed one) that scans a base table more than once
 # fails the gate the round it appears, unless its multi-scan semantics
@@ -283,8 +283,9 @@ def count_table_scans(plan_formatted: str) -> dict[str, int]:
     """Distinct parquet-scan NODES per base table in a FORMATTED
     physical plan. Formatted plans print the scan's path on the detail
     block's ``Location:`` line, not the node-header line (the round-16
-    scan_audit fix); AQE prints cached relations under both Final and
-    Initial plan, so nodes are counted by distinct node id."""
+    fix to the first, vacuous regex); AQE prints cached relations under
+    both Final and Initial plan, so nodes are counted by distinct node
+    id."""
     import re
 
     counts: dict[str, set] = {}

@@ -1407,8 +1407,7 @@ def product_quantize(
 #   <path>/codebook  (code, s, cv)        m*pq_k rows, broadcast at search
 #   <path>/meta      (n_lists, m, pq_k, dim, w, n_vectors) 1 row
 #
-# (pre-v3 indexes with separate <path>/assigned + <path>/codes tables
-# still load/append/compact). The index survives sessions, is queryable
+# The index survives sessions, is queryable
 # as ordinary tables, and a probe's plan contains ONLY parquet scans +
 # the search joins (asserted in tests/test_plans.py: no
 # TakeOrderedAndProject training stages).
@@ -1719,22 +1718,18 @@ def load_ivf_pq_index(spark, path: str) -> IvfPqIndex:
     scans — no job runs until a probe executes (the one materialized
     read is the 1-row meta table). The v3 layout stores the corpus as
     ONE table (id, v, cell, codes); the assigned and codes views are
-    column-pruned scans of it. A pre-v3 index (separate assigned +
-    codes tables) still loads."""
+    column-pruned scans of it. A directory without that table raises
+    ``ValueError``."""
     from excel_to_database_spark.operators.io_util import maybe_read_parquet
 
-    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     corpus = maybe_read_parquet(spark, f"{path}/corpus")
-    if corpus is not None:
-        assigned = corpus.select("id", "v", "cell")
-        codes = corpus.select(F.col("id").alias("nid"), "codes")
-    else:
-        assigned = spark.read.parquet(f"{path}/assigned")
-        codes = spark.read.parquet(f"{path}/codes")
+    if corpus is None:
+        raise ValueError(f"not an IVF-PQ index: no corpus table at {path}/corpus")
+    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     return IvfPqIndex(
         cents=spark.read.parquet(f"{path}/cents"),
-        assigned=assigned,
-        codes=codes,
+        assigned=corpus.select("id", "v", "cell"),
+        codes=corpus.select(F.col("id").alias("nid"), "codes"),
         codebook=spark.read.parquet(f"{path}/codebook"),
         meta=meta,
     )
@@ -1787,12 +1782,12 @@ def ivf_pq_index_append(
     artifact: new vectors are assigned to the EXISTING centroids and
     coded against the EXISTING PQ codebooks (no retraining — the
     standard IVF ingestion contract; quantizer drift is handled by a
-    periodic rebuild, not per batch), then appended to the assigned
-    and codes tables. Probes (``ann_ivf_pq_probe`` and the streaming
+    periodic rebuild, not per batch), then appended to the corpus
+    table. Probes (``ann_ivf_pq_probe`` and the streaming
     ANN path) see the new vectors on their next index load.
 
     Per-batch cost: one broadcast join against n_lists centroids + one
-    broadcast join against the m·pq_k codebook + two parquet appends —
+    broadcast join against the m·pq_k codebook + one parquet append —
     |batch|-proportional, never corpus-proportional. Returns the
     number of vectors appended. Duplicate ids are the caller's
     contract (same as any append-only table).
@@ -1803,8 +1798,6 @@ def ivf_pq_index_append(
     ``ivf_pq_index_health`` can compare appended batches against the
     build-time baseline and recommend a retrain when the frozen
     quantizer stops fitting the data."""
-    from pyspark.errors import AnalysisException
-
     idx = load_ivf_pq_index(spark, path)
     m = int(idx.meta["m"])
     w = int(idx.meta["w"])
@@ -1828,22 +1821,10 @@ def ivf_pq_index_append(
         w,
         id_t,
     )
-    from excel_to_database_spark.operators.io_util import parquet_exists
-
-    if parquet_exists(spark, f"{path}/corpus"):
-        combined_new.write.mode("append").parquet(f"{path}/corpus")
-        n_new = spark.read.parquet(f"{path}/corpus").count() - int(
-            idx.meta["n_vectors"]
-        )
-    else:
-        # pre-v3 layout: append to the separate tables it was built with
-        assigned_new.write.mode("append").parquet(f"{path}/assigned")
-        combined_new.select(F.col("id").alias("nid"), "codes").write.mode(
-            "append"
-        ).parquet(f"{path}/codes")
-        n_new = spark.read.parquet(f"{path}/assigned").count() - int(
-            idx.meta["n_vectors"]
-        )
+    combined_new.write.mode("append").parquet(f"{path}/corpus")
+    n_new = spark.read.parquet(f"{path}/corpus").count() - int(
+        idx.meta["n_vectors"]
+    )
     batch_dist = _mean_assign_dist(assigned_new, idx.cents)
     from excel_to_database_spark.operators.io_util import maybe_read_parquet
 

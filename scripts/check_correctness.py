@@ -48,7 +48,7 @@ def main() -> int:
     # isolated warehouse (the bench.py discipline): streaming queries
     # sink through saveAsTable, and the DEFAULT warehouse dir is the
     # cwd-shared spark-warehouse/ — a concurrent process executing the
-    # same query (another sweep, scan_audit building plans) writes into
+    # same query (another sweep, a plan dump) writes into
     # the same physical table path and inflates this run's rowcounts
     # (observed: q204 read 184 rows vs the oracle's 113 while a
     # concurrent audit ran the same streaming body)

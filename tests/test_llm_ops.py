@@ -500,6 +500,31 @@ def test_lsh_text_index_lifecycle(spark, tmp_path, sf_dir):
     assert 7 in hits and 9000 in hits  # original AND appended copy found
 
 
+def test_lsh_text_index_append_counts_only_banded_docs(spark, tmp_path):
+    """A doc shorter than n words has no shingles and no band rows, so
+    append neither counts nor returns it: meta after build + append
+    equals a fresh build over the same docs."""
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "a completely different sentence about spark engines"),
+        (3, "the quick brown fox jumps over the lazy cat"),
+        (4, "two words"),
+        (5, "yet another ordinary document with enough words"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    grown = str(tmp_path / "grown")
+    D.build_lsh_text_index(docs.filter(F.col("doc_id") <= 2), "doc_id", "text", grown)
+    n = D.lsh_text_index_append(
+        spark, grown, docs.filter(F.col("doc_id") > 2), "doc_id", "text"
+    )
+    assert n == 2  # docs 3 and 5; doc 4 has no 3-word shingle
+    fresh = str(tmp_path / "fresh")
+    D.build_lsh_text_index(docs, "doc_id", "text", fresh)
+    meta = spark.read.parquet(f"{grown}/meta").collect()[0].asDict()
+    assert meta["n_docs"] == 4
+    assert meta == spark.read.parquet(f"{fresh}/meta").collect()[0].asDict()
+
+
 def test_whiten_embeddings_identity_covariance(spark):
     """PCA whitening: the whitened corpus must have (near-)identity
     covariance — diagonal ≈ 1, off-diagonal ≈ 0 — and the transform
@@ -1119,6 +1144,23 @@ def test_ivf_pq_index_health_no_history(spark, tmp_path):
     h = S.ivf_pq_index_health(spark, path)
     assert h["no_history"] and h["n_appends"] == 0
     assert not h["rebuild_recommended"]
+
+
+def test_ivf_pq_index_without_corpus_names_the_missing_table(spark, tmp_path):
+    """The index layout is one corpus table; a directory without it is
+    not an index, and opening, appending to or compacting it says
+    which table is missing."""
+    from excel_to_database_spark.operators import maintenance
+
+    path = tmp_path / "no_corpus_idx"
+    path.mkdir()
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    with pytest.raises(ValueError, match="corpus"):
+        S.load_ivf_pq_index(spark, str(path))
+    with pytest.raises(ValueError, match="corpus"):
+        S.ivf_pq_index_append(spark, str(path), emb, "vec_id", "embedding")
+    with pytest.raises(ValueError, match="corpus"):
+        maintenance.ivf_pq_index_compact(spark, str(path))
 
 
 def test_ivf_pq_index_health_drift(spark, tmp_path):
@@ -1764,6 +1806,151 @@ def test_containment_hot_shingle_guard_lossless(boiler_corpus):
     assert guarded == unguarded
     assert guarded[(31, 1)] == 1.0  # heavy sub ⊆ non-heavy super
     assert (1, 31) not in guarded  # asymmetry: 4/8 < 0.8
+
+
+def _shingle_sets(sh):
+    sets = {}
+    for r in sh.collect():
+        sets.setdefault(r["doc"], set()).add(r["shingle"])
+    return sets
+
+
+@pytest.mark.parametrize("threshold", [0.1, 0.5, 0.8])
+def test_jaccard_and_containment_hot_path_equal_python_sets(boiler_corpus, threshold):
+    """With max_df=2 every boilerplate shingle is hot, so both scores
+    run the cold join, hot-heavy recovery and hot add-back of the one
+    overlap core; each must equal a brute-force scan over the same
+    shingle sets."""
+    from collections import Counter
+
+    sh = D.shingles(boiler_corpus, "doc_id", "text", 3)
+    sets = _shingle_sets(sh)
+    doc_freq = Counter(x for s in sets.values() for x in s)
+    assert max(doc_freq.values()) > 2  # the hot path is taken
+    common = {
+        (a, b): len(sets[a] & sets[b])
+        for a in sets
+        for b in sets
+        if a != b and sets[a] & sets[b]
+    }
+    want_j = {
+        (a, b): c / (len(sets[a]) + len(sets[b]) - c)
+        for (a, b), c in common.items()
+        if a < b and c / (len(sets[a]) + len(sets[b]) - c) >= threshold
+    }
+    want_c = {
+        (a, b): c / len(sets[a])
+        for (a, b), c in common.items()
+        if c / len(sets[a]) >= threshold
+    }
+    got_j = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in D.jaccard_pairs(sh, threshold, max_df=2).collect()
+    }
+    got_c = {
+        (r["doc_sub"], r["doc_super"]): r["containment"]
+        for r in D.containment_pairs(sh, threshold, max_df=2).collect()
+    }
+    assert want_j and want_c
+    assert got_j == pytest.approx(want_j)
+    assert got_c == pytest.approx(want_c)
+
+
+def test_verify_jaccard_over_every_candidate_equals_jaccard_pairs(boiler_corpus):
+    """The LSH verify step and the inverted-index sweep share one
+    Jaccard tail: verifying every co-shingled pair gives exactly the
+    sweep's pairs and scores."""
+    sh = D.shingles(boiler_corpus, "doc_id", "text", 3)
+    sets = _shingle_sets(sh)
+    cand = boiler_corpus.sparkSession.createDataFrame(
+        [(a, b) for a in sets for b in sets if a < b and sets[a] & sets[b]],
+        "doc_a long, doc_b long",
+    )
+    for threshold in (0.3, 0.6):
+        verified = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in D.verify_jaccard(cand, sh, threshold).collect()
+        }
+        swept = {
+            (r["doc_a"], r["doc_b"]): r["jaccard"]
+            for r in D.jaccard_pairs(sh, threshold).collect()
+        }
+        assert verified and verified == swept
+
+
+def test_lsh_matches_between_equals_probe_of_band_index(spark, sf_dir):
+    """The between form is the index probe over the corpus's bands."""
+    from excel_to_database_spark.operators.caching import unpin
+
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    corpus = D.minhash_signatures(D.shingles(d, "doc_id", "text", 3), 16)
+    new = corpus.filter(F.col("doc") % 3 == 0)
+    index = D.band_index(corpus, 4, 4)
+    try:
+        probed = {
+            tuple(r) for r in D.lsh_matches_against_index(new, index, 4, 4).collect()
+        }
+    finally:
+        unpin(index)
+    between = {tuple(r) for r in D.lsh_matches_between(new, corpus, 4, 4).collect()}
+    assert between and between == probed
+
+
+@pytest.mark.parametrize("bits", [32, 64])
+def test_simhash_pair_forms_equal_bruteforce_hamming(spark, bits):
+    """Both SimHash forms share one pigeonhole banding and Hamming
+    join; each must equal a quadratic scan, with neighbours at every
+    distance up to max_distance + 1 and (at 64 bits) negative
+    fingerprints, whose top chunk comes from an arithmetic shift."""
+    import random
+
+    rng = random.Random(bits)
+    mask = (1 << bits) - 1
+
+    def signed(u):
+        return u - (1 << 64) if bits == 64 and u >> 63 else u
+
+    def flip(u, k):
+        for j in rng.sample(range(bits), k):
+            u ^= 1 << j
+        return u
+
+    base = [rng.getrandbits(bits) for _ in range(40)]
+    corpus = {i: signed(u) for i, u in enumerate(base)}
+    new = {100 + i: signed(flip(base[i % 40], i % 5)) for i in range(40)}
+    corpus.update({60 + i: signed(flip(base[i], 1 + i % 4)) for i in range(20)})
+
+    def ham(x, y):
+        return bin((x ^ y) & mask).count("1")
+
+    def frame(fps):
+        return spark.createDataFrame(list(fps.items()), "doc long, fingerprint long")
+
+    d = 3
+    want_between = sorted(
+        (a, b, ham(fa, fb))
+        for a, fa in new.items()
+        for b, fb in corpus.items()
+        if ham(fa, fb) <= d
+    )
+    got_between = sorted(
+        tuple(r)
+        for r in D.simhash_matches_between(
+            frame(new), frame(corpus), max_distance=d, bits=bits
+        ).collect()
+    )
+    want_pairs = sorted(
+        (a, b, ham(fa, fb))
+        for a, fa in corpus.items()
+        for b, fb in corpus.items()
+        if a < b and ham(fa, fb) <= d
+    )
+    got_pairs = sorted(
+        tuple(r)
+        for r in D.simhash_pairs(frame(corpus), max_distance=d, bits=bits).collect()
+    )
+    assert want_between and got_between == want_between
+    assert want_pairs and got_pairs == want_pairs
 
 
 def test_transitive_closure_dense_clique(spark):
